@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Engine core: session factory with scale-aware defaults and the table
   * registry (the Spark-native analog of the reference's subject library —
@@ -15,6 +16,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     coalesces down, so erring high is safe).
   *   - All scans are parquet via the vectorized reader; queries select
   *     narrow column sets so pushdown + pruning reach the footer.
+  *   - `file:` paths go through [[graft.io.NioLocalFileSystem]] and
+  *     streaming checkpoints through Spark's FileSystem-based checkpoint
+  *     manager. Without libhadoop, Hadoop forks `chmod` for every file
+  *     it creates and the default FileContext-based manager forks
+  *     `readlink` for every path it checks; a micro-batch writes several
+  *     small files (offset and commit logs, one state delta per
+  *     partition), so those forks dominated the streaming batch floor.
+  *     The FileSystem manager's temp-file-then-rename is still atomic on
+  *     a local filesystem (POSIX rename).
   */
 object Engine {
 
@@ -109,7 +119,8 @@ object Engine {
 
   def session(
       appName: String = "graft",
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString),
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val builder0 = SparkSession.builder()
       .master(s"local[$cores]")
@@ -130,6 +141,10 @@ object Engine {
       // locations instead.
       .config("spark.local.dir",
         new java.io.File(spillRoot, "local").getAbsolutePath)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
     val spark = extraConfs.foldLeft(builder0) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

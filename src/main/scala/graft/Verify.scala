@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,22 +11,8 @@ object Verify {
     // optional extra args: run only the named queries (local fast loop;
     // the driver always passes exactly two args = full corpus)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed-table (bucketed) writes must not land in the caller's cwd;
-      // shuffle files on the scratch root (tmpfs when available) — see
-      // Engine.scratchRoot. No default streaming checkpointLocation (it
-      // would collide across JVM runs on the persistent tmpfs).
-      .config("spark.sql.warehouse.dir",
-        new java.io.File(Engine.scratchRoot, "warehouse").getAbsolutePath)
-      .config("spark.local.dir",
-        new java.io.File(Engine.spillRoot, "local").getAbsolutePath)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-verify",
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -63,7 +63,8 @@ object SubjectOps extends QueryModule {
         val addC = cust.select($"c_custkey".as("key"), lit("R").as("side"),
           $"c_custkey".as("id"), $"c_acctbal".as("payload"), lit(1).as("action"))
         val updates = addO.unionByName(addC).unionByName(remO)
-        Replay.run(s, updates, mode = "append", cacheKey = s"updates:$dir") { st =>
+        Replay.run(s, updates, mode = "append", cacheKey = s"updates:$dir",
+            bigSink = true) { st =>
           RetractionJoin(st.as[RetractionJoin.Upd]).toDF()
         }
           .groupBy($"leftId", $"rightId", $"combined")

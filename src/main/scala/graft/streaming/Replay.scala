@@ -50,20 +50,22 @@ object Replay {
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(s"$dir/in")
     val qname = s"graft_sink_${counter.incrementAndGet()}"
-    // Large append-mode sinks ride PARQUET on the scratch root instead
-    // of the memory sink (r19, guide §5 "the driver should do almost no
-    // data work"): the memory sink collects every batch's full output to
-    // the driver — for the stream-stream joins that is the 200k-row
-    // joined frame per replay, all through one driver thread inside
-    // addBatch — while the parquet sink writes from the executors in
-    // parallel and the drained result is read back as an ordinary scan.
-    // Identical rows (append emits each row exactly once in both sinks).
-    // Opt-in per call site (`bigSink`): for small outputs the parquet
-    // task-commit overhead exceeds the collect it saves (measured
-    // q_stream_dedup 1.0→1.2 s vs q_stream_join 3.0→2.5 s), and
-    // complete/update modes need the memory sink (parquet is
-    // append-only). SPARK_GRAFT_STREAM_PARQUET_SINK=0 forces the memory
-    // sink everywhere (A/B lever).
+    // Sink rule: an append-mode replay whose output is large (tens of
+    // thousands of rows per batch) opts in with `bigSink` and drains
+    // into PARQUET on the scratch root; everything else uses the memory
+    // sink. The memory sink Java-serializes each batch's rows into task
+    // commit messages and the driver deserializes them in addBatch
+    // (q_retraction_bag: ~100k delta rows in its largest batch); the
+    // parquet sink writes from the executors and the drained result is
+    // read back as an ordinary scan. Identical rows (append emits each
+    // row exactly once in both sinks). For small outputs the per-file
+    // commit costs more than the collect it saves, and complete/update
+    // modes need the memory sink (parquet is append-only).
+    // q_retraction_bag at sf0.1 on 4 cores, median of 3 warm passes, two
+    // seeds: memory sink 1.75-1.84 s, parquet sink 1.21-1.32 s (both on
+    // Engine's non-forking local filesystem, which makes the file
+    // commits cheap enough). SPARK_GRAFT_STREAM_PARQUET_SINK=0 forces
+    // the memory sink everywhere (A/B lever).
     val parquetSink = mode == "append" && bigSink &&
       sys.env.getOrElse("SPARK_GRAFT_STREAM_PARQUET_SINK", "1") == "1"
     val sinkDir = if (parquetSink) graft.Engine.scratchDir("sinkout") else ""
@@ -90,13 +92,6 @@ object Replay {
         else writer.format("memory").queryName(qname).start()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     q.awaitTermination()
-    // Perf forensics (r19, env-guarded): per-micro-batch duration
-    // breakdown — where a replayed query's fixed floor actually goes
-    // (planning vs state commit vs sink add). Stderr only.
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(
-        s"[replay] $qname batch=${p.batchId} rows=${p.numInputRows} " +
-          p.durationMs))
     if (parquetSink)
       // explicit schema: a replay whose every batch emitted zero rows
       // leaves only _spark_metadata behind, and schema inference would
