@@ -553,8 +553,7 @@ object ScaleProbe {
         .select($"cid", $"vec_id",
           LlmSim.pqEncodeCol(zip_with($"v", $"cv", (x, y) => x - y), cbs)
             .as("codes")))
-      org.apache.spark.sql.graftbridge.SqlBridge.checkpointRdd(fcent)
-        .foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.graftbridge.SqlBridge.releaseCheckpoint(fcent)
     }
     // the COPY term, timed separately: keep-branch pass-through of the
     // untouched codes plus the re-encode — the full epoch artifact

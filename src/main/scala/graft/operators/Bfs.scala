@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.releaseCheckpoint
 
 /** Single-source (or multi-source) BFS hop distance by iterative
   * frontier expansion: round `i` joins the hop-(i-1) frontier against
@@ -17,10 +18,6 @@ import org.apache.spark.sql.functions._
   * O(frontier-adjacent edges), the textbook distributed-BFS bound.
   */
 object Bfs {
-
-  private def release(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.SqlBridge.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false))
 
   /** Hop distances over the DIRECTED edge set `edges(src, dst)` from
     * the nodes of `sources(node)`; pass both directions for an
@@ -247,7 +244,7 @@ object Bfs {
       frontier = next
       frontierCount = cnt
       hop += 1
-    } finally release(e)
+    } finally releaseCheckpoint(e)
     // distributed materialization: d = the first level bitmap holding
     // the id — all levels ride ONE broadcast (or, small, one raw
     // plan reference), probed inside one codegen range scan; no
@@ -359,7 +356,7 @@ object Bfs {
         hop += 1
       }
     }
-    release(e)
+    releaseCheckpoint(e)
     dist
   }
 }

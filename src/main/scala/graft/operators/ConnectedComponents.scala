@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SqlBridge.releaseCheckpoint
 
 /** Distributed connected components by iterative min-label propagation:
   * every node's label converges to the minimum node id reachable in its
@@ -15,14 +16,6 @@ import org.apache.spark.sql.functions._
   * (the loop and convergence check are unchanged).
   */
 object ConnectedComponents {
-
-  /** Release a superseded localCheckpoint()'d frame's cached blocks.
-    * Dataset.unpersist is a no-op for checkpoint persistence (it only
-    * clears cacheManager entries), so reach the backing RDD directly.
-    */
-  private def release(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.SqlBridge.checkpointRdd(df)
-      .foreach(_.unpersist(blocking = false))
 
   /** Label the undirected graph given as one-directional `(a, b)` pairs.
     * Returns `(id, lab)` for every node incident to at least one pair.
@@ -55,7 +48,7 @@ object ConnectedComponents {
           labels("lab").as("prev"))
         .localCheckpoint()
       converged = next.filter(col("lab") < col("prev")).isEmpty
-      release(cur)
+      releaseCheckpoint(cur)
       cur = next
       labels = next.select(col("id"), col("lab"))
       round += 1
@@ -130,7 +123,7 @@ object ConnectedComponents {
       converged = lab.as("p")
         .join(next.as("n"), col("p.u") === col("n.u"))
         .filter(col("p.m") =!= col("n.m")).isEmpty
-      release(e)
+      releaseCheckpoint(e)
       e = e2
       lab = next
       round += 1

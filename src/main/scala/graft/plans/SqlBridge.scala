@@ -46,14 +46,17 @@ object SqlBridge {
     try s.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: Exception => () }
 
-  /** The RDD backing a localCheckpoint()'d frame. Needed for explicit
-    * release in iterative fixpoints: Dataset.unpersist only clears
-    * cacheManager entries (.cache/.persist) and does NOT touch the
-    * RDD-level persistence a checkpoint pins — without this, superseded
-    * per-round frames leak storage for the session lifetime.
+  /** Release a localCheckpoint()'d frame's cached blocks. Needed in
+    * iterative fixpoints: Dataset.unpersist only clears cacheManager
+    * entries (.cache/.persist) and does NOT touch the RDD-level
+    * persistence a checkpoint pins — without this, superseded per-round
+    * frames leak storage for the session lifetime. Calls
+    * `SparkContext.unpersistRDD` (private[spark]) on the backing RDD: the
+    * same release `RDD.unpersist` makes, without its per-call "was
+    * locally checkpointed" WARN.
     */
-  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+  def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
+    }.foreach(r => r.sparkContext.unpersistRDD(r.id, blocking = false))
 }

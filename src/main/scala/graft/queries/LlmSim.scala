@@ -4558,14 +4558,13 @@ object LlmSim extends QueryModule {
       val next = overSet(cur) // materializes the new checkpoint
       // release the superseded round's blocks (the Bfs/CC loop
       // discipline — r15 sweep). Round 1 is SKIPPED deliberately:
-      // its prev is the caller's input frame, and checkpointRdd
+      // its prev is the caller's input frame, and releaseCheckpoint
       // collects the first LogicalRDD anywhere in the analyzed tree —
       // on the input that could be an UPSTREAM checkpoint the caller
       // still serves; from round 2 on, prev is this loop's own
       // checkpoint (the analyzed plan IS that LogicalRDD).
       if (r > 1)
-        org.apache.spark.sql.graftbridge.SqlBridge.checkpointRdd(prev)
-          .foreach(_.unpersist(blocking = false))
+        org.apache.spark.sql.graftbridge.SqlBridge.releaseCheckpoint(prev)
       progress = next != over
       over = next
     }
@@ -5823,10 +5822,8 @@ object LlmSim extends QueryModule {
                       .join(routed.select($"vec_id").distinct(),
                         Seq("vec_id"), "semi").count(),
                     expectedRows = () => routed.count())
-                finally
-                  org.apache.spark.sql.graftbridge.SqlBridge
-                    .checkpointRdd(routed)
-                    .foreach(_.unpersist(blocking = false))
+                finally org.apache.spark.sql.graftbridge.SqlBridge
+                  .releaseCheckpoint(routed)
               }
               chaos(batchId)
             }
@@ -6320,7 +6317,7 @@ object LlmSim extends QueryModule {
         roundBase = MaintSplitRounds)._1
       try LlmText.writeOnceTable(s, tbl, Seq("cid"), fx): Unit
       finally org.apache.spark.sql.graftbridge.SqlBridge
-        .checkpointRdd(fx).foreach(_.unpersist(blocking = false))
+        .releaseCheckpoint(fx)
     }
     s.table(tbl)
   }
@@ -6404,7 +6401,7 @@ object LlmSim extends QueryModule {
         nsGen = nsGen)._1
       try LlmText.writeOnceTable(s, tbl, Seq("cid"), fx): Unit
       finally org.apache.spark.sql.graftbridge.SqlBridge
-        .checkpointRdd(fx).foreach(_.unpersist(blocking = false))
+        .releaseCheckpoint(fx)
     }
     s.table(tbl)
   }
@@ -6773,7 +6770,7 @@ object LlmSim extends QueryModule {
         try LlmText.writeOnceTable(s, cbT, Seq("m"),
           pqCodebooksSeededOf(trainIn)): Unit
         finally org.apache.spark.sql.graftbridge.SqlBridge
-          .checkpointRdd(trainIn).foreach(_.unpersist(blocking = false))
+          .releaseCheckpoint(trainIn)
         LlmText.writeOnceTable(s, codesT, Seq("cid"), {
           // the O(corpus) re-encode: every live row, new dictionary —
           // map-only (broadcast codebooks + centroids), one pass
@@ -7511,7 +7508,7 @@ object LlmSim extends QueryModule {
       if (postEpochOf(s, dir) < b) publishPostEpoch(s, dir, b)
     } finally
       org.apache.spark.sql.graftbridge.SqlBridge
-        .checkpointRdd(delta).foreach(_.unpersist(blocking = false))
+        .releaseCheckpoint(delta)
   }
 
   private def postTableName(dir: String): String =
@@ -7654,7 +7651,7 @@ object LlmSim extends QueryModule {
         expectedRows = () => delta.count())
     finally
       org.apache.spark.sql.graftbridge.SqlBridge
-        .checkpointRdd(delta).foreach(_.unpersist(blocking = false))
+        .releaseCheckpoint(delta)
   }
 
   /** Materialize a stream wave's input files under the DETERMINISTIC

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Engine, QueryDef, QueryModule}
+import graft.functions.Fns.dsum
 import graft.streaming.Replay
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,7 +37,7 @@ object Streaming extends QueryModule {
           st.withWatermark("ts", "1 hour")
             .groupBy(window($"ts", "1 hour"), $"event_type")
             .agg(count(lit(1)).as("n"),
-              sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+              dsum($"value").cast(DoubleType).as("sum_v"))
             .select($"window.start".as("wstart"), $"window.end".as("wend"),
               $"event_type", $"n", $"sum_v")
         }
@@ -82,7 +83,7 @@ object Streaming extends QueryModule {
           st.withWatermark("ts", "1 hour")
             .groupBy(session_window($"ts", "30 minutes"), $"user_id")
             .agg(count(lit(1)).as("n_events"),
-              sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+              dsum($"value").cast(DoubleType).as("sum_v"))
             .select($"session_window.start".as("sstart"),
               $"session_window.end".as("send"), $"user_id", $"n_events", $"sum_v")
         }
@@ -315,7 +316,7 @@ object Streaming extends QueryModule {
           st.withWatermark("ts", "1 hour")
             .groupBy($"user_id", $"event_type")
             .agg(count(lit(1)).as("n"),
-              sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+              dsum($"value").cast(DoubleType).as("sum_v"))
         }
       },
       oracle = Some("""
@@ -354,7 +355,7 @@ object Streaming extends QueryModule {
         s.read.parquet(sink)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"),
-            sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+            dsum($"value").cast(DoubleType).as("sum_v"))
       },
       oracle = Some("""
         SELECT event_type, count(*) AS n,
@@ -402,7 +403,7 @@ object Streaming extends QueryModule {
         TxLog.read(s, table)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"),
-            sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+            dsum($"value").cast(DoubleType).as("sum_v"))
       },
       oracle = Some("""
         SELECT event_type, count(*) AS n,
@@ -438,7 +439,7 @@ object Streaming extends QueryModule {
         TxLog.read(s, dstTable)
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"),
-            sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+            dsum($"value").cast(DoubleType).as("sum_v"))
       },
       oracle = Some("""
         SELECT event_type, count(*) AS n,
@@ -480,7 +481,7 @@ object Streaming extends QueryModule {
           .exceptAll(log.filter($"_change" === "delete").drop("_change", "_v"))
           .groupBy($"event_type")
           .agg(count(lit(1)).as("n"),
-            sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+            dsum($"value").cast(DoubleType).as("sum_v"))
       },
       oracle = Some("""
         SELECT event_type, count(*) AS n,
@@ -649,7 +650,7 @@ object Streaming extends QueryModule {
           st.withWatermark("ts", "1 hour")
             .groupBy($"user_id", $"event_type")
             .agg(count(lit(1)).as("n"),
-              sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+              dsum($"value").cast(DoubleType).as("sum_v"))
         }
           .groupBy($"user_id", $"event_type")
           .agg(max($"n").as("n"), max($"sum_v").as("sum_v"))
@@ -690,7 +691,7 @@ object Streaming extends QueryModule {
             .option("maxFilesPerTrigger", 2).parquet(inDir)
             .groupBy($"user_id", $"event_type")
             .agg(count(lit(1)).as("n"),
-              sum($"value".cast(DecimalType(28, 10))).cast(DoubleType).as("sum_v"))
+              dsum($"value").cast(DoubleType).as("sum_v"))
             .writeStream
             .outputMode("update")
             .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Engine, QueryDef, QueryModule}
+import graft.functions.Fns.dsum
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,7 +86,7 @@ object Windows extends QueryModule {
         val moving = w.rowsBetween(-2, Window.currentRow)
         Engine.table(s, dir, "orders").select(
           $"o_custkey", $"o_orderkey",
-          sum($"o_totalprice".cast(DecimalType(28, 10))).over(running)
+          dsum($"o_totalprice").over(running)
             .cast(DoubleType).as("running_total"),
           count(lit(1)).over(running).as("running_n"),
           min($"o_totalprice").over(moving).as("moving_min"),

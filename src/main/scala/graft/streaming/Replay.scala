@@ -64,10 +64,8 @@ object Replay {
     // q_retraction_bag at sf0.1 on 4 cores, median of 3 warm passes, two
     // seeds: memory sink 1.75-1.84 s, parquet sink 1.21-1.32 s (both on
     // Engine's non-forking local filesystem, which makes the file
-    // commits cheap enough). SPARK_GRAFT_STREAM_PARQUET_SINK=0 forces
-    // the memory sink everywhere (A/B lever).
-    val parquetSink = mode == "append" && bigSink &&
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARQUET_SINK", "1") == "1"
+    // commits cheap enough).
+    val parquetSink = mode == "append" && bigSink
     val sinkDir = if (parquetSink) graft.Engine.scratchDir("sinkout") else ""
     // Stateful streaming ops create one state-store partition per shuffle
     // partition PER MICRO-BATCH; at replay scale 4 is plenty (a cluster

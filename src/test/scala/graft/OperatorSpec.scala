@@ -2366,17 +2366,40 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("connected components release superseded per-round checkpoints") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
     import spark.implicits._
+    // every WARN the run logs, through an appender on the root logger
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "graft-cc-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
     val before = spark.sparkContext.getPersistentRDDs.size
     // a chain has diameter ~n: plain propagation needs ~n rounds, so a
     // leak of one cached frame per round would be visible here
     val chain = (1 until 24).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
-    val labs = graft.operators.ConnectedComponents
-      .label(chain, "a", "b", maxRounds = 60)
+    val labs =
+      try graft.operators.ConnectedComponents
+        .label(chain, "a", "b", maxRounds = 60)
+      finally {
+        ctx.getConfiguration.getRootLogger.removeAppender("graft-cc-warns")
+        ctx.updateLoggers()
+      }
     assert(labs.select("lab").distinct().count() === 1)
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 3,
       s"checkpoint leak across rounds: before=$before after=$after")
+    val noise = warns.toArray.map(_.toString)
+      .filter(_.contains("was locally checkpointed"))
+    assert(noise.isEmpty, noise.mkString("release WARNs: ", "; ", ""))
   }
 
   test("dgate passes NULL through and still raises out-of-bound values") {
@@ -2386,10 +2409,12 @@ class OperatorSpec extends AnyFunSuite {
     val nulls = Seq[Option[Double]](None, None).toDF("x")
       .agg(Fns.dsumGate(col("x")).as("s")).collect()
     assert(nulls.head.isNullAt(0))
-    // in-bound values still flow, out-of-bound still fail loudly
-    val ok = Seq(1.5, 2.25).toDF("x")
+    // in-bound values still flow, out-of-bound still fail loudly; NaN
+    // is skipped (Spark casts it to NULL) and 1e8 sums through the
+    // kernel's Cast fallback
+    val ok = Seq(1.5, 2.25, Double.NaN, 1e8).toDF("x")
       .agg(Fns.dsumGate(col("x")).as("s")).head.getDouble(0)
-    assert(ok === 3.75)
+    assert(ok === 100000003.75)
     val boom = intercept[Exception] {
       Seq(8e9, 8e9).toDF("x").agg(Fns.dsumGate(col("x"))).collect()
     }
