@@ -26,12 +26,14 @@ import org.apache.spark.sql.functions._
   *     box-state marker, so record-vs-record comparisons can divide out
   *     environment drift (r8's five same-code runs spanned 102.6-163.2 s
   *     with nothing in the records to say which was the sick box).
-  *   - Event-log distillation: the run writes a Spark event log, and
-  *     after spark.stop() BenchStages folds it into bench_stages.json —
-  *     per-query-group task/run/GC/fetch-wait/scheduler-delay seconds —
-  *     then deletes the raw log. An inflated driver query (r8 exhibit:
-  *     q17 17.5 s driver vs 0.65 s local, same HEAD) is now attributable
-  *     from the driver's own record: the dominant column names the cause.
+  *   - Stage table: one live [[JobStats]] listener files every job
+  *     and task under the section (query, build, calibration or rolling
+  *     probe) that ran it, and before spark.stop() the run writes it to
+  *     bench_stages.json — per-group task/run/GC/fetch-wait/
+  *     scheduler-delay seconds. An inflated query (r8 exhibit: q17
+  *     17.5 s on a loaded box vs 0.65 s local, same HEAD) is
+  *     attributable from its own record: the dominant column names the
+  *     cause.
   *
   * r17 closes the remaining attribution gap (judge r16 #1 — the record
   * was still unreadable at face value when four contention bursts hit
@@ -68,8 +70,8 @@ object Bench {
     * the declared SF dir's lineitem, so its ratio is comparable between
     * records at the same SF — which is the actual use (driver sf0.1 vs
     * local sf0.1). */
-  private def calibrate(spark: SparkSession, sfDir: String,
-      tag: String): (Map[String, Double], Double) = {
+  private def calibrate(spark: SparkSession, sfDir: String, tag: String,
+      stats: JobStats): (Map[String, Double], Double) = {
     import spark.implicits._
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -83,11 +85,10 @@ object Bench {
       "io" -> (() => noop(Engine.table(spark, sfDir, "lineitem")
         .agg(sum($"l_extendedprice"), sum($"l_quantity"), count(lit(1))))))
     val measured = probes.map { case (name, f) =>
-      spark.sparkContext.setJobGroup(s"calib_$name", s"calib_$name")
-      try {
+      name -> stats.section(s"calib_$name") {
         f(); f() // discarded warmups (JIT + file listing)
-        name -> Seq.fill(5)(time(f())).sorted.apply(2)
-      } finally spark.sparkContext.clearJobGroup()
+        Seq.fill(5)(time(f())).sorted.apply(2)
+      }
     }.toMap
     val ratio = math.exp(measured.map { case (k, v) =>
       math.log(v / CalibRef(k))
@@ -129,59 +130,37 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Event log for post-hoc stage attribution (distilled + deleted at
-    // exit; SPARK_GRAFT_EVENTLOG=0 opts out).
-    val evLogOn = sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "1") == "1"
-    val evDir = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "eventlogs"))
-    if (evLogOn) evDir.mkdirs()
-    val spark: SparkSession = Engine.session("graft-bench",
-      extraConfs = if (!evLogOn) Map.empty else Map(
-        "spark.eventLog.enabled" -> "true",
-        "spark.eventLog.compress" -> "false",
-        // single-file log (named <appId>): rolling is for long-lived
-        // apps; a bench run wants one parseable artifact
-        "spark.eventLog.rolling.enabled" -> "false",
-        "spark.eventLog.dir" -> evDir.toURI.toString))
+    val spark: SparkSession = Engine.session("graft-bench")
     val appId = spark.sparkContext.applicationId
     val record0 = System.nanoTime()
     def sinceStart: Double = (System.nanoTime() - record0) / 1e9
 
-    // In-process job/task counters: the bench is sequential, so the
-    // delta around one timed run IS that run's plan size. Paired with
-    // wall time, this is the burst discriminator the r16 forensics had
-    // to reconstruct from stage tables after the fact — identical job
-    // counts + inflated wall = box contention, not a plan change.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val taskCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { jobCount.incrementAndGet(): Unit }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          { taskCount.incrementAndGet(): Unit }
-      })
-    def drainBus(): Unit =
-      org.apache.spark.sql.graftbridge.SqlBridge.waitListenerBus(spark)
+    // One listener for every count the record carries. The bench is
+    // sequential, so the delta of its totals around one timed run IS
+    // that run's plan size. Paired with wall time, this is the burst
+    // discriminator the r16 forensics had to reconstruct from stage
+    // tables after the fact — identical job counts + inflated wall =
+    // box contention, not a plan change.
+    val stats = JobStats.register(spark)
+    import stats.section
 
-    def runOnce(name: String): (Double, Long, Long) = {
-      // job-group tag: when the driver box runs with event logs, every
-      // stage in the log carries the query name — an inflation window
-      // (see PLANS.md r8) becomes attributable without re-measurement
-      drainBus()
-      val j0 = jobCount.get()
-      val k0 = taskCount.get()
-      spark.sparkContext.setJobGroup(name, name)
-      val t =
-        try time {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        } finally spark.sparkContext.clearJobGroup()
+    case class Run(t: Double, jobs: Long, tasks: Long, build: Double,
+        buildJobs: Long)
+    // `t` times the query-function call (`build`: DataFrame
+    // construction, lifecycle reads, stream drains) plus the noop-sink
+    // execution; the bus drain between the two is not timed.
+    def runOnce(name: String): Run = section(name) {
+      val j0 = stats.jobs
+      val k0 = stats.tasks
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val build = (System.nanoTime() - t0) / 1e9
+      stats.drain()
+      val buildJobs = stats.jobs - j0
+      val exec = time(df.write.format("noop").mode("overwrite").save())
       spark.catalog.clearCache() // streaming replays cache their sinks
-      drainBus()
-      (t, jobCount.get() - j0, taskCount.get() - k0)
+      stats.drain()
+      Run(build + exec, stats.jobs - j0, stats.tasks - k0, build, buildJobs)
     }
 
     // Rolling box probe: a fixed 60-ms pure-codegen kernel timed every
@@ -192,17 +171,14 @@ object Bench {
     val RollingEvery = 16
     val rolling =
       scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Double)]
-    def rollingProbe(idx: Int): Unit = {
-      spark.sparkContext.setJobGroup(s"rolling_$idx", s"rolling_$idx")
-      try {
-        def f(): Unit = spark.range(1L << 26)
-          .select(sum(hash(col("id"), lit(7))).as("s"))
-          .write.format("noop").mode("overwrite").save()
-        f() // discarded warmup (first call pays codegen/setup)
-        val t = Seq.fill(3)(time(f())).sorted.apply(1)
-        rolling += ((idx, math.rint(sinceStart * 10) / 10,
-          math.rint(t * 1e4) / 1e4))
-      } finally spark.sparkContext.clearJobGroup()
+    def rollingProbe(idx: Int): Unit = section(s"rolling_$idx") {
+      def f(): Unit = spark.range(1L << 26)
+        .select(sum(hash(col("id"), lit(7))).as("s"))
+        .write.format("noop").mode("overwrite").save()
+      f() // discarded warmup (first call pays codegen/setup)
+      val t = Seq.fill(3)(time(f())).sorted.apply(1)
+      rolling += ((idx, math.rint(sinceStart * 10) / 10,
+        math.rint(t * 1e4) / 1e4))
     }
 
     // JVM/codegen/file-listing warmup on the flagship.
@@ -215,21 +191,18 @@ object Bench {
     // queries make) and the one-time build cost stays auditable on its
     // own line instead of smeared into the first timed run.
     val builds = graft.queries.LlmSim.annArtifactBuilds(spark, sfDir)
-      .map { case (n, f) =>
-        spark.sparkContext.setJobGroup(s"build_$n", s"build_$n")
-        try n -> time(f()) finally spark.sparkContext.clearJobGroup()
-      }
+      .map { case (n, f) => n -> section(s"build_$n")(time(f())) }
     System.err.println("[bench] artifact builds: " + builds
       .map { case (n, t) => f"$n=$t%.2fs" }.mkString(" "))
 
-    val calibStart = calibrate(spark, sfDir, "start")
+    val calibStart = calibrate(spark, sfDir, "start", stats)
 
     // optional args: bench only the named queries (local fast loop; the
     // driver always runs with no args = full corpus)
     val only = args.toSet
     val headlines = SparkEntry.headlines.toSet
     case class QRes(name: String, t: Double, jobs: Long, tasks: Long,
-        tMin: Double, start: Double)
+        tMin: Double, start: Double, build: Double, buildJobs: Long)
     val toRun = SparkEntry.all
       .filter { case (name, _) => only.isEmpty || only(name) }
     val measured = toRun.zipWithIndex.map { case ((name, _), i) =>
@@ -238,19 +211,20 @@ object Bench {
       try {
         if (headlines(name)) runOnce(name) // extra warmup
         val runs = Seq.fill(3)(runOnce(name))
-        val ts = runs.map(_._1).sorted
+        val ts = runs.map(_.t).sorted
         val med = ts(1)
-        // the job/task counts OF the median-producing run (all three
-        // should match; a divergence would itself be a finding)
-        val m = runs.minBy(r => math.abs(r._1 - med))
-        QRes(name, med, m._2, m._3, ts.head, start)
+        // the job/task counts and build split OF the median-producing
+        // run (all three counts should match; a divergence would itself
+        // be a finding)
+        val m = runs.minBy(r => math.abs(r.t - med))
+        QRes(name, med, m.jobs, m.tasks, ts.head, start, m.build, m.buildJobs)
       } catch {
         case e: Throwable =>
           // Never swallow: a silent -1 cost round 6 its bench. The
           // driver captures stderr, so the stack trace is auditable.
           System.err.println(s"[bench] $name FAILED: $e")
           e.printStackTrace()
-          QRes(name, -1.0, -1L, -1L, -1.0, start)
+          QRes(name, -1.0, -1L, -1L, -1.0, start, -1.0, -1L)
       }
     }
     rollingProbe(toRun.size)
@@ -291,9 +265,9 @@ object Bench {
       val (rt, rj, rk) =
         try {
           val runs = Seq.fill(3)(runOnce(r.name))
-          val med = runs.map(_._1).sorted.apply(1)
-          val m = runs.minBy(x => math.abs(x._1 - med))
-          (med, m._2, m._3)
+          val med = runs.map(_.t).sorted.apply(1)
+          val m = runs.minBy(x => math.abs(x.t - med))
+          (med, m.jobs, m.tasks)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] retime ${r.name} FAILED: $e")
           (-1.0, -1L, -1L)
@@ -304,7 +278,7 @@ object Bench {
     // must be bracketed by a calibration anchor exactly like the sweep
     // is, or "retry = clean observation" rests on an unmeasured claim
     // when contention persists into the retimes.
-    val calibEnd = calibrate(spark, sfDir, "end")
+    val calibEnd = calibrate(spark, sfDir, "end", stats)
     val results: Seq[(String, Double)] = measured.map { r =>
       r.name -> (retimed.get(r.name) match {
         case Some((first, _, _, rt, _, _)) if rt >= 0 =>
@@ -380,40 +354,30 @@ object Bench {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
       // sidecar-only forensics: per-query start offsets (seconds since
       // record start — maps a burst window to wall-clock), per-query job
-      // counts (plan-size fingerprint), the full rolling-probe series,
-      // and the complete retime table
-      val forensics =
-        s""""starts":${measured.map(r => s""""${r.name}":${r.start}""")
-          .mkString("{", ",", "}")},""" +
-          s""""jobs":${measured.map(r => s""""${r.name}":${r.jobs}""")
-            .mkString("{", ",", "}")},""" +
-          s""""tasks":${measured.map(r => s""""${r.name}":${r.tasks}""")
-            .mkString("{", ",", "}")},""" +
-          s""""rolling":$rollingJson,"retimes":$retimesJson,"""
+      // counts (plan-size fingerprint), the time and jobs spent in the
+      // query function (`build`, part of `queries`), the full
+      // rolling-probe series, and the complete retime table
+      def perQuery(key: String, v: QRes => Any): String =
+        measured.map(r => s""""${r.name}":${v(r)}""")
+          .mkString(s""""$key":{""", ",", "},")
+      val forensics = perQuery("starts", _.start) +
+        perQuery("jobs", _.jobs) + perQuery("tasks", _.tasks) +
+        perQuery("build", r => r4(r.build)) +
+        perQuery("build_jobs", _.buildJobs) +
+        s""""rolling":$rollingJson,"retimes":$retimesJson,"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get(out),
         lineFor(qsJson(results), forensics)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
+    stats.drain()
+    val stagesOut =
+      sys.env.getOrElse("SPARK_GRAFT_STAGES_OUT", "bench_stages.json")
+    java.nio.file.Files.write(java.nio.file.Paths.get(stagesOut),
+      stats.toJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    System.err.println(
+      s"[bench] stage table: ${stats.size} job groups -> $stagesOut")
     spark.stop()
-    // Distill the event log into the per-group stage table, then delete
-    // the raw log (hundreds of MB; the table is a few KB). A distill
-    // failure must not fail the bench — the timing record above is
-    // already printed and persisted.
-    if (evLogOn) try {
-      val log = new java.io.File(evDir, appId)
-      if (log.isFile) {
-        val out = new java.io.File(
-          sys.env.getOrElse("SPARK_GRAFT_STAGES_OUT", "bench_stages.json"))
-        val n = BenchStages.distill(log, out)
-        System.err.println(
-          s"[bench] stage table: $n job groups -> ${out.getPath}")
-        log.delete()
-      } else System.err.println(s"[bench] no event log at ${log.getPath}")
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[bench] stage-table distill failed: $e")
-    }
     if (failed.nonEmpty) sys.exit(1)
   }
 }

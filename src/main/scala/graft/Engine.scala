@@ -145,6 +145,7 @@ object Engine {
         classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[FileSystemBasedCheckpointFileManager].getName)
+      .withExtensions(new GraftExtensions)
     val spark = extraConfs.foldLeft(builder0) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

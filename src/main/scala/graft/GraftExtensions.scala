@@ -9,17 +9,17 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, StringType}
 
-/** Session-construction extension point (SURVEY.md §2B-11 / §4.2): install
-  * the engine's custom expressions and rewrite rules at session build time
-  * via `spark.sql.extensions=graft.GraftExtensions` — the deployment path
-  * for a cluster where the engine library is on every executor and all
-  * sessions should see `h60` / `dot_product` without per-query
-  * registration (the per-query `functionRegistry` path used by the t2
-  * queries remains for driver-owned sessions).
+/** Session-construction extension point (SURVEY.md §2B-11 / §4.2): the
+  * one install path for the engine's custom SQL functions (`h60`,
+  * `dot_product`, `nearest_cell`), its optimizer rule and its planner
+  * strategy. `Engine.session` builds every session with it; a cluster
+  * deployment sets `spark.sql.extensions=graft.GraftExtensions` at submit
+  * time instead.
   *
-  * Also injects [[RewriteComposedH60]], so portable SQL written against
-  * the md5/conv formulation is silently upgraded to the native codegen
-  * expression.
+  * Injects [[RewriteComposedH60]], so portable SQL written against the
+  * md5/conv formulation is silently upgraded to the native codegen
+  * expression, and [[graft.plans.GroupTopKStrategy]], which plans
+  * `GroupTopK` as partial + final per-group heaps.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -106,42 +106,6 @@ object ScaleProbe {
     }
   }
 
-  /** Checkpoint-parse growth probe: does folding a checkpoint (with
-    * inline per-file bloom stats) stay linear in live-file count? For
-    * each file count F the probe builds a table whose checkpoint holds
-    * F add-lines with bloom+minmax stats, then times fresh replays
-    * (each timed call commits a tiny delta first, so the memoized
-    * snapshot cannot serve it — the parse really runs).
-    * Usage: tools/run.sh graft.ScaleProbe ckpt [sfDir]
-    */
-  private def ckptProbe(args: Array[String]): Unit = {
-    import graft.operators.TxLog
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Engine.session("graft-ckptprobe")
-    import spark.implicits._
-    val li = Engine.table(spark, sfDir, "lineitem")
-      .select($"l_orderkey", $"l_quantity")
-    val tiny = li.limit(2).repartition(1)
-    val rows = Seq(32, 256, 2048).map { f =>
-      val t = Engine.scratchDir(s"sp_ckpt_$f")
-      TxLog.append(spark, li.repartition(f), t,
-        statsCols = Seq("bloom:l_orderkey"))
-      // 16 small commits so a checkpoint lands (CheckpointEvery = 16)
-      (1 to 16).foreach(_ => TxLog.append(spark, tiny, t,
-        statsCols = Seq("bloom:l_orderkey")))
-      val ts = (1 to 3).map { _ =>
-        TxLog.append(spark, tiny, t, statsCols = Seq("bloom:l_orderkey"))
-        val t0 = System.nanoTime()
-        val n = TxLog.filesWithStats(t).size
-        require(n > f, s"expected > $f live files, saw $n")
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      f"""{"files":$f,"parse_sec":${ts(1)}%.4f}"""
-    }
-    println(s"""{"probe":"ckpt_parse","rows":[${rows.mkString(",")}]}""")
-    spark.stop()
-  }
-
   /** BPE trainer timing probe: the incremental (pair-delta + heap)
     * trainer vs the naive full-rescan reference on the corpus word
     * dict at increasing merge budgets — the evidence row for the
@@ -179,39 +143,6 @@ object ScaleProbe {
     }
     println(s"""{"probe":"bpe_train","word_types":${wc.size},""" +
       s""""rows":[${rows.mkString(",")}]}""")
-  }
-
-  /** Streaming lifecycle-floor probe (r10, closes the r9 verdict item):
-    * the five stream-stream joins bench at >90% MicroBatchExecution
-    * lifecycle overhead per the stage table. This probe separates the
-    * FLOOR (a stateless pass-through replay: same harness, same
-    * AvailableNow drain, same trigger count, zero join/state work)
-    * from a real stream-stream join — if the two are close, the join's
-    * bench time is the per-query lifecycle cost of a correct
-    * incremental execution, not a plan defect, and there is nothing to
-    * optimize without breaking the >=2-trigger / fresh-checkpoint
-    * semantics the queries exist to prove.
-    * Usage: tools/run.sh graft.ScaleProbe streamfloor [sfDir] */
-  /** Plain-PQ vs residual-PQ recall at R ∈ {10,30,50}, measured
-    * against the routed exact-rerank ceiling (the right denominator:
-    * neither can beat rerank-everything on the same routed cells) over
-    * 50 query vectors — the evidence for shipping residual encoding. */
-  private def pqSweepProbe(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Engine.session("graft-pqsweep")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ceil = pairs(queries.LlmSim.ivfPersistedProbe(spark, sfDir, 0L, 50L))
-    val rep = Seq(10, 30, 50).map { r =>
-      val pq = pairs(queries.LlmSim.ivfPqProbe(spark, sfDir, 0L, 50L, r))
-      val rpq = pairs(queries.LlmSim.ivfRpqProbe(spark, sfDir, 0L, 50L, r))
-      f""""R$r":{"pq":${(pq & ceil).size.toDouble / ceil.size}%.3f,""" +
-        f""""rpq":${(rpq & ceil).size.toDouble / ceil.size}%.3f}"""
-    }
-    println(s"""{"pq_sweep":"$sfDir","ceiling_pairs":${ceil.size},""" +
-      rep.mkString(",") + "}")
-    spark.stop()
   }
 
   /** Maintenance-commit shape: the O(Σ|touched|) claim measured. Per
@@ -782,43 +713,6 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** BFS A/B on the GATED q_graph_bfs graph: the join-frontier
-    * formulation vs the bitmap-frontier one (domain = the graph's own
-    * max node id — ~n_customers, so the bitmap is KBs). Median of 3
-    * after warmup, same grouped output as the gated query.
-    * Usage: tools/run.sh graft.ScaleProbe bfsab [sfDir] */
-  private def bfsAbProbe(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Engine.session("graft-bfsab")
-    import spark.implicits._
-    val n = Engine.table(spark, sfDir, "customer").count()
-    val raw = Engine.table(spark, sfDir, "orders")
-      .select(least($"o_custkey", $"o_orderkey" % n).as("a"),
-        greatest($"o_custkey", $"o_orderkey" % n).as("b"))
-      .filter($"a" =!= $"b").distinct()
-    val edges = raw.select($"a".as("src"), $"b".as("dst"))
-      .unionByName(raw.select($"b".as("src"), $"a".as("dst")))
-    val sources = spark.range(1, 2).select($"id".as("node"))
-    val maxId = edges.agg(max(greatest($"src", $"dst")))
-      .head.getLong(0) + 1
-    def out(df: DataFrame): Unit = {
-      df.groupBy($"d")
-        .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node"))
-        .collect(); ()
-    }
-    def joinForm(): Unit =
-      out(graft.operators.Bfs.hopDistance(edges, sources, maxHops = 8))
-    def bmForm(): Unit = out(graft.operators.Bfs.hopDistanceBitmap(
-      edges, sources, maxHops = 8, maxId))
-    joinForm(); bmForm()
-    val tj = Seq.fill(3)(time(joinForm())).sorted.apply(1)
-    val tb = Seq.fill(3)(time(bmForm())).sorted.apply(1)
-    println(f"""{"bfs_ab":"$sfDir","max_id":$maxId,""" +
-      f""""join_sec":$tj%.3f,"bitmap_sec":$tb%.3f,""" +
-      f""""speedup":${tj / tb}%.2f}""")
-    spark.stop()
-  }
-
   /** Dense-BFS repeat-path A/B (r16): the gated q_graph_bfs_dense
     * persists BOTH the id mapping and the ENCODED EDGES as bucketed
     * artifacts, so only the FIRST call pays the two encode joins —
@@ -969,43 +863,11 @@ object ScaleProbe {
     spark.stop()
   }
 
-  private def streamFloorProbe(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Engine.session("graft-streamfloor")
-    val ev = graft.streaming.Replay.events(spark, sfDir).limit(2000)
-    def probe(name: String, f: () => Unit): String = {
-      f() // warmup
-      val ts = Seq.fill(5)(time(f())).sorted
-      f"""{"name":"$name","median_sec":${ts(2)}%.3f,"min_sec":${ts.head}%.3f}"""
-    }
-    val rows = Seq(
-      probe("trivial_passthrough", () =>
-        graft.streaming.Replay.run(spark, ev, mode = "append",
-          cacheKey = s"floor_trivial:$sfDir")(st => st)
-          .write.format("noop").mode("overwrite").save()),
-      probe("stream_stream_join", () =>
-        SparkEntry.queries("q_stream_join")(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()),
-      probe("stream_stream_join_full", () =>
-        SparkEntry.queries("q_stream_join_full")(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()))
-    println(s"""{"probe":"stream_lifecycle_floor","sfDir":"$sfDir",""" +
-      s""""rows":[${rows.mkString(",")}]}""")
-    spark.stop()
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("recall")) return recallProbe(args.drop(1))
-    if (args.headOption.contains("ckpt")) return ckptProbe(args.drop(1))
     if (args.headOption.contains("bpe")) return bpeProbe(args.drop(1))
-    if (args.headOption.contains("streamfloor"))
-      return streamFloorProbe(args.drop(1))
-    if (args.headOption.contains("pqsweep"))
-      return pqSweepProbe(args.drop(1))
     if (args.headOption.contains("filtered"))
       return filteredShapeProbe(args.drop(1))
-    if (args.headOption.contains("bfsab"))
-      return bfsAbProbe(args.drop(1))
     if (args.headOption.contains("densab"))
       return denseAbProbe(args.drop(1))
     if (args.headOption.contains("maint"))

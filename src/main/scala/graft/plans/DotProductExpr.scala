@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.SqlBridge
@@ -87,18 +87,4 @@ object DotProduct {
   def apply(a: Column, b: Column): Column =
     SqlBridge.column(
       DotProduct(SqlBridge.expression(a), SqlBridge.expression(b)))
-
-  /** Expose as a SQL function (`dot_product(a, b)`) in the session's
-    * function registry.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => {
-        require(exprs.length == 2,
-          s"dot_product requires exactly 2 arguments, got ${exprs.length}")
-        // cast numeric arrays (e.g. array<float> embeddings) to doubles
-        DotProduct(
-          Cast(exprs(0), ArrayType(DoubleType)),
-          Cast(exprs(1), ArrayType(DoubleType)))
-      }, "built-in")
 }

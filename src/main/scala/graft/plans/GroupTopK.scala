@@ -225,22 +225,14 @@ object GroupTopK {
     * public Column `.desc` AST node is not task-serializable inside a
     * custom exec's closure.
     *
-    * Installs [[GroupTopKStrategy]] into the session's experimental
-    * strategies (idempotent, serialized — concurrent sessions share the
-    * experimental-methods object); sessions built with
-    * `graft.GraftExtensions` already carry it. Column resolution is
+    * Planned by [[GroupTopKStrategy]], which `graft.GraftExtensions`
+    * installs in every `Engine.session`. Column resolution is
     * case-insensitive and throws on ambiguity (e.g. post-self-join
     * duplicate names) instead of silently binding the first match.
     */
   def apply(df: DataFrame, groupCols: Seq[String],
       orderSpec: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    GroupTopK.synchronized {
-      if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ GroupTopKStrategy
-      }
-    }
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       child.output.filter(_.name.equalsIgnoreCase(n)) match {

@@ -233,12 +233,12 @@ object Tpch extends QueryModule {
         GROUP BY r_name, n_name"""),
       headline = true),
 
-    // The custom DotProduct expression through the SQL surface: register
-    // it in the function registry, call it from SQL text (B-11 row:
-    // custom Expression exposed as a SQL function).
+    // The custom DotProduct expression through the SQL surface:
+    // `GraftExtensions` installs it in every `Engine.session`, and the
+    // query calls it from SQL text (B-11 row: custom Expression exposed
+    // as a SQL function).
     "q_sql_dot_product" -> QueryDef(
       fn = (s, dir) => {
-        graft.plans.DotProduct.register(s)
         Engine.table(s, dir, "embeddings").createOrReplaceTempView("emb_v")
         s.sql("""
           SELECT vec_id, label,

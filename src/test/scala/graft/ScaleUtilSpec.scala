@@ -62,32 +62,80 @@ class ScaleUtilSpec extends AnyFunSuite {
     }
   }
 
-  test("BenchStages.distill folds an event log into per-group metrics") {
-    // a synthetic 3-event log: one tagged job with one task, plus an
-    // untagged job and a truncated garbage line (must not throw)
-    val log = Files.createTempFile("graft_evlog", ".json").toFile
-    val lines = Seq(
-      """{"Event":"SparkListenerJobStart","Job ID":0,"Submission Time":1000,"Stage IDs":[0],"Properties":{"spark.jobGroup.id":"q_test"}}""",
-      """{"Event":"SparkListenerTaskEnd","Stage ID":0,"Task Info":{"Launch Time":1100,"Finish Time":2100},"Task Metrics":{"Executor Run Time":700,"Executor Deserialize Time":50,"Result Serialization Time":10,"JVM GC Time":80,"Input Metrics":{"Bytes Read":1048576},"Shuffle Read Metrics":{"Fetch Wait Time":20,"Local Bytes Read":2097152,"Remote Bytes Read":0},"Shuffle Write Metrics":{"Shuffle Bytes Written":3145728,"Shuffle Write Time":40000000}}}""",
-      """{"Event":"SparkListenerJobEnd","Job ID":0,"Completion Time":2500}""",
-      """{"Event":"SparkListenerJobStart","Job ID":1,"Submission Time":3000,"Stage IDs":[1]}""",
-      """{"Event":"SparkListenerTaskEnd","Stage ID":1,"Task Info":{"Launch Time":3000,"Finish Time":3200},"Task Metrics":{"Executor Run Time":150,"Executor Deserialize Time":0,"Result Serialization Time":0,"JVM GC Time":0}}""",
-      """{"Event":"SparkListenerJobEnd","Job ID":1,"Completion""")
-    Files.write(log.toPath, lines.mkString("\n").getBytes("UTF-8"))
-    val out = Files.createTempFile("graft_stages", ".json").toFile
-    val n = BenchStages.distill(log, out)
-    assert(n === 2)
-    val body = new String(Files.readAllBytes(out.toPath), "UTF-8")
-    // tagged group: wall 1.0s, run 0.7, gc 0.08, fetch-wait 0.02,
-    // sched delay 1000-700-50-10-40 = 0.2, 1 MiB in / 2 MiB shuffle
-    // read / 3 MiB written; untagged lands in "ungrouped" with its
-    // truncated JobEnd ignored (job_wall 0)
-    assert(body.contains(
-      """"q_test":{"jobs":1,"job_wall_s":1.50,"tasks":1,"task_s":1.00,""" +
-        """"run_s":0.70,"gc_s":0.08,"fetch_wait_s":0.02,""" +
-        """"sched_delay_s":0.20,"input_mb":1.0,"sh_read_mb":2.0,""" +
-        """"sh_write_mb":3.0}"""), body)
-    assert(body.contains(""""ungrouped":{"jobs":1,"job_wall_s":0.00"""))
-    log.delete(); out.delete()
+  test("JobStats files jobs and task metrics under the declared section") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // an independent count of every job and task the context runs
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val plain = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        { jobs.incrementAndGet(): Unit }
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        { tasks.incrementAndGet(): Unit }
+    }
+    spark.sparkContext.addSparkListener(plain)
+    val stats = JobStats.register(spark)
+    try {
+      def counted(body: => Unit): (Long, Long) = {
+        stats.drain()
+        val (j0, k0) = (jobs.get(), tasks.get())
+        body
+        stats.drain()
+        (jobs.get() - j0, tasks.get() - k0)
+      }
+      // outside any section: "ungrouped"
+      val untagged = counted(spark.range(1000).count(): Unit)
+      // a shuffle of incompressible rows under one section
+      val shuffled = counted(stats.section("t_shuffle") {
+        spark.range(0, 50000, 1, 4)
+          .select(sha2($"id".cast("string"), 256).as("h"))
+          .repartition(4).agg(max($"h")).collect(): Unit
+      })
+      // a two-trigger stream drain: its micro-batches run on the
+      // stream's own thread under a runId job group, and must still
+      // land under the declared section
+      val replayed = counted(stats.section("t_replay") {
+        graft.streaming.Replay.run(spark,
+          graft.streaming.Replay.events(spark, sf).limit(200),
+          mode = "append", filesPerTrigger = 2, nFiles = 4)(st => st)
+          .collect(): Unit
+      })
+      assert(stats.jobs === untagged._1 + shuffled._1 + replayed._1)
+      assert(stats.tasks === untagged._2 + shuffled._2 + replayed._2)
+
+      val json = stats.toJson
+      val groups = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(json).get("groups")
+      assert(groups.fieldNames.asScala.toSeq ===
+        Seq("ungrouped", "t_shuffle", "t_replay"), json)
+      Seq("ungrouped" -> untagged, "t_shuffle" -> shuffled,
+          "t_replay" -> replayed).foreach { case (g, (nj, nk)) =>
+        assert(groups.get(g).get("jobs").asLong === nj, g)
+        assert(groups.get(g).get("tasks").asLong === nk, g)
+      }
+      // the Replay setup writes its input once, then each of the two
+      // triggers runs at least one job
+      assert(replayed._1 >= 3, json)
+      assert(groups.get("t_shuffle").get("sh_write_mb").asDouble > 0, json)
+      assert(groups.get("t_shuffle").get("sh_read_mb").asDouble > 0, json)
+      groups.fields.asScala.foreach { e =>
+        assert(e.getValue.get("sched_delay_s").asDouble >= 0, e.getKey)
+      }
+      // the bench_stages.json schema tools/stage_report.py reads: field
+      // names and order, seconds to 2 dp, MiB to 1 dp
+      val row = ("""\{"jobs":\d+,"job_wall_s":\d+\.\d\d,"tasks":\d+,""" +
+        """"task_s":\d+\.\d\d,"run_s":\d+\.\d\d,"gc_s":\d+\.\d\d,""" +
+        """"fetch_wait_s":\d+\.\d\d,"sched_delay_s":\d+\.\d\d,""" +
+        """"input_mb":\d+\.\d,"sh_read_mb":\d+\.\d,"sh_write_mb":\d+\.\d\}""")
+      assert(json.matches(
+        s"""\\{"groups":\\{"ungrouped":$row,"t_shuffle":$row,"t_replay":$row\\}\\}"""),
+        json)
+    } finally {
+      spark.sparkContext.removeSparkListener(stats)
+      spark.sparkContext.removeSparkListener(plain)
+    }
   }
 }
