@@ -153,8 +153,8 @@ object Engine {
     // No-silent-caps surfacing: any query that declares an `observe`
     // metric (semdedup's within-cell pair count, q_agg_observe, …)
     // gets it printed to stderr after each successful action, so the
-    // volumes a scale claim rests on ride every Bench/Verify/
-    // ScaleProbe record instead of living in comments. Stderr only —
+    // volumes a scale claim rests on ride every Bench/Verify record
+    // instead of living in comments. Stderr only —
     // stdout stays reserved for the one parseable record line.
     // (getOrCreate may hand back an existing session — register once.)
     if (observedHooked.add(spark)) spark.listenerManager.register(

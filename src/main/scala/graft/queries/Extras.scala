@@ -10,11 +10,8 @@ import org.apache.spark.sql.functions._
   */
 object Extras extends QueryModule {
 
-  /** The sparse-LONG id transform of the dense-BFS gates — shared
-    * with ScaleProbe's densab A/B so the probe times the same graph
-    * the gate probes (fixture drift would silently compare two
-    * different graphs). */
-  private[graft] def denseSparseId(
+  /** The sparse-LONG id transform of the dense-BFS gates. */
+  private def denseSparseId(
       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c * lit(1000003L) + lit(17L)
 
@@ -23,10 +20,8 @@ object Extras extends QueryModule {
       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat(lit("u"), lpad(c.cast("string"), 12, "0"))
 
-  /** The dense mapping's table name (tag "" = the long-id gate's) —
-    * [[denseBfs]] writes it and ScaleProbe's densab reads it; a
-    * rename lands on both or neither. */
-  private[graft] def denseMapTable(dir: String, tag: String = ""): String =
+  /** The dense mapping's table name (tag "" = the long-id gate's). */
+  private def denseMapTable(dir: String, tag: String = ""): String =
     s"graft_dense_${tag}map_${math.abs(dir.hashCode)}"
 
   /** The dense-BFS pipeline shared by the long- and string-id gates:

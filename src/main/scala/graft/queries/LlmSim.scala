@@ -23,8 +23,8 @@ object LlmSim extends QueryModule {
   private val Planes = 4 // LSH hyperplanes -> 16 buckets
 
   // Shipped multi-table ANN config (q_llm_ann_lsh_mt). Chosen by the
-  // PLANS.md recall/latency sweep (ScaleProbe recall mode): the gated
-  // floor in OperatorSpec tracks this config's measured recall.
+  // PLANS.md recall/latency sweep: the gated floor in OperatorSpec
+  // tracks this config's measured recall.
   private[graft] val MtTables = 3
   private[graft] val MtPlanes = 10
   private[graft] val MtRadius = 4
@@ -542,10 +542,10 @@ object LlmSim extends QueryModule {
     // bounded per cell — pairs = Σ|cell|² — and ivfNlistFor derives
     // nlist = clamp(N/IvfPCellRows, 8, 4096) from the corpus count,
     // so |cell| ≈ IvfPCellRows stays constant and total pair work
-    // grows LINEARLY in N (cells split; measured 1×/8×/64× with pair
-    // counts reported in ScaleProbe `semdedup_shape` — no silent
-    // caps), never an all-pairs join; the cells artifact arrives
-    // bucketed on `cid`, so the self-join consumes its clustering.
+    // grows LINEARLY in N (cells split; the pair count is observed on
+    // every run — no silent caps), never an all-pairs join; the cells
+    // artifact arrives bucketed on `cid`, so the self-join consumes
+    // its clustering.
     // θ = 0.30 is the gate's similarity threshold. Output: one
     // verdict row per vector.
     "q_llm_semdedup" -> QueryDef(
@@ -3480,9 +3480,8 @@ object LlmSim extends QueryModule {
       Seq("tb"), lshIdxOf(embDoubles(s, dir)))
 
   /** The (tb, vec_id) signature rows of a (vec_id, v) corpus frame —
-    * the build half of [[persistedLshIdx]], exposed so ScaleProbe can
-    * materialize per-scale indexes with the exact gated arithmetic. */
-  private[graft] def lshIdxOf(e0: DataFrame): DataFrame = {
+    * the build half of [[persistedLshIdx]]. */
+  private def lshIdxOf(e0: DataFrame): DataFrame = {
     import e0.sparkSession.implicits._
     val P = MtPlanes
     val e = (0 until MtTables).foldLeft(e0)((d, t0) =>
@@ -3515,11 +3514,9 @@ object LlmSim extends QueryModule {
 
   /** One probe pass of (vec_id, v) query rows `q0` against a
     * (tb, vec_id) signature index, reranked against corpus frame `e`
-    * — the probe half of [[lshPersistedProbe]], parameterized over
-    * the artifacts so ScaleProbe can probe scaled indexes with the
-    * exact gated plan. */
-  private[graft] def lshProbeOf(q0: DataFrame, idx: DataFrame,
-                                e: DataFrame): DataFrame = {
+    * — the probe half of [[lshPersistedProbe]]. */
+  private def lshProbeOf(q0: DataFrame, idx: DataFrame,
+                         e: DataFrame): DataFrame = {
     import q0.sparkSession.implicits._
     val P = MtPlanes; val T = MtTables
     val masks =
@@ -3569,9 +3566,8 @@ object LlmSim extends QueryModule {
   /** Parametric IVF ANN: coarse cells from `iters` deterministic Lloyd
     * iterations (seeded with the first `nlist` corpus vectors), each
     * query probes its `nprobe` nearest cells, cosine rerank top-3.
-    * This is the (nlist, nprobe) sweep surface ScaleProbe's recall
-    * probe measures and OperatorSpec floors — the gated
-    * q_llm_ann_ivf/ivf2 keep the label-cell variant whose centroid
+    * This is the (nlist, nprobe) sweep surface OperatorSpec floors —
+    * the gated q_llm_ann_ivf/ivf2 keep the label-cell variant whose centroid
     * build is exactly SQL-expressible for the DuckDB oracle. Scale
     * shape: centroids collapse to ONE broadcast array row (nlist x
     * dims, KBs) and every assignment — each Lloyd pass AND the final
@@ -3701,21 +3697,19 @@ object LlmSim extends QueryModule {
     * N is what makes the index's two scale claims POLICY-BY-CODE:
     * (a) expected |cell| ≈ IvfPCellRows stays CONSTANT as the corpus
     * grows — cells split — so the semdedup within-cell pair work
-    * Σ|cell|² ≈ nlist·IvfPCellRows² grows LINEARLY in N (measured at
-    * 1×/8×/64× in ScaleProbe `semdedup_shape`), and (b) a probe's
-    * candidate set (nprobe cells ≈ nprobe·IvfPCellRows rows) is O(1)
+    * Σ|cell|² ≈ nlist·IvfPCellRows² grows LINEARLY in N, and (b) a
+    * probe's candidate set (nprobe cells ≈ nprobe·IvfPCellRows rows) is O(1)
     * per query at any corpus size — the nprobe/nlist scan fraction
     * shrinks as 1/N instead of freezing at a toy-corpus constant.
     * The clamp floor keeps micro corpora probeable; the 4096 ceiling
     * bounds the broadcast centroid array (nlist × dims doubles) to
     * KBs here, low MBs at real dims — past N = 4096·IvfPCellRows rows
     * cells grow linearly again, and a production deployment raises
-    * the ceiling with its executor memory (ScaleProbe logs when the
-    * ceiling binds — no silent caps). The DuckDB oracles derive the
+    * the ceiling with its executor memory. The DuckDB oracles derive the
     * SAME value from the same count (the `nl` CTE in [[ivfCellsSql]]),
     * so the gate stays hash-exact at every scale. The ungated
     * [[annIvfTopK]] sweep surface keeps its measured 64×8 config. */
-  private[graft] def ivfNlistFor(n: Long): Int =
+  private def ivfNlistFor(n: Long): Int =
     math.max(8L, math.min(4096L, n / IvfPCellRows)).toInt
 
   // one count per (JVM, sfDir): the policy input is the corpus row
@@ -3835,10 +3829,8 @@ object LlmSim extends QueryModule {
     * `nlist` seeds (vec_id 0..nlist-1) refined by ONE Lloyd iteration
     * with EXACT quantized-integer means (the q_llm_kmeans_iter
     * arithmetic — SQL-mirrorable, unlike a plain double avg),
-    * assignment via the codegen NearestCell argmin. Parameterized so
-    * ScaleProbe can build indexes over scaled corpora with the same
-    * derived-nlist policy the gated artifacts use. */
-  private[graft] def ivfCentOf(e: DataFrame, nlist: Int): DataFrame = {
+    * assignment via the codegen NearestCell argmin. */
+  private def ivfCentOf(e: DataFrame, nlist: Int): DataFrame = {
     import e.sparkSession.implicits._
     val seed = e.filter($"vec_id" < nlist)
       .select($"vec_id".cast("int").as("cid"), $"v".as("cv"))
@@ -3854,10 +3846,8 @@ object LlmSim extends QueryModule {
   }
 
   /** The SemDeDup verdict over a (cid, vec_id, v) cells frame: drop
-    * every vector with a smaller-id cell-mate at cosine >= `theta`.
-    * Parameterized over the artifact so ScaleProbe can time the
-    * within-cell pair join on scaled indexes with the gated plan. */
-  private[graft] def semdedupOf(cells: DataFrame, theta: Double): DataFrame = {
+    * every vector with a smaller-id cell-mate at cosine >= `theta`. */
+  private def semdedupOf(cells: DataFrame, theta: Double): DataFrame = {
     import cells.sparkSession.implicits._
     // No-silent-caps: the quadratic term this operator's linearity
     // claim rests on (Σ|cell|² within-cell pairs at the stated θ) is
@@ -4633,7 +4623,7 @@ object LlmSim extends QueryModule {
 
   /** Cell labeling of a corpus frame against finished centroids — the
     * map-only NearestCell pass every persisted-cells artifact runs. */
-  private[graft] def ivfCellsOf(e: DataFrame, cent: DataFrame): DataFrame = {
+  private def ivfCellsOf(e: DataFrame, cent: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     e.crossJoin(centArrOf(cent))
       .select(graft.plans.NearestCell($"v", $"cents").as("cid"),
@@ -4704,7 +4694,7 @@ object LlmSim extends QueryModule {
     * rank instead — same determinism, no density assumption. The
     * oracle mirrors it as row_number() OVER (ORDER BY vec_id) − 1
     * over the distinct-id LIMIT PqKs prefix. */
-  private[graft] def pqCodebooksSeededOf(e: DataFrame): DataFrame = {
+  private def pqCodebooksSeededOf(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     val s = e.sparkSession
     val subs = pqSubsOf(e)
@@ -5931,8 +5921,7 @@ object LlmSim extends QueryModule {
 
   /** [[maintainedChain]]'s frame-parameterized core — `post` is a
     * (cid, vec_id, v, split) one-pass-split frame, `origCent` its
-    * original centroid set — so ScaleProbe's `maint` shape can time
-    * the EXACT committed chain on scaled corpora. */
+    * original centroid set. */
   private[graft] def maintainedChainOf(
       post: DataFrame,
       origCent: DataFrame): (DataFrame, DataFrame, DataFrame) = {
@@ -6678,12 +6667,10 @@ object LlmSim extends QueryModule {
     * rows sample at the same rate as base rows) and exactly
     * mirrorable in SQL — the oracle derives the same mod from its
     * own survivor count. At the gated corpora survivors sit far
-    * below the target, so mod = 1 and the sample IS the corpus;
-    * ScaleProbe `retrain` drives mod > 1 and measures the flat
-    * training curve. */
+    * below the target, so mod = 1 and the sample IS the corpus. */
   private[graft] val RetrainSampleTarget = 4096L
 
-  private[graft] def retrainTrainModFor(survivors: Long): Long =
+  private def retrainTrainModFor(survivors: Long): Long =
     math.max(1L, survivors / RetrainSampleTarget)
 
   /** The RETRAIN verb. Survivor set = the gen-2 folded cells minus
@@ -6970,18 +6957,18 @@ object LlmSim extends QueryModule {
 
   /** The PURE re-key at the renumber's heart, factored for property
     * coverage: dense mapping = rank-by-old-cid over `live`'s distinct
-    * cids (nlist-bounded — the single-partition window runs over a
-    * metadata-sized frame), broadcast to one map-only relabel per
-    * frame. Keys move; payloads and geometry do not. Centroids and
-    * codes of cids absent from `live` (fully-tombstoned cells) drop
-    * out through the inner join — a major compaction keeps exactly
-    * the serving estate. */
+    * cids, built once on the driver (nlist-bounded — one collect of
+    * the sorted cid set, indexed into a local frame) and broadcast to
+    * one map-only relabel per frame. Keys move; payloads and geometry
+    * do not. Centroids and codes of cids absent from `live`
+    * (fully-tombstoned cells) drop out through the inner join — a
+    * major compaction keeps exactly the serving estate. */
   private[graft] def renumberFrames(
       live: DataFrame, cent: DataFrame, codes: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import live.sparkSession.implicits._
-    def rnMap = live.select($"cid").distinct().withColumn("ncid",
-      (row_number().over(Window.orderBy($"cid")) - 1).cast("int"))
+    val rnMap = live.select($"cid").distinct().as[Int].collect().sorted
+      .toSeq.zipWithIndex.toDF("cid", "ncid")
     (live.join(broadcast(rnMap), Seq("cid"))
        .select($"ncid".as("cid"), $"vec_id", $"v"),
      cent.join(broadcast(rnMap), Seq("cid"))
@@ -7531,9 +7518,8 @@ object LlmSim extends QueryModule {
     publishEpochPointer(postPointerFile(s, dir), epoch)
 
   /** The one tokenizer of the postings lifecycle: (w, doc_id, tf) via
-    * explode + count — base build, every delta, and ScaleProbe's
-    * stream-shape bases share it. */
-  private[graft] def postTok(docs: DataFrame): DataFrame = {
+    * explode + count — the base build and every delta share it. */
+  private def postTok(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select($"doc_id", explode(split($"text", " ")).as("w"))
       .groupBy($"w", $"doc_id").agg(count(lit(1)).as("tf"))
@@ -7621,15 +7607,13 @@ object LlmSim extends QueryModule {
     landPostingsMicroBatchInto(s, postTableName(dir), epoch,
       s"postings-stream-e$epoch-b$batchId", bdf)
 
-  /** The landing protocol parameterized over (table, epoch, txn) —
-    * ONE appender shared by the gated lifecycle and ScaleProbe's
-    * stream-shape measurement, so the probe can never silently
-    * measure stale machinery. The committed-marker FAST PATH runs
-    * before the batch is tokenized: a re-delivered batch (the common
-    * resume case) must not pay postTok + a localCheckpoint just to be
-    * no-op'd (appendOnce re-checks under its mutex — this check is an
-    * optimization, not the correctness point). */
-  private[graft] def landPostingsMicroBatchInto(
+  /** The landing protocol over an explicit (table, epoch, txn). The
+    * committed-marker FAST PATH runs before the batch is tokenized: a
+    * re-delivered batch (the common resume case) must not pay postTok
+    * + a localCheckpoint just to be no-op'd (appendOnce re-checks
+    * under its mutex — this check is an optimization, not the
+    * correctness point). */
+  private def landPostingsMicroBatchInto(
       s: SparkSession, postT: String, ep: Int, txn: String,
       bdf: DataFrame): Unit = {
     import s.implicits._
@@ -8441,8 +8425,7 @@ object LlmSim extends QueryModule {
   /** One probe pass against an IVF artifact pair: route each (q_id,
     * qv) row of `q` to its `nprobe` nearest cells (broadcast
     * centroids), read candidates out of the bucketed `cells` frame,
-    * cosine-rerank top-3. Parameterized over the artifacts so
-    * ScaleProbe can probe scaled indexes with the exact gated plan.
+    * cosine-rerank top-3.
     *
     * The index side is pruned BEFORE the join with a literal
     * `cid IN (...)` filter: the routed cid set is metadata-sized
@@ -8503,7 +8486,7 @@ object LlmSim extends QueryModule {
     * the in-order add of shiftleft(1L, i) sets each bit exactly once
     * (bit 63 wraps to Long.MinValue identically in both engines —
     * the oracle packs through HUGEINT and folds to signed). */
-  private[graft] def bqSigsOf(e: DataFrame): DataFrame = {
+  private def bqSigsOf(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     e.select($"vec_id", expr(
       """aggregate(sequence(0, 63), 0L, (acc, i) ->
@@ -8625,9 +8608,9 @@ object LlmSim extends QueryModule {
 
   /** Expected matching-candidate pool a filtered probe must route
     * before the rerank has anything to rank — the same headroom class
-    * as [[PqTopR]]/[[BqTopR]]. Shipped 64 from the r13 pool grid
-    * (ScaleProbe `filtered`, 50 queries, recall@3 vs filtered brute
-    * at sf0.001/0.01/0.1): 32 → 0.84/0.87/0.69, 48 → 0.95/1.00/0.75,
+    * as [[PqTopR]]/[[BqTopR]]. Shipped 64 from the r13 pool grid (50
+    * queries, recall@3 vs filtered brute at sf0.001/0.01/0.1):
+    * 32 → 0.84/0.87/0.69, 48 → 0.95/1.00/0.75,
     * 64 → 1.00/1.00/0.80, with probe wall time FLAT across the grid
     * (the routed set stays ~8-11 cells of ~IvfPCellRows rows — still
     * selectivity-derived and corpus-independent, so the constant is
@@ -8661,7 +8644,7 @@ object LlmSim extends QueryModule {
     * cannot drift. nprobeF depends on selectivity, not N, so probe
     * I/O stays nprobeF(l)·IvfPCellRows rows per query at any corpus
     * size and the scan fraction still shrinks as 1/N under the
-    * derived-nlist policy (measured in ScaleProbe `filtered_shape`). */
+    * derived-nlist policy. */
   private[graft] def filteredNprobeByLabel(
       s: SparkSession, dir: String,
       poolTarget: Long = FilteredPoolTarget): Map[Int, Int] =
@@ -8676,9 +8659,8 @@ object LlmSim extends QueryModule {
     })
 
   /** The per-label width arithmetic itself, over an explicit
-    * histogram — the one home of the clamp, shared by the dir-bound
-    * policy above and ScaleProbe's scaled-index `filtered_shape`. */
-  private[graft] def filteredNprobeOf(
+    * histogram — the one home of the clamp. */
+  private def filteredNprobeOf(
       hist: Seq[(Int, Long)], nlist: Int,
       poolTarget: Long): Map[Int, Int] = {
     val n = hist.map(_._2).sum
@@ -8692,7 +8674,7 @@ object LlmSim extends QueryModule {
   /** Deterministic per-query filter target: queries 0..9 spread over
     * labels {0, 2, 4} — 3 of the 10 label values, so the pushed label
     * set genuinely prunes the index scan at every scale. */
-  private[graft] def filteredTarget(c: Column): Column =
+  private def filteredTarget(c: Column): Column =
     ((c % 3) * 2).cast("int")
 
   /** FILTERED ANN probe: per-query top-3 among vectors satisfying the
@@ -8722,11 +8704,8 @@ object LlmSim extends QueryModule {
   }
 
   /** The routed (q_id, qv, target, cid) frame of a filtered probe —
-    * the per-row-width slice over the sorted broadcast centroid array
-    * — factored out so ScaleProbe's `filtered` shape measures the
-    * SHIPPED routing rather than a re-implementation that could
-    * silently drift. */
-  private[graft] def filteredRoutedOf(
+    * the per-row-width slice over the sorted broadcast centroid array. */
+  private def filteredRoutedOf(
       q: DataFrame, cent: DataFrame): DataFrame = {
     import q.sparkSession.implicits._
     q.crossJoin(centArrOf(cent))
@@ -8740,10 +8719,8 @@ object LlmSim extends QueryModule {
   /** The filtered-probe CORE over explicit artifacts: `q` carries
     * (q_id, qv, target, np — its own per-label width); routing is a
     * per-row slice of length `np` over the sorted broadcast centroid
-    * array, candidates come from ONE pruned scan of the labeled index
-    * — shared by the gated dir-bound probe and ScaleProbe's
-    * scaled-index `filtered_shape`. */
-  private[graft] def ivfFilteredProbeOf(
+    * array, candidates come from ONE pruned scan of the labeled index. */
+  private def ivfFilteredProbeOf(
       q: DataFrame, cent: DataFrame, labeled: DataFrame): DataFrame = {
     import q.sparkSession.implicits._
     val routed = filteredRoutedOf(q, cent)

@@ -69,9 +69,8 @@ object LlmText extends QueryModule {
     * positional filter (a pair survives only via a match with
     * min(na−pa, nb−pb)+1 >= α = ceil(7(na+nb)/17); the witness token of
     * the shortened-prefix lemma always passes) inside the join
-    * condition. See q_llm_threshold_sweep for the lemma. Factored out
-    * so ScaleProbe can drive the identical plan at 8x/64x corpus. */
-  private[graft] def jaccardPf(s: SparkSession, docs: DataFrame): DataFrame = {
+    * condition. See q_llm_threshold_sweep for the lemma. */
+  private def jaccardPf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val sets = docs
       .select($"doc_id", $"source",
@@ -129,11 +128,10 @@ object LlmText extends QueryModule {
       FROM documents WHERE doc_id % 10 = 0)"""
 
   /** The q_llm_threshold_sweep pipeline over an arbitrary (doc_id,
-    * source, text) corpus — factored out so ScaleProbe can drive the
-    * same shape with injected hot tokens.  See the QueryDef comment for
-    * the filter-correctness argument.
+    * source, text) corpus. See the QueryDef comment for the
+    * filter-correctness argument.
     */
-  private[graft] def thresholdSweep(s: SparkSession, docs: DataFrame)
+  private def thresholdSweep(s: SparkSession, docs: DataFrame)
       : DataFrame = {
     import s.implicits._
     val (sets, cand) = sweepCandidates(s, docs)

@@ -5,8 +5,9 @@ import graft.operators.Salt
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Scale utilities: salted joins (skew) and bucketed co-located joins
-  * (shuffle elimination) — plan- and result-verified.
+/** Scale utilities: salted joins and AQE's skew-join split (skew) and
+  * bucketed co-located joins (shuffle elimination) — plan- and
+  * result-verified.
   */
 class ScaleUtilSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -24,6 +25,41 @@ class ScaleUtilSpec extends AnyFunSuite {
         saltCols = Seq("v"))
       .agg(count(lit(1)), sum($"v" + $"w")).head
     assert(salted === expected)
+  }
+
+  test("AQE splits a skewed join's hot partition") {
+    import spark.implicits._
+    // broadcast off so the join shuffles; the skew thresholds (256 MB
+    // by default, sized for cluster partitions) scaled down to this
+    // test's partition sizes
+    val confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // 90% of the fact rows share one key
+      val fact = spark.range(200000)
+        .select(when($"id" % 10 === 0, $"id" % 1000).otherwise(lit(7L))
+          .as("k"), $"id".as("v"))
+      val dim = spark.range(1000).select($"id".as("k"), ($"id" % 5).as("g"))
+      // grouped on a dim column, so the split adds no shuffle of its
+      // own; summing `v` keeps the payload in the shuffle (a key-only
+      // hot partition compresses below the 64k threshold)
+      val q = fact.join(dim, "k").groupBy($"g")
+        .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
+      // collect, so this queryExecution carries the finalized adaptive plan
+      val got = q.collect()
+      assert(got.map(_.getLong(1)).sum === 200000L)
+      assert(got.map(_.getLong(2)).sum === 199999L * 200000L / 2)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("skew=true"), plan)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("bucketed tables join without an exchange on the bucketed key") {
