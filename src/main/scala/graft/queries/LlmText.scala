@@ -53,7 +53,7 @@ object LlmText extends QueryModule {
     "q_fast_vec"   -> "fast vector query")
 
   /** documents + near-dup copies (one appended word). */
-  private[graft] def withNearDups(s: SparkSession, dir: String): DataFrame = {
+  private def withNearDups(s: SparkSession, dir: String): DataFrame = {
     val d = Engine.table(s, dir, "documents")
     d.select(d("doc_id"), d("text"), d("source"))
       .unionByName(d.filter(d("doc_id") % 10 === 0).select(
@@ -252,14 +252,14 @@ object LlmText extends QueryModule {
     * frame — the per-doc sketch [[bandFrameOf]] bands, also consumed
     * directly by the LSH precision audit.
     */
-  private[graft] def sigFrameOf(docs: DataFrame): DataFrame =
+  private def sigFrameOf(docs: DataFrame): DataFrame =
     docs
       .withColumn("shingles", graft.plans.Shingles(col("text"), 3))
       .withColumn("sigs", graft.plans.MinHashSigs(col("shingles"), K, MinP))
       .select(Seq(col("doc_id")) ++
         (0 until K).map(j => col("sigs").getItem(j).as(s"s$j")): _*)
 
-  private[graft] def bandFrameOf(docs: DataFrame): DataFrame = {
+  private def bandFrameOf(docs: DataFrame): DataFrame = {
     val sig = sigFrameOf(docs)
     val bandStructs = (0 until Bands).map(b => struct(
       lit(b).as("band"),
@@ -363,7 +363,7 @@ object LlmText extends QueryModule {
     * incremental (new-batch-vs-corpus) dedup probes. Bucketed on the
     * probe key so the batch join shuffles ONLY the new side.
     */
-  private[graft] def persistedOldIndex(
+  private def persistedOldIndex(
       s: SparkSession, dir: String): DataFrame =
     bucketedBandTable(s, s"graft_mh_old_${math.abs(dir.hashCode)}",
       bandFrameOf(Engine.table(s, dir, "documents")

@@ -1753,7 +1753,7 @@ class OperatorSpec extends AnyFunSuite {
     val sf = sfStreamAlias // shadow: isolated lifecycle for the crash
     val committed = LlmSim.persistedIvfCells(spark, sf)
     val nCommitted = committed.count()
-    val waveN = LlmSim.ivfStreamWave(spark, sf).count()
+    val waveN = LlmSim.foldWave(spark, sf, 1).count()
     assert(waveN > 0, "empty vector wave fixture")
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[Exception] {
@@ -1850,7 +1850,7 @@ class OperatorSpec extends AnyFunSuite {
     // wave 1 seals; pin the as-of-seal-1 read and the fold (whose cut
     // point seal 1 is) BEFORE the seal advances
     val n1 = LlmSim.streamedIvfSegment(spark, sf4).count()
-    val fold1 = LlmSim.persistedSegFold(spark, sf4).count()
+    val fold1 = LlmSim.foldCells(spark, sf4, 1).count()
     // wave 2 with a mid-wave crash: batch ids continue from the
     // resumed checkpoint (wave 1 consumed 0..3), the cut lands after
     // wave 2's second batch — the at-least-once window across a
@@ -1869,7 +1869,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(cut, "chaos fired but the stream did not propagate the cut")
     val all = LlmSim.streamedIvfSegmentAll(spark, sf4)
     val w2 = all.filter($"vec_id" >= LlmSim.IvfSegSeal1Bound).count()
-    assert(w2 === LlmSim.ivfStreamWave2(spark, sf4).count(),
+    assert(w2 === LlmSim.foldWave(spark, sf4, 2).count(),
       "wave 2 landed short or long (dup or loss through the crash)")
     assert(all.select($"vec_id").distinct().count() === all.count(),
       "a re-delivered wave-2 micro-batch double-appended")
@@ -1879,7 +1879,7 @@ class OperatorSpec extends AnyFunSuite {
     // the determinism every seal-1 gate (and the fold) rests on
     assert(LlmSim.streamedIvfSegment(spark, sf4).count() === n1,
       "the as-of-seal-1 read leaked the later wave")
-    assert(LlmSim.persistedSegFold(spark, sf4).count() === fold1,
+    assert(LlmSim.foldCells(spark, sf4, 1).count() === fold1,
       "the fold's cut-point read moved after the seal advanced")
     // one probe, both generations: query 19's twin served from INSIDE
     // the folded index, query 20's from the post-cut tail
@@ -1940,7 +1940,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     val (mCells, _) = LlmSim.maintainIvfCommit(spark, sf)
     val seg = LlmSim.streamedIvfSegment(spark, sf)
-    val f = LlmSim.persistedSegFold(spark, sf)
+    val f = LlmSim.foldCells(spark, sf, 1)
     // conservation: committed + segment, nothing lost or doubled
     assert(f.count() === mCells.count() + seg.count(),
       "fold lost or duplicated rows")
@@ -1969,7 +1969,7 @@ class OperatorSpec extends AnyFunSuite {
     // centroid BYTE-IDENTICAL (pass-through, not recompute), changed
     // cells got fresh quantized means — and query 19's twin surfaces
     // through FOLD routing (the index proper, not a union bolt-on)
-    val fcent = LlmSim.segFoldCentroids(spark, sf)
+    val fcent = LlmSim.foldCentroids(spark, sf, 1)
     val chg = f.filter($"split" || $"vec_id" >= 2 * LlmSim.ArrivalIdBase)
       .select($"cid").distinct().as[Int].collect().toSet
     assert(chg.nonEmpty, "fold changed no cells")
@@ -2034,7 +2034,7 @@ class OperatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val segC = LlmSim.streamedRpqSegment(spark, sf)
-    val wave = LlmSim.ivfStreamWave(spark, sf)
+    val wave = LlmSim.foldWave(spark, sf, 1)
     assert(segC.count() === wave.count(),
       "codes segment row count diverges from the wave")
     // the landed codes ARE the frozen-codebook batch encode — the
@@ -2061,8 +2061,8 @@ class OperatorSpec extends AnyFunSuite {
     import graft.queries.LlmSim
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val f = LlmSim.persistedSegFold(spark, sf)
-    val codes = LlmSim.segFoldRpqCodes(spark, sf)
+    val f = LlmSim.foldCells(spark, sf, 1)
+    val codes = LlmSim.foldCodes(spark, sf, 1)
     // coverage: exactly one code row per folded row, cid-aligned —
     // a code under a stale cid would be unreachable by the routed
     // literal-cid pushdown (the silent-miss failure mode)
@@ -2078,7 +2078,7 @@ class OperatorSpec extends AnyFunSuite {
     // split surfaces here as a code mismatch.
     val cbs = LlmSim.pqCbStructs(LlmSim.persistedRpqCb(spark, sf))
     val uniform = f
-      .join(broadcast(LlmSim.segFoldCentroids(spark, sf)), Seq("cid"))
+      .join(broadcast(LlmSim.foldCentroids(spark, sf, 1)), Seq("cid"))
       .select($"cid", $"vec_id",
         LlmSim.pqEncodeCol(zip_with($"v", $"cv", (x, y) => x - y), cbs)
           .as("codes"))
@@ -4140,8 +4140,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(LlmSim.rpqCbEpochOf(spark, sf5) === 1)
 
     // ---- fold-2 identity pins (VERDICT r16 #3) ----
-    val f1 = LlmSim.persistedSegFold(spark, sf5)
-    val f2 = LlmSim.persistedSegFold2(spark, sf5)
+    val f1 = LlmSim.foldCells(spark, sf5, 1)
+    val f2 = LlmSim.foldCells(spark, sf5, 2)
     val tailN = LlmSim.streamedIvfSegmentAll(spark, sf5)
       .filter($"vec_id" >= LlmSim.IvfSegSeal1Bound).count()
     assert(tailN > 0, "empty wave-2 tail — fixture degenerate")
@@ -4157,18 +4157,18 @@ class OperatorSpec extends AnyFunSuite {
       "every cell fold-2-touched — identity pin vacuous at this corpus")
     // THE pin: cells fold 2 did not touch keep their gen-1 codes
     // byte-for-byte (their gen-2 centroid IS their gen-1 centroid)
-    val g1codes = LlmSim.segFoldRpqCodes(spark, sf5)
+    val g1codes = LlmSim.foldCodes(spark, sf5, 1)
       .select($"vec_id", $"codes".as("c1"))
-    val g2codes = LlmSim.segFold2RpqCodes(spark, sf5)
+    val g2codes = LlmSim.foldCodes(spark, sf5, 2)
       .select($"vec_id", $"codes".as("c2"))
     val cmp = untouched.join(g1codes, Seq("vec_id"))
       .join(g2codes, Seq("vec_id"))
     assert(cmp.filter(!($"c1" <=> $"c2")).count() === 0L,
       "fold 2 rewrote an untouched cell's codes")
     // and their centroids pass through bit-identically
-    val cent1 = LlmSim.segFoldCentroids(spark, sf5)
+    val cent1 = LlmSim.foldCentroids(spark, sf5, 1)
       .select($"cid", $"cv".as("cv1"))
-    val cent2 = LlmSim.segFold2Centroids(spark, sf5)
+    val cent2 = LlmSim.foldCentroids(spark, sf5, 2)
       .select($"cid", $"cv".as("cv2"))
     assert(untouched.select($"cid").distinct()
       .join(cent1, Seq("cid")).join(cent2, Seq("cid"))
@@ -4190,7 +4190,7 @@ class OperatorSpec extends AnyFunSuite {
         : DataFrame =
       LlmSim.pqProbeCore(q, p._1,
         p._2.join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-        LlmSim.persistedSegFold2(spark, sf5)
+        LlmSim.foldCells(spark, sf5, 2)
           .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
         p._3, LlmSim.PqTopR, residual = true)
     // resolve the epoch-1 posture and build the pinned plan NOW —
@@ -4279,20 +4279,20 @@ class OperatorSpec extends AnyFunSuite {
     // rebuild — a vacuum can never strand a reader permanently)
     val f1Before = f1.select($"cid", $"vec_id").collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
-    val c1Before = LlmSim.segFoldRpqCodes(spark, sf5)
+    val c1Before = LlmSim.foldCodes(spark, sf5, 1)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap
     val e = LlmSim.maintEpochOf(spark, sf5)
     val h = math.abs(sf5.hashCode)
-    LlmSim.vacuumSegFold1(spark, sf5)
+    LlmSim.vacuumFoldLineage(spark, sf5, 1)
     Seq(s"graft_ivf_segf_me${e}_$h", s"graft_ivf_segf_cent_me${e}_$h",
         s"graft_ivf_segf_rpq_me${e}_$h").foreach(t =>
       assert(!spark.catalog.tableExists(t), s"vacuum left $t"))
-    assert(LlmSim.persistedSegFold(spark, sf5)
+    assert(LlmSim.foldCells(spark, sf5, 1)
       .select($"cid", $"vec_id").collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet === f1Before,
       "post-vacuum fold-1 rebuild diverged")
-    assert(LlmSim.segFoldRpqCodes(spark, sf5)
+    assert(LlmSim.foldCodes(spark, sf5, 1)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap === c1Before,
       "post-vacuum fold-1 codes rebuild diverged")
@@ -4321,13 +4321,13 @@ class OperatorSpec extends AnyFunSuite {
     // more round shifts SplitCidOffset past 2^31. The guard must fire
     // with the documented message BEFORE any work — no job, no table,
     // no torn artifact at the ceiling.
-    val f2 = LlmSim.persistedSegFold2(spark, sf5)
+    val f2 = LlmSim.foldCells(spark, sf5, 2)
     val tablesBefore = spark.catalog.listTables().count()
     val ex = intercept[IllegalArgumentException] {
       LlmSim.splitCellsFixpoint(
         f2.select($"cid", $"vec_id", $"v"), LlmSim.IvfPSplitRows,
         maxRounds = 1,
-        roundBase = 3 * LlmSim.MaintSplitRounds + LlmSim.Fold2SplitRounds)
+        roundBase = 3 * LlmSim.MaintSplitRounds + LlmSim.foldGen(2).maxRounds)
     }
     assert(ex.getMessage.contains("split-cid namespace exhausted"),
       s"guard fired with the wrong message: ${ex.getMessage}")
@@ -4357,7 +4357,7 @@ class OperatorSpec extends AnyFunSuite {
     val inWindow = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val writer = new Thread(() =>
-      try LlmSim.renumberEstate(spark, sf5, chaos = () => {
+      try LlmSim.renumberEstateGen(spark, sf5, 2, chaos = () => {
         inWindow.countDown()
         assert(release.await(120, java.util.concurrent.TimeUnit.SECONDS),
           "reader never released the publish window")
@@ -4383,7 +4383,7 @@ class OperatorSpec extends AnyFunSuite {
       "gen-2 grace read diverged after the namespace swap")
 
     // ---- re-key moves KEYS, never geometry or payloads -------------
-    val (rnCells, rnCent, rnCodes) = LlmSim.renumberedEstate(spark, sf5)
+    val (rnCells, rnCent, rnCodes) = LlmSim.renumberedEstateGen(spark, sf5, 2)
     val live = f2.join(broadcast(tomb), Seq("vec_id"), "left_anti")
     // density: new cids are exactly 0..n-1, far below SplitCidOffset
     val cids = rnCells.select($"cid").distinct()
@@ -4427,8 +4427,8 @@ class OperatorSpec extends AnyFunSuite {
     // ---- idempotent re-entry: artifacts byte-stable -----------------
     val cellsBefore = rnCells.select($"cid", $"vec_id").collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
-    LlmSim.renumberEstate(spark, sf5)
-    assert(LlmSim.renumberedEstate(spark, sf5)._1
+    LlmSim.renumberEstateGen(spark, sf5, 2)
+    assert(LlmSim.renumberedEstateGen(spark, sf5, 2)._1
       .select($"cid", $"vec_id").collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet === cellsBefore,
       "renumber re-entry rewrote the estate")
@@ -4437,20 +4437,20 @@ class OperatorSpec extends AnyFunSuite {
     java.nio.file.Files.deleteIfExists(nsPtr.toPath): Unit
     assert(LlmSim.nsGenOf(spark, sf5) === 1)
     intercept[RuntimeException] {
-      LlmSim.renumberEstate(spark, sf5, chaos = () =>
+      LlmSim.renumberEstateGen(spark, sf5, 2, chaos = () =>
         throw new RuntimeException("graft-chaos: die before the swap"))
     }
     assert(LlmSim.nsGenOf(spark, sf5) === 1,
       "crashed renumber attempt published the pointer anyway")
     assert(rowsOf(pinned) === baseline,
       "gen-2 read diverged inside the renumber crash window")
-    LlmSim.renumberEstate(spark, sf5)
+    LlmSim.renumberEstateGen(spark, sf5, 2)
     assert(LlmSim.nsGenOf(spark, sf5) === 2,
       "re-entry did not complete the missing pointer swap")
 
     // ---- fold 3: the namespace is actually reopened -----------------
-    val f3 = LlmSim.persistedSegFold3(spark, sf5)
-    val w3n = LlmSim.ivfWave3(spark, sf5).count()
+    val f3 = LlmSim.foldCells(spark, sf5, 3)
+    val w3n = LlmSim.foldWave(spark, sf5, 3).count()
     assert(w3n > 0, "empty wave-3 tail — fixture degenerate")
     assert(f3.count() === rnCells.count() + w3n,
       "fold 3 lost or doubled rows absorbing the tail")
@@ -4466,13 +4466,13 @@ class OperatorSpec extends AnyFunSuite {
     // the untouched-cell identity, third generation: cells fold 3
     // did not touch keep their renumbered epoch-2 codes byte-for-byte
     val chg3 = f3
-      .filter($"split" || $"vec_id" >= LlmSim.IvfWave3Band)
+      .filter($"split" || $"vec_id" >= LlmSim.foldGen(3).band)
       .select($"cid").distinct()
     val untouched3 = f3.join(chg3, Seq("cid"), "left_anti")
       .select($"cid", $"vec_id")
     assert(untouched3.count() > 0,
       "every cell fold-3-touched — identity pin vacuous at this corpus")
-    val f3codes = LlmSim.segFold3RpqCodes(spark, sf5)
+    val f3codes = LlmSim.foldCodes(spark, sf5, 3)
       .select($"vec_id", $"codes".as("c3"))
     assert(untouched3
       .join(rnCodes.select($"vec_id", $"codes".as("c2")), Seq("vec_id"))
@@ -4485,17 +4485,17 @@ class OperatorSpec extends AnyFunSuite {
     // pre-renumber epoch-2 codes are grace-only on this alias; the
     // verb drops them, a double run no-ops, and a grace reader
     // re-derives hash-identically (write-once rebuild)
-    val c2Before = LlmSim.segFold2RpqCodes(spark, sf5)
+    val c2Before = LlmSim.foldCodes(spark, sf5, 2)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap
     val e5 = LlmSim.maintEpochOf(spark, sf5)
     val h5 = math.abs(sf5.hashCode)
-    LlmSim.vacuumFoldLineage(spark, sf5)
+    LlmSim.vacuumFoldLineage(spark, sf5, 2)
     Seq(s"graft_ivf_segf_me${e5}_$h5", s"graft_ivf_segf2_me${e5}_$h5",
         s"graft_ivf_segf2_rpq_me${e5}_$h5").foreach(t =>
       assert(!spark.catalog.tableExists(t), s"vacuum left $t"))
-    LlmSim.vacuumFoldLineage(spark, sf5) // double-run no-op
-    assert(LlmSim.segFold2RpqCodes(spark, sf5)
+    LlmSim.vacuumFoldLineage(spark, sf5, 2) // double-run no-op
+    assert(LlmSim.foldCodes(spark, sf5, 2)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap === c2Before,
       "post-vacuum fold-2 codes rebuild diverged")
@@ -4515,7 +4515,7 @@ class OperatorSpec extends AnyFunSuite {
       new java.io.File(metaDir, "_graft_rpq_cb_epoch").toPath): Unit
     val nsPtr = new java.io.File(metaDir, "_graft_ns_gen")
     java.nio.file.Files.deleteIfExists(nsPtr.toPath): Unit
-    LlmSim.segFold3RpqCodes(spark, sf5): Unit
+    LlmSim.foldCodes(spark, sf5, 3): Unit
     assert(LlmSim.nsGenOf(spark, sf5) === 2,
       "fold-3 chain did not settle namespace generation 2")
 
@@ -4524,7 +4524,7 @@ class OperatorSpec extends AnyFunSuite {
     // roundBase must name generation 2 and prescribe renumbering to
     // generation 3 — the error is the lifecycle's signpost, so its
     // text must track the generation it fires in
-    val f3 = LlmSim.persistedSegFold3(spark, sf5)
+    val f3 = LlmSim.foldCells(spark, sf5, 3)
     val tablesBefore = spark.catalog.listTables().count()
     val ex = intercept[IllegalArgumentException] {
       LlmSim.splitCellsFixpoint(
@@ -4556,8 +4556,8 @@ class OperatorSpec extends AnyFunSuite {
         graft.operators.VectorOps.toDouble($"embedding").as("qv"))
     val cbs2 = LlmSim.servingRpqPosture(spark, sf5)._3
     val pinned = LlmSim.pqProbeCore(q,
-      LlmSim.segFold3Centroids(spark, sf5),
-      LlmSim.segFold3RpqCodes(spark, sf5),
+      LlmSim.foldCentroids(spark, sf5, 3),
+      LlmSim.foldCodes(spark, sf5, 3),
       f3, cbs2, LlmSim.PqTopR, residual = true)
     val baseline = rowsOf(pinned)
     assert(baseline.nonEmpty)
@@ -4599,7 +4599,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(spark.catalog.tableExists(t), s"missing artifact $t"))
 
     // ---- density at EVERY generation ------------------------------
-    val (rnCells, _, _) = LlmSim.renumberedEstate(spark, sf5)
+    val (rnCells, _, _) = LlmSim.renumberedEstateGen(spark, sf5, 2)
     val (rn2Cells, rn2Cent, rn2Codes) =
       LlmSim.renumberedEstateGen(spark, sf5, 3)
     Seq(("2", rnCells), ("3", rn2Cells)).foreach { case (g, cells) =>
@@ -4613,7 +4613,7 @@ class OperatorSpec extends AnyFunSuite {
     // ---- re-key #2 moves KEYS, never geometry or payloads ---------
     assert(rn2Cells.count() === f3.count(),
       "renumber #2 lost or invented rows")
-    assert(LlmSim.segFold3RpqCodes(spark, sf5)
+    assert(LlmSim.foldCodes(spark, sf5, 3)
       .select($"vec_id", $"codes".as("c3"))
       .join(rn2Codes.select($"vec_id", $"codes".as("c4")), Seq("vec_id"))
       .filter(!($"c3" <=> $"c4")).count() === 0L,
@@ -4631,7 +4631,7 @@ class OperatorSpec extends AnyFunSuite {
     // ---- crash window at generation 3: artifacts written, pointer
     // behind — re-entry completes exactly the missing swap ----------
     java.nio.file.Files.deleteIfExists(nsPtr.toPath): Unit
-    LlmSim.renumberEstate(spark, sf5) // restore the gen-2 publish
+    LlmSim.renumberEstateGen(spark, sf5, 2) // restore the gen-2 publish
     assert(LlmSim.nsGenOf(spark, sf5) === 2)
     intercept[RuntimeException] {
       LlmSim.renumberEstateGen(spark, sf5, 3, chaos = () =>
@@ -4646,8 +4646,8 @@ class OperatorSpec extends AnyFunSuite {
       "re-entry did not complete the missing gen-3 pointer swap")
 
     // ---- fold 4: the generational cycle ITERATES ------------------
-    val f4 = LlmSim.persistedSegFold4(spark, sf5)
-    val w4n = LlmSim.ivfWave4(spark, sf5).count()
+    val f4 = LlmSim.foldCells(spark, sf5, 4)
+    val w4n = LlmSim.foldWave(spark, sf5, 4).count()
     assert(w4n > 0, "empty wave-4 tail — fixture degenerate")
     assert(f4.count() === rn2Cells.count() + w4n,
       "fold 4 lost or doubled rows absorbing the tail")
@@ -4660,7 +4660,7 @@ class OperatorSpec extends AnyFunSuite {
     // untouched-cell identity, FOURTH generation: cells fold 4 did
     // not touch keep their renumber-#2'd epoch-2 codes byte-for-byte
     val chg4 = f4
-      .filter($"split" || $"vec_id" >= LlmSim.IvfWave4Band)
+      .filter($"split" || $"vec_id" >= LlmSim.foldGen(4).band)
       .select($"cid").distinct()
     val untouched4 = f4.join(chg4, Seq("cid"), "left_anti")
       .select($"cid", $"vec_id")
@@ -4668,10 +4668,29 @@ class OperatorSpec extends AnyFunSuite {
       "every cell fold-4-touched — identity pin vacuous at this corpus")
     assert(untouched4
       .join(rn2Codes.select($"vec_id", $"codes".as("c4")), Seq("vec_id"))
-      .join(LlmSim.segFold4RpqCodes(spark, sf5)
+      .join(LlmSim.foldCodes(spark, sf5, 4)
         .select($"vec_id", $"codes".as("c5")), Seq("vec_id"))
       .filter(!($"c4" <=> $"c5")).count() === 0L,
       "fold 4 rewrote an untouched cell's codes")
+
+    // ---- an undefined generation fails loudly, naming itself, and
+    // leaves nothing behind: no fold generation reads a namespace
+    // generation 4, and the lineage has no fold generation 5
+    val tablesBeforeUndefined = spark.catalog.listTables().count()
+    val rn4 = intercept[IllegalArgumentException] {
+      LlmSim.renumberEstateGen(spark, sf5, 4)
+    }
+    assert(rn4.getMessage.contains("generation 4"),
+      s"undefined renumber did not name its generation: ${rn4.getMessage}")
+    val fold5 = intercept[IllegalArgumentException] {
+      LlmSim.foldCells(spark, sf5, 5)
+    }
+    assert(fold5.getMessage.contains("generation 5"),
+      s"undefined fold did not name its generation: ${fold5.getMessage}")
+    assert(spark.catalog.listTables().count() === tablesBeforeUndefined,
+      "an undefined generation left a torn artifact")
+    assert(LlmSim.nsGenOf(spark, sf5) === 3,
+      "an undefined renumber moved the namespace pointer")
   }
 
   test("retrain trigger + unified vacuum: distortion drops across the codebook swap; vacuumEstate sweeps every family, double-runs as a no-op, re-derives exactly") {
@@ -4680,7 +4699,7 @@ class OperatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.DataFrame
     import spark.implicits._
     val sf5 = sfRetrainData
-    LlmSim.segFold4RpqCodes(spark, sf5): Unit // force the full estate
+    LlmSim.foldCodes(spark, sf5, 4): Unit // force the full estate
 
     // ---- the retrain TRIGGER (VERDICT r17 #2): quantization
     // distortion at the serving geometry DROPS across the epoch-1→2
@@ -4689,14 +4708,14 @@ class OperatorSpec extends AnyFunSuite {
     // epoch 2 trained on the current survivors)
     val tomb = LlmSim.persistedMaintTombstones(spark, sf5)
       .select($"vec_id")
-    val live = LlmSim.persistedSegFold2(spark, sf5)
+    val live = LlmSim.foldCells(spark, sf5, 2)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
       .select($"cid", $"vec_id", $"v")
-    val g2cent = LlmSim.segFold2Centroids(spark, sf5)
+    val g2cent = LlmSim.foldCentroids(spark, sf5, 2)
     val cb1 = LlmSim.cbArrOf(s"spec:rpq1:$sf5",
       LlmSim.persistedRpqCb(spark, sf5))
     val d1 = LlmSim.rpqDistortion(live, g2cent,
-      LlmSim.segFold2RpqCodes(spark, sf5)
+      LlmSim.foldCodes(spark, sf5, 2)
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
       cb1).head()
     LlmSim.retrainRpqCodebooks(spark, sf5)
@@ -4738,8 +4757,8 @@ class OperatorSpec extends AnyFunSuite {
     // materialize the priced artifacts (the column is derived
     // arithmetically — it prices the sweep whether or not the grace
     // generations happen to be materialized in this catalog yet)
-    LlmSim.segFold2RpqCodes(spark, sf): Unit
-    LlmSim.segFold3RpqCodes(spark, sf): Unit
+    LlmSim.foldCodes(spark, sf, 2): Unit
+    LlmSim.foldCodes(spark, sf, 3): Unit
     val eG = LlmSim.maintEpochOf(spark, sf)
     val hG = math.abs(sf.hashCode)
     val (rnT, rnCentT, rnCodesT) = LlmSim.renumberTables(spark, sf, 2)
@@ -4771,9 +4790,9 @@ class OperatorSpec extends AnyFunSuite {
         graft.operators.VectorOps.toDouble($"embedding").as("qv"))
     // the pinned SERVING reader: fold-4 posture (r19), resolved now
     val pinned = LlmSim.pqProbeCore(q,
-      LlmSim.segFold4Centroids(spark, sf5),
-      LlmSim.segFold4RpqCodes(spark, sf5),
-      LlmSim.persistedSegFold4(spark, sf5),
+      LlmSim.foldCentroids(spark, sf5, 4),
+      LlmSim.foldCodes(spark, sf5, 4),
+      LlmSim.foldCells(spark, sf5, 4),
       p2._3, LlmSim.PqTopR, residual = true)
     val baseline = rowsOf(pinned)
     assert(baseline.nonEmpty)
@@ -4781,7 +4800,7 @@ class OperatorSpec extends AnyFunSuite {
     val h5 = math.abs(sf5.hashCode)
     def exists(t: String): Boolean = spark.catalog.tableExists(t)
     // state to re-derive against after the sweep
-    val c1Before = LlmSim.segFoldRpqCodes(spark, sf5)
+    val c1Before = LlmSim.foldCodes(spark, sf5, 1)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap
     val dfBefore = graft.queries.LlmSim
@@ -4839,7 +4858,7 @@ class OperatorSpec extends AnyFunSuite {
     // whole dropped chain (segments re-stream, fold re-splits) and
     // land byte-identical; the df epoch re-mints through the marker
     // protocol and matches
-    assert(LlmSim.segFoldRpqCodes(spark, sf5)
+    assert(LlmSim.foldCodes(spark, sf5, 1)
       .select($"vec_id", $"codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toMap === c1Before,
       "post-vacuum fold-1 codes re-derivation diverged")
@@ -4901,7 +4920,7 @@ class OperatorSpec extends AnyFunSuite {
     // their first build is legitimate work, not a fast-path miss
     SparkEntry.queries("q_llm_index_health")(spark, sf)
       .write.format("noop").mode("overwrite").save()
-    LlmSim.segFold2RpqCodes(spark, sf): Unit
+    LlmSim.foldCodes(spark, sf, 2): Unit
     // r19 fast-path pin: with every artifact committed in this
     // catalog, RESOLVING the lifecycle readers (the DataFrame
     // construction a probe's fn does before its action) must run ZERO
@@ -4921,12 +4940,12 @@ class OperatorSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       spark.sparkContext.setJobGroup(group, group)
-      LlmSim.persistedSegFold4(spark, sf): Unit
-      LlmSim.segFold4Centroids(spark, sf): Unit
-      LlmSim.segFold4RpqCodes(spark, sf): Unit
+      LlmSim.foldCells(spark, sf, 4): Unit
+      LlmSim.foldCentroids(spark, sf, 4): Unit
+      LlmSim.foldCodes(spark, sf, 4): Unit
       LlmSim.renumberedEstateGen(spark, sf, 3): Unit
-      LlmSim.segFold3RpqCodes(spark, sf): Unit
-      LlmSim.segFold2RpqCodes(spark, sf): Unit
+      LlmSim.foldCodes(spark, sf, 3): Unit
+      LlmSim.foldCodes(spark, sf, 2): Unit
       LlmSim.retrainRpqCodebooks(spark, sf)
       org.apache.spark.sql.graftbridge.SqlBridge.waitListenerBus(spark)
     } finally {
