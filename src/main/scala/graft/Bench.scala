@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -145,13 +146,17 @@ object Bench {
     import stats.section
 
     case class Run(t: Double, jobs: Long, tasks: Long, build: Double,
-        buildJobs: Long)
+        buildJobs: Long, compiles: Long)
     // `t` times the query-function call (`build`: DataFrame
     // construction, lifecycle reads, stream drains) plus the noop-sink
-    // execution; the bus drain between the two is not timed.
+    // execution; the bus drain between the two is not timed. `compiles`
+    // counts the generated classes the run compiled (codegen cache
+    // misses, JVM-wide: the bench is sequential).
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def runOnce(name: String): Run = section(name) {
       val j0 = stats.jobs
       val k0 = stats.tasks
+      val c0 = compiled
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val build = (System.nanoTime() - t0) / 1e9
@@ -160,7 +165,8 @@ object Bench {
       val exec = time(df.write.format("noop").mode("overwrite").save())
       spark.catalog.clearCache() // streaming replays cache their sinks
       stats.drain()
-      Run(build + exec, stats.jobs - j0, stats.tasks - k0, build, buildJobs)
+      Run(build + exec, stats.jobs - j0, stats.tasks - k0, build, buildJobs,
+        compiled - c0)
     }
 
     // Rolling box probe: a fixed 60-ms pure-codegen kernel timed every
@@ -202,7 +208,8 @@ object Bench {
     val only = args.toSet
     val headlines = SparkEntry.headlines.toSet
     case class QRes(name: String, t: Double, jobs: Long, tasks: Long,
-        tMin: Double, start: Double, build: Double, buildJobs: Long)
+        tMin: Double, start: Double, build: Double, buildJobs: Long,
+        compiles: Long)
     val toRun = SparkEntry.all
       .filter { case (name, _) => only.isEmpty || only(name) }
     val measured = toRun.zipWithIndex.map { case ((name, _), i) =>
@@ -217,14 +224,15 @@ object Bench {
         // run (all three counts should match; a divergence would itself
         // be a finding)
         val m = runs.minBy(r => math.abs(r.t - med))
-        QRes(name, med, m.jobs, m.tasks, ts.head, start, m.build, m.buildJobs)
+        QRes(name, med, m.jobs, m.tasks, ts.head, start, m.build, m.buildJobs,
+          m.compiles)
       } catch {
         case e: Throwable =>
           // Never swallow: a silent -1 cost round 6 its bench. The
           // driver captures stderr, so the stack trace is auditable.
           System.err.println(s"[bench] $name FAILED: $e")
           e.printStackTrace()
-          QRes(name, -1.0, -1L, -1L, -1.0, start, -1.0, -1L)
+          QRes(name, -1.0, -1L, -1L, -1.0, start, -1.0, -1L, -1L)
       }
     }
     rollingProbe(toRun.size)
@@ -355,7 +363,8 @@ object Bench {
       // sidecar-only forensics: per-query start offsets (seconds since
       // record start — maps a burst window to wall-clock), per-query job
       // counts (plan-size fingerprint), the time and jobs spent in the
-      // query function (`build`, part of `queries`), the full
+      // query function (`build`, part of `queries`), the generated
+      // classes the run compiled (`compiles`), the full
       // rolling-probe series, and the complete retime table
       def perQuery(key: String, v: QRes => Any): String =
         measured.map(r => s""""${r.name}":${v(r)}""")
@@ -364,6 +373,7 @@ object Bench {
         perQuery("jobs", _.jobs) + perQuery("tasks", _.tasks) +
         perQuery("build", r => r4(r.build)) +
         perQuery("build_jobs", _.buildJobs) +
+        perQuery("compiles", _.compiles) +
         s""""rolling":$rollingJson,"retimes":$retimesJson,"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get(out),

@@ -65,7 +65,7 @@ object SubjectOps extends QueryModule {
         val updates = addO.unionByName(addC).unionByName(remO)
         Replay.run(s, updates, mode = "append", cacheKey = s"updates:$dir",
             bigSink = true) { st =>
-          RetractionJoin(st.as[RetractionJoin.Upd]).toDF()
+          RetractionJoin(st.as(RetractionJoin.UpdEnc)).toDF()
         }
           .groupBy($"leftId", $"rightId", $"combined")
           .agg(sum($"action").as("net"))

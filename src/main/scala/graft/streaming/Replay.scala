@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.io.File
+import graft.operators.TxnMarker
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -31,6 +32,18 @@ object Replay {
   // floor.
   private val StreamPartitions = 4
 
+  // Replay inputs and parquet sink dirs outlive their drain (`inputCache`
+  // and the returned frame read them), so they go when the JVM exits;
+  // tmpfs outlives the process, and without this every drain left its
+  // dirs in RAM.
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[File]()
+  sys.addShutdownHook(exitDirs.forEach(d => TxnMarker.rmTree(d)))
+  private def removedAtExit(tag: String): String = {
+    val d = graft.Engine.scratchDir(tag)
+    exitDirs.add(new File(d))
+    d
+  }
+
   /** Replay `input` as a stream through `build`, drain with AvailableNow,
     * return the sink contents. `mode` is the sink output mode
     * ("complete" for windowed aggs, "append" for joins/dedup/fMGWS).
@@ -47,7 +60,7 @@ object Replay {
     val key = if (cacheKey.isEmpty) s"anon_${counter.incrementAndGet()}"
       else s"$cacheKey/$nFiles"
     val (dir, schema) = inputCache.getOrElseUpdate(key, {
-      val d = graft.Engine.scratchDir("graft_replay")
+      val d = removedAtExit("graft_replay")
       input.repartition(nFiles).write.mode("overwrite").parquet(s"$d/in")
       (d, spark.read.parquet(s"$d/in").schema)
     })
@@ -72,26 +85,29 @@ object Replay {
     // Engine's non-forking local filesystem, which makes the file
     // commits cheap enough).
     val parquetSink = mode == "append" && bigSink
-    val sinkDir = if (parquetSink) graft.Engine.scratchDir("sinkout") else ""
+    val sinkDir = if (parquetSink) removedAtExit("sinkout") else ""
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toLong)
     var outSchema: org.apache.spark.sql.types.StructType = null
-    val q =
-      try {
-        val streamed = build(stream)
-        outSchema = streamed.schema
-        val writer = streamed.writeStream
-          .outputMode(mode)
-          // fresh per-run scratch checkpoint (tmpfs when available): this
-          // replay drains once and discards; restart-durable checkpoints
-          // are exercised by q_stream_restart with an explicit location
-          .option("checkpointLocation", graft.Engine.scratchDir("ckpt"))
-          .trigger(Trigger.AvailableNow())
-        if (parquetSink)
-          writer.format("parquet").option("path", s"$sinkDir/out").start()
-        else writer.format("memory").queryName(qname).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
+    // fresh per-run scratch checkpoint (tmpfs when available): this
+    // replay drains once and discards it; restart-durable checkpoints
+    // are exercised by q_stream_restart with an explicit location
+    val ckpt = new File(graft.Engine.scratchDir("ckpt"))
+    try {
+      val q =
+        try {
+          val streamed = build(stream)
+          outSchema = streamed.schema
+          val writer = streamed.writeStream
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt.getPath)
+            .trigger(Trigger.AvailableNow())
+          if (parquetSink)
+            writer.format("parquet").option("path", s"$sinkDir/out").start()
+          else writer.format("memory").queryName(qname).start()
+        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      q.awaitTermination()
+    } finally TxnMarker.rmTree(ckpt)
     if (parquetSink)
       // explicit schema: a replay whose every batch emitted zero rows
       // leaves only _spark_metadata behind, and schema inference would

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming inner equi-join with add/remove (retraction) bag semantics —
@@ -37,6 +38,16 @@ object RetractionJoin {
       left: Map[Long, (Double, Int)],
       right: Map[Long, (Double, Int)])
 
+  // Encoders built once per JVM. The state's Map (de)serializers hold
+  // lambda variables whose ids are minted each time an encoder is derived
+  // (`spark.implicits._`) and each time its deserializer is resolved; the
+  // ids reach the generated source, so the state projections missed the
+  // codegen cache on every drain. The state encoder is therefore held
+  // resolved and bound: resolving it again mints nothing.
+  val UpdEnc: Encoder[Upd] = Encoders.product[Upd]
+  private val BagStateEnc: Encoder[BagState] = ExpressionEncoder[BagState]().resolveAndBind()
+  private val OutEnc: Encoder[Out] = Encoders.product[Out]
+
   def joinFn(key: Long, updates: Iterator[Upd], state: GroupState[BagState]): Iterator[Out] = {
     var st = state.getOption.getOrElse(BagState(Map.empty, Map.empty))
     val out = scala.collection.mutable.ArrayBuffer[Out]()
@@ -62,10 +73,8 @@ object RetractionJoin {
   }
 
   /** Wire the operator over a (possibly streaming) update Dataset. */
-  def apply(updates: Dataset[Upd]): Dataset[Out] = {
-    val spark: SparkSession = updates.sparkSession
-    import spark.implicits._
-    updates.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(joinFn)
-  }
+  def apply(updates: Dataset[Upd]): Dataset[Out] =
+    updates.groupByKey(_.key)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.NoTimeout)(joinFn)(BagStateEnc, OutEnc)
 }

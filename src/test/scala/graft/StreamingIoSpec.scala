@@ -7,6 +7,7 @@ import graft.streaming.{Replay, RetractionJoin}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,12 +58,15 @@ class StreamingIoSpec extends AnyFunSuite {
   private def chmodOrReadlink(commands: Seq[String]): Seq[String] =
     commands.filter(c => c.contains("chmod") || c.contains("readlink"))
 
-  test("a stateful two-batch replay forks no chmod or readlink") {
+  private def updates = {
     import spark.implicits._
-    val updates = (0 until 40).map { i =>
+    (0 until 40).map { i =>
       RetractionJoin.Upd(i % 5, if (i % 2 == 0) "L" else "R", i / 2,
         i * 1.5, if (i % 7 == 6) -1 else 1)
     }.toDF()
+  }
+
+  test("a stateful two-batch replay forks no chmod or readlink") {
     val batches = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -75,7 +79,7 @@ class StreamingIoSpec extends AnyFunSuite {
       val forked = chmodOrReadlink(spawns {
         val out = Replay.run(spark, updates, mode = "append",
           filesPerTrigger = 1, nFiles = 2, bigSink = true) { st =>
-          RetractionJoin(st.as[RetractionJoin.Upd]).toDF()
+          RetractionJoin(st.as(RetractionJoin.UpdEnc)).toDF()
         }
         assert(out.count() > 0)
       })
@@ -85,6 +89,33 @@ class StreamingIoSpec extends AnyFunSuite {
       while (batches.get < 2 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(batches.get === 2, "micro-batches with input")
     } finally spark.streams.removeListener(listener)
+  }
+
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def ckptEntries: Set[String] =
+    new java.io.File(Engine.scratchRoot).list().filter(_.startsWith("ckpt")).toSet
+
+  test("a repeated stateful drain compiles no generated class and leaves no checkpoint behind") {
+    import org.apache.spark.sql.functions.col
+    def count(): Long = Replay.run(spark, updates, mode = "complete",
+        filesPerTrigger = 1, nFiles = 2, cacheKey = "codegen-reuse-count") {
+      _.groupBy(col("key")).count()
+    }.count()
+    def bag(): Long = Replay.run(spark, updates, mode = "append",
+        filesPerTrigger = 1, nFiles = 2, cacheKey = "codegen-reuse-bag",
+        bigSink = true) { st =>
+      RetractionJoin(st.as(RetractionJoin.UpdEnc)).toDF()
+    }.count()
+    Seq("groupBy count" -> count _, "retraction bag" -> bag _)
+      .foreach { case (what, drain) =>
+        val ckpts = ckptEntries
+        val first = drain()
+        val c0 = compiled
+        assert(drain() === first, what)
+        assert(compiled - c0 === 0L, s"$what: classes compiled by the second drain")
+        assert((ckptEntries -- ckpts).isEmpty, s"$what: checkpoint dirs left")
+      }
   }
 
   test("NioRawLocalFileSystem.setPermission sets every rwx mode without forking; the sticky bit takes Hadoop's path") {
