@@ -1305,7 +1305,7 @@ object LlmSim extends QueryModule {
         mlive AS (
           SELECT * FROM relab
           WHERE vec_id NOT IN (SELECT vec_id FROM mdrops)),
-        $postingsEstateSql,
+        ${postingsEstateSqlUpTo(PostingsBatches)},
         live AS (
           SELECT max(doc_id) AS doc_id, text FROM alld GROUP BY text),
         ltok AS (
@@ -1381,7 +1381,7 @@ object LlmSim extends QueryModule {
     "q_llm_hybrid_search_stream" -> QueryDef(
       fn = (s, dir) => {
         import s.implicits._
-        val (post3, df3) = streamedPostingsIngest(s, dir)
+        val (post3, df3) = postingsEpoch(s, dir, PostingsStreamEpoch)
         val trank = lexRank(post3, lexQterms(s, dir),
             _.join(df3, Seq("w")), 20)
           .select($"q_id", $"doc_id", $"rank".as("tr"))
@@ -1391,7 +1391,7 @@ object LlmSim extends QueryModule {
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        $postingsEstateStreamSql,
+        ${postingsEstateSqlUpTo(PostingsStreamEpoch)},
         dfq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
         qw AS (SELECT DISTINCT doc_id AS q_id,
             unnest(string_split(text, ' ')[1:8]) AS w
@@ -1458,40 +1458,7 @@ object LlmSim extends QueryModule {
     // exclude it). Probe plan: broadcast query terms onto the
     // bucketed postings scan, then an exchange-free co-bucketed join
     // to the epoch's df relation (both bucketed+sorted on w).
-    "q_llm_postings_upsert" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (post, df1) = postingsEpoch(s, dir, 1)
-        lexRank(post, lexQterms(s, dir), _.join(df1, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH nd AS (
-          SELECT doc_id + $ArrivalIdBase AS doc_id, text
-          FROM documents WHERE doc_id % 7 = 3),
-        alld AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL SELECT doc_id, text FROM nd),
-        tok AS (
-          SELECT w, doc_id, count(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM alld)
-          GROUP BY w, doc_id),
-        dfq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM tok JOIN dfq USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id)
-        SELECT q_id, rank, doc_id, su FROM (
-          SELECT q_id, doc_id, su, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY su DESC, doc_id) AS INT) AS rank
-          FROM tsc)
-        WHERE rank <= 5""")),
+    "q_llm_postings_upsert" -> postingsProbeDef(1),
 
     // POSTINGS UPSERT, SECOND BATCH — the query the r14 single-shot
     // txn could not serve: batch 2 lands in its own ep=2 partition
@@ -1501,16 +1468,7 @@ object LlmSim extends QueryModule {
     // both arrival batches at their true ranks, every df carrying
     // both deltas — gated against a from-scratch derive over
     // base ∪ batch1 ∪ batch2.
-    "q_llm_postings_upsert2" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (post, df2) = postingsEpoch(s, dir, PostingsBatches)
-        lexRank(post, lexQterms(s, dir), _.join(df2, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH $postingsEstateSql,
-        $postingsTfIdfProbeSql""")),
+    "q_llm_postings_upsert2" -> postingsProbeDef(2),
 
     // SECOND STREAMED WAVE — the stream high-water ADVANCING (3 → 4),
     // the interleaving the r15 seam left ungated: wave 2's files land
@@ -1522,16 +1480,7 @@ object LlmSim extends QueryModule {
     // swings 3 → 4 while the batch pointer stays put (pinned in spec,
     // both orders). This probe reads the epoch-4 estate; the oracle
     // re-derives all four arrival batches from scratch.
-    "q_llm_postings_stream2" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (post, df4) = streamedPostingsWave2(s, dir)
-        lexRank(post, lexQterms(s, dir), _.join(df4, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH ${postingsEstateSqlUpTo(PostingsStreamEpoch2)},
-        $postingsTfIdfProbeSql""")),
+    "q_llm_postings_stream2" -> postingsProbeDef(4),
 
     // BATCH EPOCH AFTER THE STREAM — the other order of the two-front
     // seam (the r15 gates covered batch-then-stream only): epoch 5
@@ -1541,16 +1490,7 @@ object LlmSim extends QueryModule {
     // fronts COMPOSE: neither re-derives the other's work, the batch
     // pointer swings 2 → 5 while the stream pointer stays at 4. The
     // oracle re-derives the full five-batch estate from scratch.
-    "q_llm_postings_batch_after_stream" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (post, df5) = postingsBatchAfterStream(s, dir)
-        lexRank(post, lexQterms(s, dir), _.join(df5, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH ${postingsEstateSqlUpTo(PostingsBatchAfterStream)},
-        $postingsTfIdfProbeSql""")),
+    "q_llm_postings_batch_after_stream" -> postingsProbeDef(5),
 
     // CATCH-UP COMPACTION OVER THE GROWN ESTATE — the curation cycle
     // re-run after BOTH streamed waves and the batch-after-stream
@@ -1560,16 +1500,7 @@ object LlmSim extends QueryModule {
     // estate, ONE COW rewrite collapsing partitions 0..5 into the
     // live pair, df decremented, zero-df words dropped. Oracle:
     // five-batch estate + the shared keep-newest survivor-probe tail.
-    "q_llm_postings_compact2" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (postL, dfL) = persistedPostingsCompacted2(s, dir)
-        lexRank(postL, lexQterms(s, dir), _.join(dfL, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH ${postingsEstateSqlUpTo(PostingsBatchAfterStream)},
-        $postingsKeepNewestProbeSql""")),
+    "q_llm_postings_compact2" -> postingsCompactDef(5),
 
     // POSTINGS DELETE — the lexical index's missing verb (the r14
     // verdict's #1: the vector index had
@@ -1590,7 +1521,7 @@ object LlmSim extends QueryModule {
     // probe: one from-scratch derive over (estate − deletes).
     "q_llm_postings_delete" -> QueryDef(
       fn = (s, dir) => postingsTombProbe(s, dir, 5),
-      oracle = Some(postingsDeleteOracleSql)),
+      oracle = Some(postingsCuratedOracleSql(PostingsBatches))),
 
     // POSTINGS COMPACT — tombstones FOLDED into both relations: one
     // rewrite lands the live postings (epoch partitions collapsed —
@@ -1601,14 +1532,7 @@ object LlmSim extends QueryModule {
     // survivor scoring as the live path by construction — the two
     // probes share one oracle (the maintained-epoch delete pair's
     // precedent).
-    "q_llm_postings_compact" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (postL, dfL) = persistedPostingsCompacted(s, dir)
-        lexRank(postL, lexQterms(s, dir), _.join(dfL, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(postingsDeleteOracleSql)),
+    "q_llm_postings_compact" -> postingsCompactDef(2),
 
     // POSTINGS CATCH-UP COMPACTION — the batch-cadence curation cycle
     // CATCHING UP with the streamed tail (the lexical analogue of the
@@ -1623,14 +1547,7 @@ object LlmSim extends QueryModule {
     // whole streamed estate and the curation from scratch via the
     // SAME keep-newest + survivor-probe tail the batch-cadence pair
     // gates on (one derivation, two estates).
-    "q_llm_postings_stream_compact" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (postL, dfL) = persistedPostingsCompactedStream(s, dir)
-        lexRank(postL, lexQterms(s, dir), _.join(dfL, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(postingsStreamCompactOracleSql)),
+    "q_llm_postings_stream_compact" -> postingsCompactDef(3),
 
     // MMR DIVERSIFIED TOP-K — maximal marginal relevance (Carbonell &
     // Goldstein 1998, public) over the IVF-routed candidate pool: the
@@ -2202,7 +2119,7 @@ object LlmSim extends QueryModule {
     //                     the anti-join debt is worth a COW fold
     //                     (persistedMaintCellsCompacted's trigger)
     //   compact_lexical — dead postings exceed 10% of the table:
-    //                     persistedPostingsCompacted's trigger
+    //                     postingsCompacted's trigger
     //   resplit         — any cell left overgrown: run maintenance
     //                     cycle 2 (persistedMaintCycle2)
     //   vacuum          — superseded lineage outweighs the LIVE
@@ -2357,9 +2274,7 @@ object LlmSim extends QueryModule {
         }
       },
       oracle = Some(s"""
-        WITH nd AS (
-          SELECT doc_id + $ArrivalIdBase AS doc_id, text
-          FROM documents WHERE doc_id % 7 = 3)
+        WITH nd AS (${arrivalDocsSql(Seq(1))})
         SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf FROM (
           SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM nd)
         GROUP BY doc_id, w""")),
@@ -2370,7 +2285,7 @@ object LlmSim extends QueryModule {
     // exactly-once marker-guarded appends into the REAL
     // epoch-partitioned postings table, then merges df and swings the
     // stream high-water pointer (two ingest fronts, two pointers —
-    // the lambda-architecture seam; see streamedPostingsIngest: the
+    // the lambda-architecture seam; see runPostingsWave: the
     // batch front's gated pointer never moves, and every `ep <= 2`
     // reader is partition-pruned away from the streamed rows, so all
     // existing gates stay byte-identical whichever runs first). The
@@ -2381,30 +2296,7 @@ object LlmSim extends QueryModule {
     // markers make re-delivered batches no-ops; the mid-wave
     // crash+resume path is driven in OperatorSpec through the
     // chaos seam.
-    "q_stream_postings_ingest" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (post, df3) = streamedPostingsIngest(s, dir)
-        lexRank(post, lexQterms(s, dir), _.join(df3, Seq("w")), 5)
-          .select($"q_id", $"rank", $"doc_id", $"su")
-      },
-      oracle = Some(s"""
-        WITH $postingsEstateStreamSql,
-        dfq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM tok JOIN dfq USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id)
-        SELECT q_id, rank, doc_id, su FROM (
-          SELECT q_id, doc_id, su, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY su DESC, doc_id) AS INT) AS rank
-          FROM tsc)
-        WHERE rank <= 5""")),
+    "q_stream_postings_ingest" -> postingsProbeDef(3),
 
     // STREAMING VECTOR INGEST — the vector index takes the same
     // streamed tail the lexical one just did, with the isolation
@@ -3773,38 +3665,52 @@ object LlmSim extends QueryModule {
     * the gated corpora converge in ≤1. */
   private[graft] val MaintSplitRounds = 3
 
-  /** LOCAL split of every overgrown cell of a (cid, vec_id, v) cells
-    * frame (see the q_llm_ivf_cell_split QueryDef comment for the
-    * lifecycle rationale). Deterministic and SQL-mirrorable end to
-    * end: seeds are the cell's smallest vec_id and the smallest
-    * vec_id with a DISTINCT vector (see the seed comment in the
-    * body), assignment is
-    * one exact-d2 pass against the two seed VECTORS with the
-    * lower-child tiebreak (the family's (d2, lower-id) argmin
-    * convention), the upper child relabels to cid + SplitCidOffset.
-    * Work is O(Σ|overgrown cell|): the overgrown-cid set is at most
-    * nlist rows (broadcast marker join), seeds come off a bounded-
-    * heap GroupTopK cut (k=2 per cell), and the relabel itself is a
-    * map over the tagged rows — no shuffle of the untouched corpus.
-    * Returns (cid, vec_id, v, split); `split` marks rows whose cell
-    * was divided (both children), so a caller can refresh exactly
-    * those centroids — and when the INPUT already carries a `split`
-    * column (a prior fixpoint round's flag) the output ORs it in, so
-    * across [[splitCellsFixpoint]] rounds the flag accumulates to
-    * "cell was ever overgrown", without any per-round corpus join.
-    * ONE pass: a pathological cell (near-duplicate
-    * mass) can leave a child still overgrown; [[splitCellsFixpoint]]
-    * loops this pass with a fresh `offset` per round (a low child
-    * re-splitting would mint cid+offset, which an earlier round's
-    * upper child may already hold). */
   /** The health report's full DuckDB re-derivation — ONE string,
     * shared by the report gate and the maintenance-plan gate that
-    * derives policy from its row. */
-  private lazy val indexHealthOracleSql: String = s"""
+    * derives policy from its row. Its lineage fronts and its column
+    * list are generated from [[FoldGens]], exactly as the Spark
+    * report's are ([[indexHealthFrom]]). */
+  private lazy val indexHealthOracleSql: String = {
+    val serving = FoldGens.last
+    // one single-scan front per fold generation and one per renumber
+    // ([[indexHealthFrom]]'s fronts, mirrored)
+    val lineageFronts = FoldGens.map { g =>
+      val Seq(cells, over, absorbed, resplit) = foldHealthCols(g)
+      s"""${g.cte("health")} AS (SELECT
+            CAST(count(*) AS BIGINT) AS $cells,
+            CAST(sum(CASE WHEN cn > $IvfPSplitRows THEN 1 ELSE 0 END)
+              AS BIGINT) AS $over,
+            CAST(sum(ab) AS BIGINT) AS $absorbed,
+            CAST(sum(rs) AS BIGINT) AS $resplit
+          FROM (SELECT cid, count(*) AS cn,
+              sum(CASE WHEN vec_id >= ${g.band} THEN 1 ELSE 0 END) AS ab,
+              sum(CASE WHEN split THEN 1 ELSE 0 END) AS rs
+            FROM ${g.cte("post")} GROUP BY cid))"""
+    } ++ RenumberGens.map(gen =>
+      s"""rn${gen}mx AS (SELECT CAST(max(cid) AS BIGINT)
+            AS ${renumberHealthCol(gen)} FROM rn${gen}cells)""")
+    val fronts = Seq("agg0", "tq", "pstat", "ptq", "plr", "ssr", "t45",
+        "sgr", "sgt") ++ FoldGens.map(_.cte("health")) ++
+      RenumberGens.map(gen => s"rn${gen}mx") ++ Seq("rr", "udq", "bdq")
+    // the columns the oracle derives rather than reads off a front
+    val oracleCol = Map(
+      "live_rows" -> "n_rows - n_tomb",
+      "post_epoch" -> s"CAST(${finalPostEpoch(stream = false)} AS BIGINT)",
+      "stream_epoch" -> s"CAST(${finalPostEpoch(stream = true)} AS BIGINT)",
+      "cb_epoch" -> s"CAST(${serving.cbEpoch} AS BIGINT)",
+      "ns_gen" -> s"CAST(${serving.nsGen} AS BIGINT)",
+      "cb_distortion" -> "CAST(cb_dsum AS DOUBLE) / 10000000 / cb_dn",
+      "vacuumable_rows" -> """2 * (n_rows + seg_rows) + fold_cells
+            + 2 * (n_rows + seg_rows + seg_tail_rows)
+            + fold2_cells + retrain_rows
+            + 2 * retrain_rows + fold2_cells
+            + 2 * (retrain_rows + fold3_tail_rows)
+            + fold3_cells""")
+    s"""
         WITH $ivfCellsSql,
         $maintChainSql,
         $maintDropsSql,
-        $postingsEstateSql,
+        ${postingsEstateSqlUpTo(PostingsBatches)},
         cs AS (SELECT cid, CAST(count(*) AS BIGINT) AS cn
           FROM relab GROUP BY cid),
         agg0 AS (SELECT
@@ -3839,10 +3745,7 @@ object LlmSim extends QueryModule {
         -- partition) and the realtime vector segment's rows — the
         -- dashboard's "how much tail is riding ahead of the next
         -- fold/compaction" numbers
-        swd AS (SELECT doc_id + ${PostingsStreamEpoch * ArrivalIdBase}
-            AS doc_id, text
-          FROM documents
-          WHERE doc_id % 7 = ${(2 * PostingsStreamEpoch + 1) % 7}),
+        swd AS (${arrivalDocsSql(PostingsBatches + 1 to PostingsStreamEpoch)}),
         ssr AS (SELECT CAST(count(*) AS BIGINT) AS stream_rows FROM (
           SELECT doc_id, w FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -3852,19 +3755,10 @@ object LlmSim extends QueryModule {
           FROM e WHERE vec_id % 7 = 5),
         sgt AS (SELECT CAST(count(*) AS BIGINT) AS seg_tail_rows
           FROM e WHERE vec_id % 7 = 6),
-        -- the post-stream TAIL (r16): wave 2 (batch 4, streamed) and
-        -- the batch-after-stream epoch (batch 5) — the rows landed
-        -- past the first streamed high-water
-        t45d AS (
-          SELECT doc_id + ${PostingsStreamEpoch2 * ArrivalIdBase}
-              AS doc_id, text
-            FROM documents
-            WHERE doc_id % 7 = ${(2 * PostingsStreamEpoch2 + 1) % 7}
-          UNION ALL
-          SELECT doc_id + ${PostingsBatchAfterStream * ArrivalIdBase}
-              AS doc_id, text
-            FROM documents
-            WHERE doc_id % 7 = ${(2 * PostingsBatchAfterStream + 1) % 7}),
+        -- the post-stream TAIL (r16): every epoch landed past the
+        -- first streamed high-water
+        t45d AS (${arrivalDocsSql(
+          PostingsStreamEpoch + 1 to PostEpochs.last.e)}),
         t45 AS (SELECT CAST(count(*) AS BIGINT) AS tail_rows FROM (
           SELECT doc_id, w FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -3872,82 +3766,32 @@ object LlmSim extends QueryModule {
           GROUP BY doc_id, w)),
         -- the FOLD fronts: the shared lineage derivation's summary
         -- numbers surfaced on the dashboard — every fold generation,
-        -- the epoch-2 training (for g2live + the serving pcb the
-        -- distortion scores against) and both renumbers
-        ${foldLineageSql(4)},
-        hsz AS (SELECT cid, count(*) AS cn FROM g1post GROUP BY cid),
-        hagg AS (SELECT
-            CAST(count(*) AS BIGINT) AS fold_cells,
-            CAST(sum(CASE WHEN cn > $IvfPSplitRows THEN 1 ELSE 0 END)
-              AS BIGINT) AS fold_overgrown
-          FROM hsz),
-        hseg AS (SELECT
-            CAST(sum(CASE WHEN vec_id >= ${foldGen(1).band}
-              THEN 1 ELSE 0 END) AS BIGINT) AS fold_seg_rows,
-            CAST(sum(CASE WHEN split THEN 1 ELSE 0 END) AS BIGINT)
-              AS fold_resplit
-          FROM g1post),
-        h2sz AS (SELECT cid, count(*) AS cn FROM g2post GROUP BY cid),
-        h2agg AS (SELECT
-            CAST(count(*) AS BIGINT) AS fold2_cells,
-            CAST(sum(CASE WHEN cn > $IvfPSplitRows THEN 1 ELSE 0 END)
-              AS BIGINT) AS fold2_overgrown
-          FROM h2sz),
-        h2seg AS (SELECT
-            CAST(sum(CASE WHEN vec_id >= ${foldGen(2).band}
-              THEN 1 ELSE 0 END) AS BIGINT) AS fold2_tail_rows,
-            CAST(sum(CASE WHEN split THEN 1 ELSE 0 END) AS BIGINT)
-              AS fold2_resplit
-          FROM g2post),
+        -- the epoch-2 training (for the retrain survivors + the serving
+        -- pcb the distortion scores against) and every renumber
+        ${foldLineageSql(serving.n)},
+        ${lineageFronts.mkString(",\n        ")},
         rr AS (SELECT CAST(count(*) AS BIGINT) AS retrain_rows
-          FROM g2live),
-        rnmx AS (SELECT CAST(max(cid) AS BIGINT) AS rn_max_cid
-          FROM rn2cells),
-        h3sz AS (SELECT cid, count(*) AS cn FROM g3post GROUP BY cid),
-        h3agg AS (SELECT
-            CAST(count(*) AS BIGINT) AS fold3_cells,
-            CAST(sum(CASE WHEN cn > $IvfPSplitRows THEN 1 ELSE 0 END)
-              AS BIGINT) AS fold3_overgrown
-          FROM h3sz),
-        h3seg AS (SELECT
-            CAST(sum(CASE WHEN vec_id >= ${foldGen(3).band}
-              THEN 1 ELSE 0 END) AS BIGINT) AS fold3_tail_rows,
-            CAST(sum(CASE WHEN split THEN 1 ELSE 0 END) AS BIGINT)
-              AS fold3_resplit
-          FROM g3post),
-        rn2mx AS (SELECT CAST(max(cid) AS BIGINT) AS rn2_max_cid
-          FROM rn3cells),
-        h4sz AS (SELECT cid, count(*) AS cn FROM g4post GROUP BY cid),
-        h4agg AS (SELECT
-            CAST(count(*) AS BIGINT) AS fold4_cells,
-            CAST(sum(CASE WHEN cn > $IvfPSplitRows THEN 1 ELSE 0 END)
-              AS BIGINT) AS fold4_overgrown
-          FROM h4sz),
-        h4seg AS (SELECT
-            CAST(sum(CASE WHEN vec_id >= ${foldGen(4).band}
-              THEN 1 ELSE 0 END) AS BIGINT) AS fold4_tail_rows,
-            CAST(sum(CASE WHEN split THEN 1 ELSE 0 END) AS BIGINT)
-              AS fold4_resplit
-          FROM g4post),
-        -- quantization distortion of the serving posture (fold 4 at
-        -- the epoch-2 dictionary): per (vec_id, m) the chosen code's
-        -- d2 (the engine's encode-then-ADC arithmetic, tiebreak
+          FROM ${retrainSource.cte("live")}),
+        -- quantization distortion of the serving posture (the newest
+        -- fold at the epoch-2 dictionary): per (vec_id, m) the chosen
+        -- code's d2 (the engine's encode-then-ADC arithmetic, tiebreak
         -- included), summed in m order per row, quantized-integral
         -- over rows (order-independent)
-        ${uniformRpqCodesSql("g4post", "g4cent", "pcb", "g4u")},
+        ${uniformRpqCodesSql(serving.cte("post"), serving.cte("cent"),
+          "pcb", serving.cte("u"))},
         ud AS (SELECT vec_id, m, t FROM (
             SELECT u0.vec_id, u0.m, ${d2Sql("u0.sv", "c0.cv")} AS t,
               row_number() OVER (PARTITION BY u0.vec_id, u0.m
                 ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM g4usubs u0 JOIN pcb c0 ON u0.m = c0.m)
+            FROM ${serving.cte("u")}subs u0 JOIN pcb c0 ON u0.m = c0.m)
           WHERE rn = 1),
         urow AS (SELECT vec_id, list_reduce(list_prepend(0.0,
             list(t ORDER BY m)), (x, y) -> x + y) AS adc
           FROM ud GROUP BY vec_id),
         udq AS (SELECT
             CAST(sum(CAST(floor(adc * 10000000) AS BIGINT)) AS BIGINT)
-              AS dsum,
-            CAST(count(*) AS BIGINT) AS dn
+              AS cb_dsum,
+            CAST(count(*) AS BIGINT) AS cb_dn
           FROM urow),
         -- the swap-time BASELINE: the same distortion arithmetic over
         -- the posture the retrain calibrated against — the epoch-2
@@ -3964,51 +3808,60 @@ object LlmSim extends QueryModule {
           FROM bd GROUP BY vec_id),
         bdq AS (SELECT
             CAST(sum(CAST(floor(adc * 10000000) AS BIGINT)) AS BIGINT)
-              AS dsum_base,
-            CAST(count(*) AS BIGINT) AS dn_base
+              AS cb_dsum_base,
+            CAST(count(*) AS BIGINT) AS cb_dn_base
           FROM brow)
-        SELECT n_cells, n_rows, n_tomb, n_rows - n_tomb AS live_rows,
-          max_cell, overgrown_cells, split_children,
-          CAST($PostingsBatchAfterStream AS BIGINT) AS post_epoch,
-          posting_rows, vocab_size, df_drift, post_tomb, post_live_rows,
-          CAST($PostingsStreamEpoch2 AS BIGINT) AS stream_epoch,
-          stream_rows, tail_rows, seg_rows, seg_tail_rows,
-          fold_cells, fold_overgrown, fold_seg_rows, fold_resplit,
-          fold2_cells, fold2_overgrown, fold2_tail_rows, fold2_resplit,
-          CAST(2 AS BIGINT) AS cb_epoch, retrain_rows,
-          CAST(3 AS BIGINT) AS ns_gen, rn_max_cid, rn2_max_cid,
-          fold3_cells, fold3_overgrown, fold3_tail_rows, fold3_resplit,
-          fold4_cells, fold4_overgrown, fold4_tail_rows, fold4_resplit,
-          CAST(dsum AS DOUBLE) / 10000000 / dn AS cb_distortion,
-          dsum AS cb_dsum, dn AS cb_dn,
-          dsum_base AS cb_dsum_base, dn_base AS cb_dn_base,
-          2 * (n_rows + seg_rows) + fold_cells
-            + 2 * (n_rows + seg_rows + seg_tail_rows)
-            + fold2_cells + retrain_rows
-            + 2 * retrain_rows + fold2_cells
-            + 2 * (retrain_rows + fold3_tail_rows)
-            + fold3_cells AS vacuumable_rows
-        FROM agg0 CROSS JOIN tq CROSS JOIN pstat CROSS JOIN ptq
-          CROSS JOIN plr CROSS JOIN ssr CROSS JOIN t45 CROSS JOIN sgr
-          CROSS JOIN sgt CROSS JOIN hagg CROSS JOIN hseg
-          CROSS JOIN h2agg CROSS JOIN h2seg CROSS JOIN rr
-          CROSS JOIN rnmx CROSS JOIN rn2mx CROSS JOIN h3agg
-          CROSS JOIN h3seg CROSS JOIN h4agg CROSS JOIN h4seg
-          CROSS JOIN udq CROSS JOIN bdq"""
+        SELECT ${HealthColumns.map(c => oracleCol.get(c)
+            .fold(c)(x => s"$x AS $c")).mkString(",\n          ")}
+        FROM ${fronts.mkString(" CROSS JOIN ")}"""
+  }
 
+  /** The health report's output columns, in order — ONE list for the
+    * Spark report and its oracle. The lineage block follows
+    * [[FoldGens]]: the fold generations at the base codebooks, then
+    * the codebook and namespace front with one column per renumbered
+    * namespace, then the generations at the retrained codebooks. */
+  private def HealthColumns: Seq[String] =
+    Seq("n_cells", "n_rows", "n_tomb", "live_rows", "max_cell",
+      "overgrown_cells", "split_children", "post_epoch", "posting_rows",
+      "vocab_size", "df_drift", "post_tomb", "post_live_rows",
+      "stream_epoch", "stream_rows", "tail_rows", "seg_rows",
+      "seg_tail_rows") ++
+      FoldGens.filter(_.cbEpoch == 1).flatMap(foldHealthCols) ++
+      Seq("cb_epoch", "retrain_rows", "ns_gen") ++
+      RenumberGens.map(renumberHealthCol) ++
+      FoldGens.filter(_.cbEpoch == 2).flatMap(foldHealthCols) ++
+      Seq("cb_distortion", "cb_dsum", "cb_dn", "cb_dsum_base",
+        "cb_dn_base", "vacuumable_rows")
+
+  /** Fold generation `g`'s health columns: cells, overgrown cells,
+    * absorbed rows (the wave's ids, ≥ its band) and re-split rows.
+    * Generation 1 keeps the names it had before the lineage table. */
+  private def foldHealthCols(g: FoldGen): Seq[String] = {
+    val p = if (g.n == 1) "fold" else s"fold${g.n}"
+    Seq(s"${p}_cells", s"${p}_overgrown",
+      if (g.n == 1) "fold_seg_rows" else s"${p}_tail_rows", s"${p}_resplit")
+  }
+
+  /** The health column of the renumber to namespace generation `gen`:
+    * the dense namespace's high cid. */
+  private def renumberHealthCol(gen: Int): String =
+    if (gen == 2) "rn_max_cid" else s"rn${gen - 1}_max_cid"
 
   /** Everything the health report reads, resolved once — the seam
     * between the FORCING and READ-ONLY postures (r19, judge r18 #6 /
     * ADVICE r18 #3). The report body ([[indexHealthFrom]]) is written
-    * exactly once over this surface; only the RESOLUTION differs. */
+    * exactly once over this surface; only the RESOLUTION differs.
+    * `folds` holds each [[FoldGens]] row's cells, `renumbered` each
+    * [[RenumberGens]] namespace's cells, and `servCodes`/`servCent`
+    * the serving (newest) fold's codes and centroids. */
   private[graft] case class HealthInputs(
       mCells: DataFrame, tomb: DataFrame, post: DataFrame,
       dfN: DataFrame, df0: DataFrame, ptomb: DataFrame,
-      post3: DataFrame, post5: DataFrame, segAll: DataFrame,
-      fold: DataFrame, fold2: DataFrame, fold3: DataFrame,
-      retrainCodes: DataFrame, rnCells: DataFrame, fold4: DataFrame,
-      f4Codes: DataFrame, f4Cent: DataFrame, rn2Cells: DataFrame,
-      dbase: DataFrame, cbs: Seq[Seq[Seq[Double]]],
+      postStream: DataFrame, postFinal: DataFrame, segAll: DataFrame,
+      folds: Seq[DataFrame], retrainCodes: DataFrame,
+      renumbered: Seq[DataFrame], servCodes: DataFrame,
+      servCent: DataFrame, dbase: DataFrame, cbs: Seq[Seq[Seq[Double]]],
       postEpoch: Int, streamEpoch: Int, cbEpoch: Int, nsGen: Int)
 
   /** FORCING resolution: every lifecycle verb runs (committed fast
@@ -4018,36 +3871,31 @@ object LlmSim extends QueryModule {
     * report that read them mid-lifecycle would be
     * run-order-dependent). SIDE EFFECT, deliberate and stated (ADVICE
     * r17/r18): this path PUBLISHES any not-yet-swung pointer (codebook
-    * epoch 2, namespace generations 2 and 3) — the observability verb
+    * epoch 2, every namespace generation) — the observability verb
     * that must NOT advance the estate is [[healthInputsReadOnly]]. */
   private[graft] def healthInputsForced(
       s: SparkSession, dir: String): HealthInputs = {
-    import s.implicits._
     val (mCells, _) = maintainIvfCommit(s, dir)
     val tomb = persistedMaintTombstones(s, dir)
     val (post, dfN) = postingsEpoch(s, dir, PostingsBatches)
     val df0 = s.table(postDfTableName(dir, 0))
-    val ptomb = persistedPostingsTombstones(s, dir)
-    val (post3, _) = streamedPostingsIngest(s, dir)
-    val (post5, _) = postingsBatchAfterStream(s, dir)
+    val ptomb = postingsTombstones(s, dir, PostingsBatches)
+    val (postStream, _) = postingsEpoch(s, dir, PostingsStreamEpoch)
+    val (postFinal, _) = postingsEpoch(s, dir, PostEpochs.last.e)
     val segAll = streamedIvfSegmentAll(s, dir)
-    val fold = foldCells(s, dir, 1)
-    val fold2 = foldCells(s, dir, 2)
-    val fold3 = foldCells(s, dir, 3) // forces retrain+renumber #1
-    val retrainCodes = s.table(rpqRetrainTables(s, dir)._2)
-    val rnCells = renumberedEstateGen(s, dir, 2)._1
-    // the r19 fronts: renumber #2 and fold generation 4 — forcing the
-    // fold-4 chain swings the namespace pointer to generation 3 (the
-    // run-order-independence argument, one generation up)
-    val fold4 = foldCells(s, dir, 4)
-    val f4Codes = foldCodes(s, dir, 4)
-    val f4Cent = foldCentroids(s, dir, 4)
-    val rn2Cells = renumberedEstateGen(s, dir, 3)._1
-    val dbase = s.table(rpqDistortionBaseTable(s, dir))
-    val cbs = servingRpqPosture(s, dir)._3
-    HealthInputs(mCells, tomb, post, dfN, df0, ptomb, post3, post5,
-      segAll, fold, fold2, fold3, retrainCodes, rnCells, fold4,
-      f4Codes, f4Cent, rn2Cells, dbase, cbs,
+    // every fold generation, oldest first: forcing the serving one
+    // runs the retrain and every renumber and swings the codebook and
+    // namespace pointers (the run-order-independence argument)
+    val folds = FoldGens.map(g => foldCells(s, dir, g.n))
+    val serving = FoldGens.last.n
+    HealthInputs(mCells, tomb, post, dfN, df0, ptomb, postStream,
+      postFinal, segAll, folds,
+      retrainCodes = s.table(rpqRetrainTables(s, dir)._2),
+      renumbered = RenumberGens.map(renumberedEstateGen(s, dir, _)._1),
+      servCodes = foldCodes(s, dir, serving),
+      servCent = foldCentroids(s, dir, serving),
+      dbase = s.table(rpqDistortionBaseTable(s, dir)),
+      cbs = servingRpqPosture(s, dir)._3,
       postEpoch = postEpochOf(s, dir),
       streamEpoch = postStreamEpochOf(s, dir),
       cbEpoch = rpqCbEpochOf(s, dir), nsGen = nsGenOf(s, dir))
@@ -4076,26 +3924,24 @@ object LlmSim extends QueryModule {
       s.table(t)
     }
     val postAll = tbl(postTableName(dir))
+    def postAsOf(ep: Int): DataFrame =
+      postAll.filter($"ep" <= ep).drop("ep")
+    val serving = FoldGens.last.tables(dir, e)
     HealthInputs(
       mCells = tbl(maintainedTablesFor(dir, e).head),
       tomb = tbl(s"graft_ivf_mtomb_me${e}_$h"),
-      post = postAll.filter($"ep" <= PostingsBatches).drop("ep"),
+      post = postAsOf(PostingsBatches),
       dfN = tbl(postDfTableName(dir, PostingsBatches)),
       df0 = tbl(postDfTableName(dir, 0)),
-      ptomb = tbl(s"graft_post_tomb_pe${PostingsBatches}_$h"),
-      post3 = postAll.filter($"ep" <= PostingsStreamEpoch).drop("ep"),
-      post5 = postAll.filter($"ep" <= PostingsBatchAfterStream)
-        .drop("ep"),
+      ptomb = tbl(s"graft_post_tomb_${postEpoch(PostingsBatches).tag}_$h"),
+      postStream = postAsOf(PostingsStreamEpoch),
+      postFinal = postAsOf(PostEpochs.last.e),
       segAll = tbl(ivfSegTableName(dir)),
-      fold = tbl(foldGen(1).tables(dir, e)(0)),
-      fold2 = tbl(foldGen(2).tables(dir, e)(0)),
-      fold3 = tbl(foldGen(3).tables(dir, e)(0)),
+      folds = FoldGens.map(g => tbl(g.tables(dir, e).head)),
       retrainCodes = tbl(rpqRetrainTables(s, dir)._2),
-      rnCells = tbl(renumberTables(s, dir, 2)._1),
-      fold4 = tbl(foldGen(4).tables(dir, e)(0)),
-      f4Codes = tbl(foldGen(4).tables(dir, e)(2)),
-      f4Cent = tbl(foldGen(4).tables(dir, e)(1)),
-      rn2Cells = tbl(renumberTables(s, dir, 3)._1),
+      renumbered = RenumberGens.map(g => tbl(renumberTables(s, dir, g)._1)),
+      servCodes = tbl(serving(2)),
+      servCent = tbl(serving(1)),
       dbase = tbl(rpqDistortionBaseTable(s, dir)),
       cbs = cbArrOf(s"rpq2:$dir:$e", tbl(rpqRetrainTables(s, dir)._1)),
       postEpoch = postEpochOf(s, dir),
@@ -4144,89 +3990,51 @@ object LlmSim extends QueryModule {
         in.post.join(broadcast(in.ptomb.select($"doc_id")),
               Seq("doc_id"), "left_semi")
             .agg(count(lit(1)).as("post_dead_rows")),
-        in.post3.agg(count(lit(1)).as("post3_rows")),
-        in.post5.agg(count(lit(1)).as("post5_rows")),
+        in.postStream.agg(count(lit(1)).as("post_stream_rows")),
+        in.postFinal.agg(count(lit(1)).as("post_final_rows")),
         // both seal generations from ONE segment scan (the fold
         // columns' single-pass discipline)
         in.segAll.agg(
             sum(when($"vec_id" < IvfSegSeal1Bound, 1L).otherwise(0L))
               .as("seg_rows"),
             sum(when($"vec_id" >= IvfSegSeal1Bound, 1L).otherwise(0L))
-              .as("seg_tail_rows")),
-        // the FOLD front (r16): derived from the persisted fold
-        // artifact in ONE scan (per-cid partials carry all three
-        // sums; the global agg folds them) — not by re-running the
-        // chain, and not by re-reading the table per column family:
-        // the report's cost must not grow with each estate
-        // extension (the r15 judge's job-count trend note)
-        in.fold.groupBy($"cid").agg(
-              count(lit(1)).as("fcn"),
-              sum(when($"vec_id" >= foldGen(1).band, 1L)
-                .otherwise(0L)).as("fsr"),
-              sum(when($"split", 1L).otherwise(0L)).as("frs"))
-            .agg(count(lit(1)).as("fold_cells"),
-              sum(when($"fcn" > IvfPSplitRows, 1L).otherwise(0L))
-                .as("fold_overgrown"),
-              sum($"fsr").as("fold_seg_rows"),
-              sum($"frs").as("fold_resplit")),
-        // fold GENERATION 2 (r17), same single-scan shape
-        in.fold2.groupBy($"cid").agg(
-              count(lit(1)).as("f2cn"),
-              sum(when($"vec_id" >= foldGen(2).band, 1L)
-                .otherwise(0L)).as("f2tr"),
-              sum(when($"split", 1L).otherwise(0L)).as("f2rs"))
-            .agg(count(lit(1)).as("fold2_cells"),
-              sum(when($"f2cn" > IvfPSplitRows, 1L).otherwise(0L))
-                .as("fold2_overgrown"),
-              sum($"f2tr").as("fold2_tail_rows"),
-              sum($"f2rs").as("fold2_resplit")),
-        // the retrain's O(corpus) rewrite as a number: every live
-        // row re-coded against codebook epoch 2
-        in.retrainCodes.agg(count(lit(1)).as("retrain_rows")),
-        // the RENUMBER front (r18): the dense namespace's high cid
-        // — the witness that the major compaction reset the space
-        // (dense 0..n-1 sits orders of magnitude under the 2^20
-        // split offset; pre-renumber the estate held cids at 2^30)
-        in.rnCells.agg(
-            max($"cid").cast("long").as("rn_max_cid")),
-        // fold GENERATION 3 (r18), the same single-scan shape as
-        // generations 1-2
-        in.fold3.groupBy($"cid").agg(
-              count(lit(1)).as("f3cn"),
-              sum(when($"vec_id" >= foldGen(3).band, 1L)
-                .otherwise(0L)).as("f3tr"),
-              sum(when($"split", 1L).otherwise(0L)).as("f3rs"))
-            .agg(count(lit(1)).as("fold3_cells"),
-              sum(when($"f3cn" > IvfPSplitRows, 1L).otherwise(0L))
-                .as("fold3_overgrown"),
-              sum($"f3tr").as("fold3_tail_rows"),
-              sum($"f3rs").as("fold3_resplit")),
-        // the RENUMBER #2 front (r19): the gen-3 dense namespace's
-        // high cid — the generational witness (same claim as
-        // rn_max_cid, one compaction later)
-        in.rn2Cells.agg(
-            max($"cid").cast("long").as("rn2_max_cid")),
-        // fold GENERATION 4 (r19), the same single-scan shape as
-        // generations 1-3
-        in.fold4.groupBy($"cid").agg(
-              count(lit(1)).as("f4cn"),
-              sum(when($"vec_id" >= foldGen(4).band, 1L)
-                .otherwise(0L)).as("f4tr"),
-              sum(when($"split", 1L).otherwise(0L)).as("f4rs"))
-            .agg(count(lit(1)).as("fold4_cells"),
-              sum(when($"f4cn" > IvfPSplitRows, 1L).otherwise(0L))
-                .as("fold4_overgrown"),
-              sum($"f4tr").as("fold4_tail_rows"),
-              sum($"f4rs").as("fold4_resplit")),
+              .as("seg_tail_rows"))) ++
+      // the FOLD fronts (r16-r19): each generation's persisted fold
+      // artifact in ONE scan (per-cid partials carry all three sums;
+      // the global agg folds them) — not by re-running the chain, and
+      // not by re-reading the table per column family: the report's
+      // cost must not grow with each estate extension (the r15 judge's
+      // job-count trend note)
+      FoldGens.zip(in.folds).map { case (g, cells) =>
+        val Seq(nCells, over, absorbed, resplit) = foldHealthCols(g)
+        cells.groupBy($"cid").agg(
+            count(lit(1)).as("cn"),
+            sum(when($"vec_id" >= g.band, 1L).otherwise(0L)).as("ab"),
+            sum(when($"split", 1L).otherwise(0L)).as("rs"))
+          .agg(count(lit(1)).as(nCells),
+            sum(when($"cn" > IvfPSplitRows, 1L).otherwise(0L)).as(over),
+            sum($"ab").as(absorbed),
+            sum($"rs").as(resplit))
+      } ++
+      // the retrain's O(corpus) rewrite as a number: every live row
+      // re-coded against codebook epoch 2
+      Seq(in.retrainCodes.agg(count(lit(1)).as("retrain_rows"))) ++
+      // the RENUMBER fronts (r18-r19): each dense namespace's high cid
+      // — the witness that the major compaction reset the space
+      // (dense 0..n-1 sits orders of magnitude under the 2^20 split
+      // offset; pre-renumber the estate held cids at 2^30)
+      RenumberGens.zip(in.renumbered).map { case (gen, cells) =>
+        cells.agg(max($"cid").cast("long").as(renumberHealthCol(gen)))
+      } ++ Seq(
         // the retrain TRIGGER (r18, drift-closed r19): avg
-        // quantization distortion of the SERVING posture (fold-4
-        // cells at the epoch-2 dictionary) — the number an operator
-        // watches drift upward to schedule the next retrain; one
+        // quantization distortion of the SERVING posture (the newest
+        // fold's cells at the epoch-2 dictionary) — the number an
+        // operator watches drift upward to schedule the next retrain; one
         // bucket-join pass. The integral (dsum, dn) pair rides
         // along so the maintenance plan can threshold it against
         // the persisted post-retrain baseline in exact BIGINT
         // arithmetic.
-        rpqDistortion(in.fold4, in.f4Cent, in.f4Codes, in.cbs)
+        rpqDistortion(in.folds.last, in.servCent, in.servCodes, in.cbs)
             .select(($"dsum".cast("double") / 1e7 / $"dn")
               .as("cb_distortion"),
               $"dsum".as("cb_dsum"), $"dn".as("cb_dn")),
@@ -4234,6 +4042,40 @@ object LlmSim extends QueryModule {
         // artifact (one row, read not recomputed)
         in.dbase.select($"dsum".as("cb_dsum_base"),
             $"dn".as("cb_dn_base")))
+    // the columns the report derives rather than reads off a front
+    val derived: Map[String, Column] = Map(
+      "live_rows" -> ($"n_rows" - $"n_tomb"),
+      "post_epoch" -> lit(in.postEpoch.toLong),
+      "df_drift" -> ($"dfsum_n" - $"dfsum_0"),
+      "post_live_rows" -> ($"posting_rows" - $"post_dead_rows"),
+      "stream_epoch" -> lit(in.streamEpoch.toLong),
+      "stream_rows" -> ($"post_stream_rows" - $"posting_rows"),
+      "tail_rows" -> ($"post_final_rows" - $"post_stream_rows"),
+      "cb_epoch" -> lit(in.cbEpoch.toLong),
+      "ns_gen" -> lit(in.nsGen.toLong),
+      // what vacuumEstate(keep = 1)'s fold-family sweep — every
+      // lineage superseded by the serving generation (rn gen 3 + fold
+      // 4), the estate's dominant reclaimable mass — drops, as ROWS
+      // (bytes are encoder-specific and not cross-engine derivable;
+      // rows measure the same mass oracle-gateably): fold gens 1-3's
+      // cells+codes (codes row-count = cells row-count by the
+      // cascade's construction), their centroid sets, the
+      // pre-renumber epoch-2 codes, and the renumber-#1 triple —
+      // derived arithmetically from sums this report already carries,
+      // zero extra scans. live2 (the fold-2 survivor count) = n_rows +
+      // seg_rows + seg_tail_rows − n_tomb = retrain_rows; the identity
+      // keeps the arithmetic in already-carried columns.
+      "vacuumable_rows" -> (lit(2L) * ($"n_rows" + $"seg_rows")
+        + $"fold_cells"
+        + lit(2L) * ($"n_rows" + $"seg_rows" + $"seg_tail_rows")
+        + $"fold2_cells" + $"retrain_rows"
+        // renumber #1 triple: cells + codes (= live2 each) + centroid
+        // set (= fold-2 cell count)
+        + lit(2L) * $"retrain_rows" + $"fold2_cells"
+        // fold 3 triple: cells + codes (= live2 + wave-3 rows each) +
+        // its centroid set
+        + lit(2L) * ($"retrain_rows" + $"fold3_tail_rows")
+        + $"fold3_cells"))
     val fields = fronts.flatMap(_.schema.fields)
     require(fields.map(_.name).distinct.size == fields.size,
       "health fronts must carry globally-unique column names")
@@ -4246,59 +4088,34 @@ object LlmSim extends QueryModule {
     val aggs = fields.map(fd => max(col(fd.name)).as(fd.name))
     padded.reduce(_.unionByName(_))
           .agg(aggs.head, aggs.tail: _*)
-          .select($"n_cells", $"n_rows", $"n_tomb",
-            ($"n_rows" - $"n_tomb").as("live_rows"),
-            $"max_cell", $"overgrown_cells", $"split_children",
-            lit(in.postEpoch.toLong).as("post_epoch"),
-            $"posting_rows", $"vocab_size",
-            ($"dfsum_n" - $"dfsum_0").as("df_drift"),
-            $"post_tomb",
-            ($"posting_rows" - $"post_dead_rows").as("post_live_rows"),
-            lit(in.streamEpoch.toLong).as("stream_epoch"),
-            ($"post3_rows" - $"posting_rows").as("stream_rows"),
-            ($"post5_rows" - $"post3_rows").as("tail_rows"),
-            $"seg_rows", $"seg_tail_rows",
-            $"fold_cells", $"fold_overgrown", $"fold_seg_rows",
-            $"fold_resplit",
-            $"fold2_cells", $"fold2_overgrown", $"fold2_tail_rows",
-            $"fold2_resplit",
-            lit(in.cbEpoch.toLong).as("cb_epoch"),
-            $"retrain_rows",
-            lit(in.nsGen.toLong).as("ns_gen"),
-            $"rn_max_cid", $"rn2_max_cid",
-            $"fold3_cells", $"fold3_overgrown", $"fold3_tail_rows",
-            $"fold3_resplit",
-            $"fold4_cells", $"fold4_overgrown", $"fold4_tail_rows",
-            $"fold4_resplit",
-            $"cb_distortion", $"cb_dsum", $"cb_dn",
-            $"cb_dsum_base", $"cb_dn_base",
-            // what vacuumEstate(keep = 1)'s fold-family sweep — every
-            // lineage superseded by the serving generation (rn gen 3
-            // + fold 4), the estate's dominant reclaimable mass —
-            // drops, as ROWS (bytes are encoder-specific and not
-            // cross-engine derivable; rows measure the same mass
-            // oracle-gateably): fold gens 1-3's cells+codes (codes
-            // row-count = cells row-count by the cascade's
-            // construction), their centroid sets, the pre-renumber
-            // epoch-2 codes, and the renumber-#1 triple — derived
-            // arithmetically from sums this report already carries,
-            // zero extra scans. live2 (the fold-2 survivor count) =
-            // n_rows + seg_rows + seg_tail_rows − n_tomb =
-            // retrain_rows; the identity keeps the arithmetic in
-            // already-carried columns.
-            (lit(2L) * ($"n_rows" + $"seg_rows") + $"fold_cells"
-              + lit(2L) * ($"n_rows" + $"seg_rows" + $"seg_tail_rows")
-              + $"fold2_cells" + $"retrain_rows"
-              // renumber #1 triple: cells + codes (= live2 each) +
-              // centroid set (= fold-2 cell count)
-              + lit(2L) * $"retrain_rows" + $"fold2_cells"
-              // fold 3 triple: cells + codes (= live2 + wave-3 rows
-              // each) + its centroid set
-              + lit(2L) * ($"retrain_rows" + $"fold3_tail_rows")
-              + $"fold3_cells")
-              .as("vacuumable_rows"))
+          .select(HealthColumns.map(c =>
+            derived.get(c).fold(col(c))(_.as(c))): _*)
   }
 
+  /** LOCAL split of every overgrown cell of a (cid, vec_id, v) cells
+    * frame (see the q_llm_ivf_cell_split QueryDef comment for the
+    * lifecycle rationale). Deterministic and SQL-mirrorable end to
+    * end: seeds are the cell's smallest vec_id and the smallest
+    * vec_id with a DISTINCT vector (see the seed comment in the
+    * body), assignment is
+    * one exact-d2 pass against the two seed VECTORS with the
+    * lower-child tiebreak (the family's (d2, lower-id) argmin
+    * convention), the upper child relabels to cid + SplitCidOffset.
+    * Work is O(Σ|overgrown cell|): the overgrown-cid set is at most
+    * nlist rows (broadcast marker join), seeds come off a bounded-
+    * heap GroupTopK cut (k=2 per cell), and the relabel itself is a
+    * map over the tagged rows — no shuffle of the untouched corpus.
+    * Returns (cid, vec_id, v, split); `split` marks rows whose cell
+    * was divided (both children), so a caller can refresh exactly
+    * those centroids — and when the INPUT already carries a `split`
+    * column (a prior fixpoint round's flag) the output ORs it in, so
+    * across [[splitCellsFixpoint]] rounds the flag accumulates to
+    * "cell was ever overgrown", without any per-round corpus join.
+    * ONE pass: a pathological cell (near-duplicate
+    * mass) can leave a child still overgrown; [[splitCellsFixpoint]]
+    * loops this pass with a fresh `offset` per round (a low child
+    * re-splitting would mint cid+offset, which an earlier round's
+    * upper child may already hold). */
   private[graft] def splitCells(cells: DataFrame,
                                 threshold: Long,
                                 offset: Int = SplitCidOffset): DataFrame = {
@@ -5501,7 +5318,7 @@ object LlmSim extends QueryModule {
     * documented next cycle, not run here). After the wave drains, an
     * atomic SEALED pointer publishes the segment; re-entry and
     * re-delivery no-op against it and the markers. Restart honesty
-    * matches [[streamedPostingsIngest]]: durable checkpoint under the
+    * matches [[runPostingsWave]]: durable checkpoint under the
     * table dir, wiped with the segment by the fresh-catalog rebuild;
     * `chaos` is the same fault-injection seam, and the mid-wave
     * crash+resume path is driven in the spec. */
@@ -5825,7 +5642,7 @@ object LlmSim extends QueryModule {
       s"graft_rpq_cb2_me${e}_$h",
       s"graft_rpq_cbe2_codes_me${e}_$h") ++
       FoldGens.flatMap(_.tables(dir, e)) ++
-      FoldGens.map(_.nsGen).filter(_ > 1).distinct.flatMap(g =>
+      RenumberGens.flatMap(g =>
         renumberTablesAt(dir, e, g).productIterator.map(_.toString))
   }
 
@@ -6188,6 +6005,10 @@ object LlmSim extends QueryModule {
       maxRounds = MaintSplitRounds, roundBase = 0, nsGen = 2),
     FoldGen(4, "segf4", seal = 0, residue = 2, band = 5L * ArrivalIdBase,
       maxRounds = MaintSplitRounds, roundBase = 0, nsGen = 3))
+
+  /** The namespace generations a renumber opens, oldest first. */
+  private val RenumberGens: Seq[Int] =
+    FoldGens.map(_.nsGen).filter(_ > 1).distinct
 
   /** Fold generation `n`'s row; an undefined generation fails loudly. */
   private[graft] def foldGen(n: Int): FoldGen =
@@ -6922,10 +6743,9 @@ object LlmSim extends QueryModule {
       if (rpqCbEpochOf(s, dir) >= 2)
         sweep(Seq(Seq(s"graft_rpq_cb_$h")))
       // postings df epochs — 0 is the permanent base-snapshot
-      // reference (the health report's drift baseline), the highest
-      // minted is serving; everything between is grace
-      sweep((1 until PostingsBatchAfterStream)
-        .map(b => Seq(postDfTableName(dir, b)))
+      // reference (the health report's drift baseline), the lineage's
+      // newest epoch is serving; every epoch before it is grace
+      sweep(PostEpochs.init.map(r => Seq(postDfTableName(dir, r.e)))
         .filter(_.forall(t => s.catalog.tableExists(t)
           || graft.operators.TxnMarker.managedTableDir(s, t).isDirectory)))
       // maintained epochs — publish-time vacuum already sweeps below
@@ -7030,11 +6850,62 @@ object LlmSim extends QueryModule {
       })
   }
 
-  /** Number of arrival batches the lexical lifecycle fixtures land —
-    * TWO, because exactly-once for the FIRST batch proves nothing
-    * about the second (the r14 single-shot `postings-arrivals-1` txn
-    * was exactly-once for batch 1 and exactly-never for batch 2). */
-  private[graft] val PostingsBatches = 2
+  /** One postings EPOCH of the lexical lifecycle, one row of
+    * [[PostEpochs]]:
+    *  - `stream = false`: the BATCH front lands it — a marker-guarded
+    *    append ([[mintPostingsEpoch]]) and the batch pointer
+    *    ([[postEpochOf]]);
+    *  - `stream = true`: the STREAM front lands it — a readStream wave
+    *    over the one durable checkpoint ([[runPostingsWave]]) and the
+    *    stream pointer ([[postStreamEpochOf]]);
+    *  - `curated`: a curation cycle runs at this high-water —
+    *    keep-newest tombstones ([[postingsTombstones]]) and one COW
+    *    compaction ([[postingsCompacted]]), both tagged [[tag]].
+    * Both fronts share the epoch NUMBER LINE (a reader's `ep <= E`
+    * means the same thing whichever front landed an epoch) and every
+    * epoch draws its documents from the one fixture
+    * ([[postingsDeltaDocs]]). */
+  private[graft] final case class PostEpoch(e: Int, stream: Boolean,
+                                            curated: Boolean) {
+    /** Artifact tag of a curation at this high-water: `pe<e>` on the
+      * batch front, `se<e>` on the stream front. */
+    def tag: String = s"${if (stream) "se" else "pe"}$e"
+  }
+
+  /** The postings lineage, oldest first. TWO initial batches, because
+    * exactly-once for the first batch proves nothing about the second
+    * (the r14 single-shot `postings-arrivals-1` txn was exactly-once
+    * for batch 1 and exactly-never for batch 2); then two streamed
+    * waves, the stream high-water advancing over ONE checkpoint; then
+    * a batch epoch AFTER the stream, whose df merges over the stream
+    * front's published df (the fronts compose on the number line).
+    * Curation runs at the batch-cadence estate, at the first streamed
+    * high-water (the speed layer's catch-up) and at the final one. */
+  private val PostEpochs: Seq[PostEpoch] = Seq(
+    PostEpoch(1, stream = false, curated = false),
+    PostEpoch(2, stream = false, curated = true),
+    PostEpoch(3, stream = true, curated = true),
+    PostEpoch(4, stream = true, curated = false),
+    PostEpoch(5, stream = false, curated = true))
+
+  /** Epoch `e`'s row; an epoch outside the lineage fails loudly. */
+  private def postEpoch(e: Int): PostEpoch =
+    PostEpochs.find(_.e == e).getOrElse(throw new IllegalArgumentException(
+      s"postings epoch $e is not in the lineage table (epochs " +
+        s"${PostEpochs.map(_.e).mkString(", ")})"))
+
+  /** The batch-cadence estate: the batch front's high-water before the
+    * first streamed wave. */
+  private[graft] val PostingsBatches: Int =
+    PostEpochs.takeWhile(!_.stream).last.e
+
+  /** The first STREAMED epoch — the speed layer's tail over the
+    * batch-cadence estate. */
+  private[graft] val PostingsStreamEpoch: Int = PostEpochs.find(_.stream).get.e
+
+  /** The final high-water of one front's pointer. */
+  private def finalPostEpoch(stream: Boolean): Int =
+    PostEpochs.filter(_.stream == stream).last.e
 
   /** The WRITE-OPTIMIZED postings pair, EPOCH-VERSIONED — the lexical
     * index's lifecycle posture beside [[persistedPostings]]'s
@@ -7060,10 +6931,10 @@ object LlmSim extends QueryModule {
     *    the delta's per-word doc counts into the previous epoch's df
     *    — O(delta + vocab), never a corpus re-scan), so it gets the
     *    full fresh-dir treatment: epoch-named tables
-    *    (`graft_post_df_pe<N>`), the previous epoch kept as a grace
-    *    window for in-flight readers, older epochs vacuumed (epoch 0
-    *    is kept as the permanent base-snapshot reference — the df
-    *    drift baseline of the health report).
+    *    (`graft_post_df_pe<N>`), earlier epochs kept as a grace
+    *    window for in-flight readers until [[vacuumEstate]] sweeps
+    *    them (epoch 0 is kept as the permanent base-snapshot reference
+    *    — the df drift baseline of the health report).
     *
     * The epoch POINTER (atomic tmp-write + ATOMIC_MOVE swap, torn
     * reads impossible) and every txn marker live UNDER the postings
@@ -7092,21 +6963,27 @@ object LlmSim extends QueryModule {
     * per epoch there. Do not read the markers as making the rebuild
     * itself multi-writer-safe.
     *
-    * Returns (postings AS OF `upTo` — `ep` pruned off, df at epoch
-    * `upTo`), minting any missing epoch ≤ `upTo` on the way. As-of
-    * reads reach back exactly as far as the grace window keeps df
-    * epochs (here: 0, upTo-1, upTo). */
+    * Returns (postings AS OF `e` — `ep` pruned off, df at epoch `e`),
+    * minting every missing epoch ≤ `e` first, oldest first, each by its
+    * row's front; each front's pointer plus the epoch's df table is the
+    * fast path, so a settled estate pays catalog checks only. Epoch 0
+    * is the base snapshot. `chaos` is the
+    * fault-injection seam (the [[graft.operators.TxnMarker
+    * .MarkerCreate]] precedent): called after each landed micro-batch
+    * of a streamed `e`'s own wave (its predecessors drain without it)
+    * — tests throw from it to cut the stream mid-wave and prove the
+    * resume path; production callers leave the default no-op. */
   private[graft] def postingsEpoch(
-      s: SparkSession, dir: String, upTo: Int): (DataFrame, DataFrame) =
+      s: SparkSession, dir: String, e: Int,
+      chaos: Long => Unit = _ => ()): (DataFrame, DataFrame) =
     postLock.synchronized {
       import s.implicits._
-      require(upTo >= 0 && upTo <= PostingsBatches,
-        s"postings epoch $upTo outside [0, $PostingsBatches]")
+      if (e != 0) postEpoch(e): Unit
       val postT = postTableName(dir)
       val tdir = graft.operators.TxnMarker.managedTableDir(s, postT)
       if (!s.catalog.tableExists(postT)) {
         // fresh catalog: rebuild the whole lifecycle from the corpus —
-        // rmTree wipes stale partitions, markers AND the pointer
+        // rmTree wipes stale partitions, markers AND the pointers
         graft.operators.TxnMarker.rmTree(tdir)
         postTok(Engine.table(s, dir, "documents")
             .select($"doc_id", $"text"))
@@ -7117,30 +6994,23 @@ object LlmSim extends QueryModule {
       LlmText.writeOnceTable(s, postDfTableName(dir, 0), Seq("w"),
         s.table(postT).filter($"ep" === 0)
           .groupBy($"w").agg(count(lit(1)).as("df")))
-      (1 to upTo).foreach { b =>
-        if (postEpochOf(s, dir) < b ||
-            !s.catalog.tableExists(postDfTableName(dir, b))) {
-          mintPostingsEpoch(s, dir, b)
-          // vacuum df epochs past the grace window: keep b (new),
-          // b-1 (grace for in-flight readers), and 0 (the permanent
-          // base-snapshot reference)
-          (1 until b - 1).foreach { old =>
-            val t = postDfTableName(dir, old)
-            if (s.catalog.tableExists(t)) s.sql(s"DROP TABLE $t"): Unit
-            else graft.operators.TxnMarker.rmTree(
-              graft.operators.TxnMarker.managedTableDir(s, t))
-          }
+      PostEpochs.takeWhile(_.e <= e).foreach { r =>
+        val published =
+          if (r.stream) postStreamEpochOf(s, dir) else postEpochOf(s, dir)
+        if (published < r.e ||
+            !s.catalog.tableExists(postDfTableName(dir, r.e))) {
+          if (r.stream)
+            runPostingsWave(s, dir, r.e, if (r.e == e) chaos else _ => ())
+          else mintPostingsEpoch(s, dir, r.e)
         }
       }
-      (s.table(postT).filter($"ep" <= upTo).drop("ep"),
-        s.table(postDfTableName(dir, upTo)))
+      (s.table(postT).filter($"ep" <= e).drop("ep"),
+        s.table(postDfTableName(dir, e)))
     }
 
   private val postLock = new Object
 
-  /** Mint ONE batch epoch — the batch verb's whole body, shared by
-    * the initial epochs ([[postingsEpoch]]'s loop, which adds its
-    * grace-window vacuum) and the batch-after-stream epoch: the delta
+  /** Mint ONE batch epoch — the batch front's whole body: the delta
     * postings materialize ONCE and feed the append, the df merge, and
     * the recovery-path row count alike (RELEASED after the last
     * consumer — the r14 form pinned delta-sized blocks for the JVM's
@@ -7204,16 +7074,15 @@ object LlmSim extends QueryModule {
       .groupBy($"w", $"doc_id").agg(count(lit(1)).as("tf"))
   }
 
-  /** The document ARRIVAL-BATCH fixtures shared by the batch postings
-    * ingest and (batch 1) its streaming encode twin: batch `b` is
-    * every 7th document at residue (2b+1) mod 7, ids shifted by
-    * b·[[ArrivalIdBase]] — disjoint id ranges and disjoint source
-    * docs per batch, the same shape the vector index's ingest delta
-    * has (the mod keeps batch [[PostingsStreamEpoch]] = 3, the
-    * STREAMED wave, on the same formula: residue 0).
-    * ONE derivation, so the documented batch/stream convergence
-    * ("the stream lands exactly the delta-postings relation the
-    * upsert writes") cannot silently drift apart. */
+  /** The document ARRIVAL-BATCH fixtures shared by every postings
+    * epoch, both fronts, and (epoch 1) the streaming encode twin: epoch
+    * `b` is every 7th document at residue (2b+1) mod 7, ids shifted by
+    * b·[[ArrivalIdBase]] — disjoint id ranges and disjoint source docs
+    * per epoch, the same shape the vector index's ingest delta has.
+    * ONE derivation (mirrored once in SQL by [[arrivalDocsSql]]), so
+    * the documented batch/stream convergence ("the stream lands
+    * exactly the delta-postings relation the upsert writes") cannot
+    * silently drift apart. */
   private def postingsDeltaDocs(s: SparkSession, dir: String,
                                 batch: Int = 1): DataFrame = {
     import s.implicits._
@@ -7223,39 +7092,17 @@ object LlmSim extends QueryModule {
         $"text")
   }
 
-  /** The full document estate of the postings lifecycle: base corpus
-    * plus every arrival batch — the doc set the epoch-`PostingsBatches`
-    * index covers and the curation verbs judge. */
-  private def postingsEstateDocs(s: SparkSession, dir: String): DataFrame =
-    postingsEstateDocsUpTo(s, dir, PostingsBatches)
-
-  /** The document estate through arrival batch `maxBatch` — the doc
-    * set an epoch-`maxBatch` reader's curation verbs judge (one
-    * formula, every high-water). */
-  private def postingsEstateDocsUpTo(s: SparkSession, dir: String,
-                                     maxBatch: Int): DataFrame = {
+  /** The document estate through epoch `e`: base corpus plus every
+    * arrival epoch ≤ `e` — the doc set an epoch-`e` reader's curation
+    * judges (one formula, every high-water). */
+  private def postingsEstateDocs(s: SparkSession, dir: String,
+                                 e: Int): DataFrame = {
     import s.implicits._
     val base = Engine.table(s, dir, "documents")
       .select($"doc_id", $"text")
-    (1 to maxBatch).map(postingsDeltaDocs(s, dir, _))
+    (1 to e).map(postingsDeltaDocs(s, dir, _))
       .foldLeft(base)(_.unionByName(_))
   }
-
-  /** The STREAMED ingest wave's epoch number: one past the last batch
-    * wave. The two fronts share the epoch NUMBER LINE (a reader's
-    * `ep <= E` predicate means the same thing whichever front landed
-    * an epoch) but publish SEPARATE high-water pointers — see
-    * [[streamedPostingsIngest]]. */
-  private[graft] val PostingsStreamEpoch = PostingsBatches + 1
-
-  /** The SECOND streamed wave's epoch — the stream high-water
-    * advancing past its first published mark (3 → 4). */
-  private val PostingsStreamEpoch2 = PostingsStreamEpoch + 1
-
-  /** The batch epoch that lands AFTER the streamed epochs on the
-    * shared number line (the stream-then-batch ordering of the
-    * two-front seam). */
-  private val PostingsBatchAfterStream = PostingsStreamEpoch2 + 1
 
   private def postStreamPointerFile(
       s: SparkSession, dir: String): java.io.File =
@@ -7440,77 +7287,41 @@ object LlmSim extends QueryModule {
     srcDir
   }
 
-  /** STREAMING INGEST of the lexical index — the verb that closes the
+  /** Run ONE streamed wave into epoch `e` of the postings table —
+    * STREAMING INGEST of the lexical index, the verb that closes the
     * batch/stream seam: arrival documents flow readStream →
     * foreachBatch → [[landPostingsMicroBatch]], each micro-batch an
-    * exactly-once marker-guarded append into the `ep=3` partition of
-    * the SAME epoch-partitioned postings table the batch waves own;
-    * after the wave drains, df epoch 3 = df epoch 2 ⊕ streamed
-    * per-word doc counts (one vocab ⊕ delta merge — the batch verb's
-    * own discipline) and the STREAM pointer swings atomically.
+    * exactly-once marker-guarded append into the `ep=e` partition of
+    * the SAME epoch-partitioned postings table the batch front owns.
+    * A later wave is the same verb at the next epoch, not a second
+    * stream: materialize the wave's files under the one deterministic
+    * source dir ([[materializeWave]] — later waves APPEND new file
+    * names there), drain the SAME durable checkpoint over it (a
+    * resumed checkpoint replays only files it has not yet listed —
+    * the in-flight batch re-delivers with its original id and epoch
+    * via the committed markers; freshly-arrived files get fresh ids
+    * and THIS wave's epoch), merge df epoch e = epoch (e−1) ⊕ the
+    * landed partition's per-word doc counts, and swing the stream
+    * high-water pointer to e. The wave-ordering invariant that makes
+    * the per-wave epoch lambda safe: [[postingsEpoch]] drains wave e−1
+    * to its published pointer BEFORE materializing wave e's files, so
+    * no file of an earlier wave can be in flight when a later wave's
+    * lambda runs.
     *
     * TWO INGEST FRONTS, two pointers (the lambda-architecture seam,
     * done honestly): the batch front's published epoch
     * ([[postEpochOf]]) is a gated surface (the health report pins
     * both final high-waters) and MUST NOT move when a streamed tail
     * lands — so the stream publishes its own `_graft_epoch_stream`
-    * high-water mark. Every batch-front reader pins `ep <= 2` and is
-    * partition-pruned away from the streamed rows (append-only plus
-    * an epoch predicate: the cheap half of MVCC, again); a reader
-    * that wants the live tail reads `ep <= `[[PostingsStreamEpoch]]
-    * with df epoch 3. Exactly-once across RESTARTS rests on three
-    * legs, each held elsewhere: the checkpoint is DURABLE and lives
-    * UNDER the table dir (`_graft_stream_ckpt` — wiped with the
-    * table by the fresh-catalog rebuild, so checkpoint, markers,
-    * partitions, AND the source files reset as one — the source is
-    * the deterministic [[materializeWave]] dir, stable across
-    * processes), Spark re-delivers a replayed batch with the same
+    * high-water mark. A batch-cadence reader pins `ep <= 2` and is
+    * partition-pruned away from the streamed rows. Exactly-once
+    * across RESTARTS rests on three legs, each held elsewhere: the
+    * checkpoint is DURABLE and lives UNDER the table dir
+    * (`_graft_stream_ckpt` — wiped with the table by the fresh-catalog
+    * rebuild, so checkpoint, markers, partitions, AND the source files
+    * reset as one), Spark re-delivers a replayed batch with the same
     * batchId against the same source files, and the marker protocol
     * makes re-delivery a no-op.
-    * `chaos` is the fault-injection seam (the [[graft.operators
-    * .TxnMarker.MarkerCreate]] precedent): called after each landed
-    * batch, tests throw from it to cut the stream mid-wave and prove
-    * the resume path — production callers leave the default no-op.
-    *
-    * Returns (postings as of the streamed epoch — `ep` pruned off,
-    * df at the streamed epoch). df epochs 2 and 3 both stay
-    * readable: 2 is the batch front's published artifact, not a
-    * grace-window survivor — the stream vacuums nothing it does not
-    * own (df epoch 1 remains pinned by the gated as-of probe; a
-    * production deployment would let the next batch compaction
-    * reclaim it). */
-  private[graft] def streamedPostingsIngest(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): (DataFrame, DataFrame) =
-    postLock.synchronized {
-      import s.implicits._
-      val e = PostingsStreamEpoch
-      // the batch front publishes first: the streamed wave is a TAIL
-      // on top of a fully-committed batch estate, not a racer
-      postingsEpoch(s, dir, PostingsBatches)
-      if (postStreamEpochOf(s, dir) < e ||
-          !s.catalog.tableExists(postDfTableName(dir, e)))
-        runPostingsWave(s, dir, e, chaos)
-      (s.table(postTableName(dir)).filter($"ep" <= e).drop("ep"),
-        s.table(postDfTableName(dir, e)))
-    }
-
-  /** Run ONE streamed wave into epoch `e` of the postings table —
-    * the machinery of [[streamedPostingsIngest]] factored so a LATER
-    * wave is the same verb at the next epoch, not a second stream:
-    * materialize the wave's files under the one deterministic source
-    * dir ([[materializeWave]] — later waves APPEND new file names
-    * there), drain the SAME durable checkpoint over it (a resumed
-    * checkpoint replays only files it has not yet listed — the
-    * in-flight batch re-delivers with its original id and epoch via
-    * the committed markers; freshly-arrived files get fresh ids and
-    * THIS wave's epoch), merge df epoch e = epoch (e−1) ⊕ the landed
-    * partition's per-word doc counts, and swing the stream
-    * high-water pointer to e. The wave-ordering invariant that makes
-    * the per-wave epoch lambda safe: every caller drains wave e−1 to
-    * its published pointer BEFORE materializing wave e's files, so
-    * no file of an earlier wave can be in flight when a later wave's
-    * lambda runs.
     *
     * CONCURRENCY BOUNDARY, same as [[postingsEpoch]]'s: the
     * cross-process property this runner claims is SEQUENTIAL resume
@@ -7557,134 +7368,68 @@ object LlmSim extends QueryModule {
       publishEpochPointer(postStreamPointerFile(s, dir), e)
   }
 
-  /** The SECOND streamed wave — the stream high-water ADVANCING
-    * (3 → 4), the interleaving the r15 gate left open: wave 2's
-    * files land in the SAME source dir the first wave used and the
-    * SAME durable checkpoint resumes over them, so exactly-once is
-    * carried by the machinery a real deployment would actually
-    * re-enter (offset log + per-batch markers), not by a fresh
-    * stream per wave. df epoch 4 = df epoch 3 ⊕ wave 2's counts;
-    * the BATCH front's pointer does not move (two fronts, two
-    * pointers — pinned in spec for this order too). */
-  private[graft] def streamedPostingsWave2(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): (DataFrame, DataFrame) =
-    postLock.synchronized {
-      import s.implicits._
-      val e = PostingsStreamEpoch2
-      // wave 1 drains to its published pointer FIRST — the
-      // wave-ordering invariant runPostingsWave's epoch lambda needs
-      streamedPostingsIngest(s, dir)
-      if (postStreamEpochOf(s, dir) < e ||
-          !s.catalog.tableExists(postDfTableName(dir, e)))
-        runPostingsWave(s, dir, e, chaos)
-      (s.table(postTableName(dir)).filter($"ep" <= e).drop("ep"),
-        s.table(postDfTableName(dir, e)))
-    }
-
-  /** A BATCH epoch landing AFTER the streamed epochs on the shared
-    * number line — the other order of the two-front seam (the r15
-    * gate covered batch-then-stream only): epoch 5 lands via the
-    * batch verb (txn-marker exactly-once append + vocab-sized df
-    * merge over df epoch 4 — the stream's published artifact; the
-    * fronts COMPOSE on the number line, neither re-derives the
-    * other's work) and swings the BATCH pointer 2 → 5 while the
-    * stream pointer stays at 4. Deliberately NO df vacuum here: the
-    * batch-front grace rule would reclaim df epochs 1..3, but epoch
-    * 1 is pinned by the gated as-of probe and 3..4 are the stream
-    * front's published artifacts — reclamation belongs to the next
-    * compaction cycle, not to this append (the same honesty note as
-    * the stream's). */
-  private[graft] def postingsBatchAfterStream(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    postLock.synchronized {
-      import s.implicits._
-      val b = PostingsBatchAfterStream
-      streamedPostingsWave2(s, dir) // epochs ≤ 4 committed, both pointers set
-      // the SAME mint body as the initial batch epochs — the fronts
-      // compose because its df merge reads epoch b−1, which here is
-      // the STREAM front's published artifact. Deliberately no vacuum
-      // (postingsEpoch's loop owns that): df epochs 1..4 stay pinned
-      // by gated probes / owned by the stream front — reclamation
-      // belongs to the next compaction cycle, not to this append.
-      if (postEpochOf(s, dir) < b ||
-          !s.catalog.tableExists(postDfTableName(dir, b)))
-        mintPostingsEpoch(s, dir, b)
-      (s.table(postTableName(dir)).filter($"ep" <= b).drop("ep"),
-        s.table(postDfTableName(dir, b)))
-    }
-
-  /** Oracle-side document estate INCLUDING the streamed wave: the
-    * [[postingsEstateSql]] shape generated over batches
-    * 1..[[PostingsStreamEpoch]] from the one fixture formula
-    * ([[postingsDeltaDocs]]'s residue (2b+1) mod 7, shift
-    * b·[[ArrivalIdBase]]). Kept separate from the hand-written
-    * 2-batch CTE so the four oracles already gated on it stay
-    * byte-identical. */
-  private def postingsEstateStreamSql: String =
-    postingsEstateSqlUpTo(PostingsStreamEpoch)
-
-  /** The estate CTE set over arrival batches 1..`maxBatch` — ONE
-    * shape for every epoch high-water an oracle re-derives (the
-    * epoch-3 streamed estate, the epoch-4 second wave, the epoch-5
-    * batch-after-stream), generated from the one fixture formula
-    * ([[postingsDeltaDocs]]'s residue (2b+1) mod 7, shift
-    * b·[[ArrivalIdBase]]). Defines alld and tok. */
-  private def postingsEstateSqlUpTo(maxBatch: Int): String = {
-    val nds = (1 to maxBatch).map(b => s"""nd$b AS (
-          SELECT doc_id + ${b * ArrivalIdBase} AS doc_id, text
-          FROM documents WHERE doc_id % 7 = ${(2 * b + 1) % 7})""")
-      .mkString(",\n        ")
-    val unions = (1 to maxBatch)
-      .map(b => s"UNION ALL SELECT doc_id, text FROM nd$b")
-      .mkString("\n          ")
-    s"""$nds,
-        alld AS (
+  /** The oracle-side document estate through epoch `e`: the base
+    * corpus plus [[arrivalDocsSql]] over epochs 1..`e`, tokenized —
+    * ONE shape for every epoch high-water an oracle re-derives.
+    * Defines alld and tok. */
+  private def postingsEstateSqlUpTo(e: Int): String =
+    s"""alld AS (
           SELECT doc_id, text FROM documents
-          $unions),
+          UNION ALL ${arrivalDocsSql(1 to e)}),
         tok AS (
           SELECT w, doc_id, count(*) AS tf FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS w
             FROM alld)
           GROUP BY w, doc_id)"""
+
+  /** The arrival documents of postings `epochs` in SQL, one SELECT per
+    * epoch joined by UNION ALL — [[postingsDeltaDocs]]'s residue
+    * (2b+1) mod 7 and shift b·[[ArrivalIdBase]], mirrored once for
+    * every oracle that re-derives an epoch's documents. */
+  private def arrivalDocsSql(epochs: Seq[Int]): String =
+    epochs.map(b => s"""SELECT doc_id + ${b * ArrivalIdBase} AS doc_id, text
+          FROM documents WHERE doc_id % 7 = ${(2 * b + 1) % 7}""")
+      .mkString("\n          UNION ALL ")
+
+  /** The curated row at high-water `e`; a high-water the lineage does
+    * not curate fails loudly. */
+  private def curatedEpoch(e: Int): PostEpoch = {
+    val r = postEpoch(e)
+    if (!r.curated) throw new IllegalArgumentException(
+      s"postings epoch $e is not curated in the lineage table (curated " +
+        s"epochs ${PostEpochs.filter(_.curated).map(_.e).mkString(", ")})")
+    r
   }
 
-  /** Document TOMBSTONES for the lexical index — the delete verb of
-    * the postings lifecycle. Curation rule: keep-NEWEST exact-dup
-    * dedup over the epoch estate (per distinct text, every doc but
-    * the largest id is dropped — a re-crawl supersedes its original;
-    * the arrival batches are re-crawls of their source docs, so the
-    * ingest history curates itself, and base-corpus dup clusters keep
-    * their newest member). O(deleted) (doc_id) artifact, bucketed on
-    * doc_id, named with the epoch it was judged against (the estate
-    * is an epoch-function — the maintained-tombstone discipline).
-    * Shipped broadcast at probe time (deleted-set-sized — re-crawl
-    * rate × corpus, not corpus; past broadcast size the escape hatch
-    * is a doc_id-bucketed anti-join, one postings shuffle per
-    * compaction cycle). */
-  private[graft] def persistedPostingsTombstones(
-      s: SparkSession, dir: String): DataFrame = {
-    postingsEpoch(s, dir, PostingsBatches) // verdicts target the full estate
-    keepNewestTombstones(s,
-      s"graft_post_tomb_pe${PostingsBatches}_${math.abs(dir.hashCode)}",
-      postingsEstateDocs(s, dir))
+  /** Document TOMBSTONES for the lexical index at curated high-water
+    * `e` — the delete verb of the postings lifecycle. Curation rule:
+    * keep-NEWEST exact-dup dedup over the epoch-`e` estate (per
+    * distinct text, every doc but the largest id is dropped — a
+    * re-crawl supersedes its original; the arrival epochs are
+    * re-crawls of their source docs, so the ingest history curates
+    * itself, and base-corpus dup clusters keep their newest member).
+    * Keep-newest is an estate function, so the cycle composes: a later
+    * high-water never needs an earlier cycle's verdicts, and its
+    * verdicts extend them. O(deleted) (doc_id) artifact, bucketed on
+    * doc_id, tagged with the epoch it judged (the maintained-tombstone
+    * discipline). Shipped broadcast at probe time (deleted-set-sized —
+    * re-crawl rate × corpus, not corpus; past broadcast size the
+    * escape hatch is a doc_id-bucketed anti-join, one postings shuffle
+    * per compaction cycle). */
+  private[graft] def postingsTombstones(
+      s: SparkSession, dir: String, e: Int): DataFrame = {
+    val r = curatedEpoch(e)
+    postingsEpoch(s, dir, e) // verdicts target the estate as of e
+    LlmText.writeOnceTable(s,
+      s"graft_post_tomb_${r.tag}_${math.abs(dir.hashCode)}", Seq("doc_id"), {
+        import s.implicits._
+        val d = postingsEstateDocs(s, dir, e)
+        d.join(d.groupBy($"text").agg(max($"doc_id").as("keep_id")),
+            Seq("text"))
+          .filter($"doc_id" =!= $"keep_id")
+          .select($"doc_id")
+      })
   }
-
-  /** The ONE keep-newest verdict derivation, shared by both estates
-    * (the oracle tail's one-derivation discipline carried to the
-    * Scala side): per distinct text, every doc but the largest id
-    * drops — a fix to the curation rule lands on every estate or
-    * none. */
-  private def keepNewestTombstones(
-      s: SparkSession, tbl: String, docs: => DataFrame): DataFrame =
-    LlmText.writeOnceTable(s, tbl, Seq("doc_id"), {
-      import s.implicits._
-      val d = docs
-      d.join(d.groupBy($"text").agg(max($"doc_id").as("keep_id")),
-          Seq("text"))
-        .filter($"doc_id" =!= $"keep_id")
-        .select($"doc_id")
-    })
 
   /** The df DECREMENT of a tombstone set: per-word doc counts of the
     * deleted docs' postings — df is corpus-global, so a deleted doc
@@ -7706,7 +7451,7 @@ object LlmSim extends QueryModule {
       s: SparkSession, dir: String, k: Int): DataFrame = {
     import s.implicits._
     val (post, df) = postingsEpoch(s, dir, PostingsBatches)
-    val tomb = persistedPostingsTombstones(s, dir).select($"doc_id")
+    val tomb = postingsTombstones(s, dir, PostingsBatches).select($"doc_id")
     val live = post.join(broadcast(tomb), Seq("doc_id"), "left_anti")
     val dfEff = df.join(postingsDfDel(post, tomb), Seq("w"), "left")
       .select($"w", ($"df" - coalesce($"dfd", lit(0L))).as("df"))
@@ -7714,31 +7459,21 @@ object LlmSim extends QueryModule {
       .select($"q_id", $"rank", $"doc_id", $"su")
   }
 
-  /** The compacted postings pair: tombstones FOLDED into one rewrite
-    * of each relation — live postings (epoch partitions collapsed;
-    * compaction is where the MOR pair pays its COW) and decremented
-    * df (zero-df words dropped: no surviving posting can reach them).
-    * Same survivor scoring as the live path by construction — both
-    * probes share [[postingsDeleteOracleSql]]. */
-  private[graft] def persistedPostingsCompacted(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** The compacted postings pair at curated high-water `e`: the
+    * epoch's tombstones FOLDED into one rewrite of each relation —
+    * live postings (broadcast anti-join, epoch partitions 0..`e`
+    * collapsed; compaction is where the MOR pair pays its COW, and on
+    * the lexical side absorbing a streamed partition IS the fold) and
+    * decremented df (zero-df words dropped: no surviving posting can
+    * reach them). Same survivor scoring as the live path by
+    * construction — at the batch-cadence estate both probes share
+    * [[postingsCuratedOracleSql]]. */
+  private[graft] def postingsCompacted(
+      s: SparkSession, dir: String, e: Int): (DataFrame, DataFrame) = {
     import s.implicits._
-    val (post, df) = postingsEpoch(s, dir, PostingsBatches)
-    compactedPostingsPair(s,
-      s"pe${PostingsBatches}_${math.abs(dir.hashCode)}", post, df,
-      persistedPostingsTombstones(s, dir).select($"doc_id"))
-  }
-
-  /** The ONE COW compaction of a postings pair against a tombstone
-    * set, shared by both estates: live postings (broadcast anti-join,
-    * epoch partitions collapsed) and decremented df (zero-df words
-    * dropped — no surviving posting can reach them). A change to the
-    * fold (the decrement, the broadcast escape hatch) lands on every
-    * estate or none. */
-  private def compactedPostingsPair(
-      s: SparkSession, tag: String, post: DataFrame, df: DataFrame,
-      tomb: DataFrame): (DataFrame, DataFrame) = {
-    import s.implicits._
+    val tag = s"${curatedEpoch(e).tag}_${math.abs(dir.hashCode)}"
+    val (post, df) = postingsEpoch(s, dir, e)
+    val tomb = postingsTombstones(s, dir, e).select($"doc_id")
     val postL = LlmText.writeOnceTable(s,
       s"graft_post_live_$tag", Seq("w"),
       post.join(broadcast(tomb), Seq("doc_id"), "left_anti")
@@ -7750,87 +7485,6 @@ object LlmSim extends QueryModule {
         .filter($"df" > 0))
     (postL, dfL)
   }
-
-  /** Curation CATCH-UP over the streamed estate — the lexical
-    * analogue of the vector segment fold: the next batch-cadence
-    * curation cycle re-judges keep-newest over base ∪ both batch
-    * waves ∪ the STREAMED wave (the wave docs are re-crawls, so their
-    * sources get superseded exactly like the batch arrivals' did),
-    * landing the verdicts as an O(deleted) tombstone artifact named
-    * with the STREAM epoch it absorbed. This is the verb that ENDS
-    * the speed layer's stated uncurated window. */
-  private[graft] def persistedPostingsTombstonesStream(
-      s: SparkSession, dir: String): DataFrame = {
-    streamedPostingsIngest(s, dir) // verdicts target the streamed estate
-    keepNewestTombstones(s,
-      s"graft_post_tomb_se${PostingsStreamEpoch}_${math.abs(dir.hashCode)}",
-      postingsEstateDocs(s, dir)
-        .unionByName(postingsDeltaDocs(s, dir, PostingsStreamEpoch)))
-  }
-
-  /** COW compaction of the streamed estate: the catch-up verdicts
-    * folded into one live pair — epoch partitions 0..3 collapsed
-    * (the streamed partition included: absorption IS the fold on the
-    * lexical side), df decremented by the dropped docs' per-word
-    * counts, zero-df words gone. The [[persistedPostingsCompacted]]
-    * machinery over the larger estate, epoch-named with the stream
-    * epoch it absorbed. */
-  private[graft] def persistedPostingsCompactedStream(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val (post, df) = streamedPostingsIngest(s, dir)
-    compactedPostingsPair(s,
-      s"se${PostingsStreamEpoch}_${math.abs(dir.hashCode)}", post, df,
-      persistedPostingsTombstonesStream(s, dir).select($"doc_id"))
-  }
-
-  /** Catch-up verdicts over the FULL grown estate — epochs 0..5,
-    * both streamed waves and the batch-after-stream epoch included:
-    * the curation cycle run again at the next high-water (keep-newest
-    * is an estate function, so the cycle composes — it never needs
-    * the previous cycle's verdicts, only the current estate). Named
-    * with the batch high-water it judged. */
-  private def persistedPostingsTombstones2(
-      s: SparkSession, dir: String): DataFrame = {
-    postingsBatchAfterStream(s, dir) // verdicts target the grown estate
-    keepNewestTombstones(s,
-      s"graft_post_tomb_pe${PostingsBatchAfterStream}_${
-        math.abs(dir.hashCode)}",
-      postingsEstateDocsUpTo(s, dir, PostingsBatchAfterStream))
-  }
-
-  /** COW compaction of the grown estate: epoch partitions 0..5
-    * collapsed into one live pair under the epoch-5 verdicts — the
-    * [[persistedPostingsCompactedStream]] machinery at the next
-    * high-water. */
-  private def persistedPostingsCompacted2(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val (post, df) = postingsBatchAfterStream(s, dir)
-    compactedPostingsPair(s,
-      s"pe${PostingsBatchAfterStream}_${math.abs(dir.hashCode)}",
-      post, df, persistedPostingsTombstones2(s, dir).select($"doc_id"))
-  }
-
-  /** The full-estate CTE fragment shared by the epoch-2 probe, the
-    * delete pair's oracle, and the health report: both arrival
-    * batches re-derived, estate tokenized. Defines nd, nd2, alld,
-    * tok. */
-  private def postingsEstateSql: String = s"""nd AS (
-          SELECT doc_id + $ArrivalIdBase AS doc_id, text
-          FROM documents WHERE doc_id % 7 = 3),
-        nd2 AS (
-          SELECT doc_id + ${2 * ArrivalIdBase} AS doc_id, text
-          FROM documents WHERE doc_id % 7 = 5),
-        alld AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL SELECT doc_id, text FROM nd
-          UNION ALL SELECT doc_id, text FROM nd2),
-        tok AS (
-          SELECT w, doc_id, count(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM alld)
-          GROUP BY w, doc_id)"""
 
   /** The tf-idf probe TAIL over an estate's `tok` CTE — the
     * uncurated-read mirror of [[postingsKeepNewestProbeSql]], shared
@@ -7884,20 +7538,41 @@ object LlmSim extends QueryModule {
           FROM tsc)
         WHERE rank <= 5"""
 
-  /** ONE oracle for BOTH lexical delete read paths: survivors =
-    * keep-newest per distinct text over the estate, postings + df
-    * re-derived from scratch over the survivors (which equals
-    * estate-postings − tombstoned rows and estate-df − decrements:
-    * doc sets are disjoint, counts subtract exactly). */
-  private lazy val postingsDeleteOracleSql: String = s"""
-        WITH $postingsEstateSql,
+  /** ONE oracle for every curated read of high-water `e`: survivors =
+    * keep-newest per distinct text over the epoch-`e` estate, postings
+    * + df re-derived from scratch over the survivors (which equals
+    * estate-postings − tombstoned rows and estate-df − decrements: doc
+    * sets are disjoint, counts subtract exactly). */
+  private def postingsCuratedOracleSql(e: Int): String = s"""
+        WITH ${postingsEstateSqlUpTo(e)},
         $postingsKeepNewestProbeSql"""
 
-  /** The same curation + probe tail judged over the STREAMED estate
-    * — the catch-up compaction's oracle. */
-  private lazy val postingsStreamCompactOracleSql: String = s"""
-        WITH $postingsEstateStreamSql,
-        $postingsKeepNewestProbeSql"""
+  /** The as-landed probe of postings epoch `e` — the shared query-term
+    * fixture broadcast onto the bucketed postings scan AS OF `e`, then
+    * an exchange-free co-bucketed join to df epoch `e` — gated against
+    * a from-scratch derive over the epoch-`e` estate. */
+  private def postingsProbeDef(e: Int): QueryDef = QueryDef(
+    fn = (s, dir) => {
+      import s.implicits._
+      val (post, df) = postingsEpoch(s, dir, e)
+      lexRank(post, lexQterms(s, dir), _.join(df, Seq("w")), 5)
+        .select($"q_id", $"rank", $"doc_id", $"su")
+    },
+    oracle = Some(s"""
+        WITH ${postingsEstateSqlUpTo(e)},
+        $postingsTfIdfProbeSql"""))
+
+  /** The compacted probe of curated high-water `e` — the same probe
+    * over [[postingsCompacted]]'s live pair, gated by
+    * [[postingsCuratedOracleSql]]. */
+  private def postingsCompactDef(e: Int): QueryDef = QueryDef(
+    fn = (s, dir) => {
+      import s.implicits._
+      val (postL, dfL) = postingsCompacted(s, dir, e)
+      lexRank(postL, lexQterms(s, dir), _.join(dfL, Seq("w")), 5)
+        .select($"q_id", $"rank", $"doc_id", $"su")
+    },
+    oracle = Some(postingsCuratedOracleSql(e)))
 
   /** Per-row (word, tf) pairs of one document via SORTED RUNS — the
     * shuffle-free tokenizer of the streaming postings encode.
@@ -8480,8 +8155,8 @@ object LlmSim extends QueryModule {
     // 57→112 jobs, all first-toucher) — land the builds on their own
     // labeled lines so every gated query's group measures its READ
     // plan. Each forces its full dependency chain (fold codes →
-    // fold → segments → commit; batch-after-stream → wave 2 → wave 1
-    // → batch epochs).
+    // fold → segments → commit; the newest postings epoch → every
+    // earlier one).
     "ivf_estate" -> (() => {
       // per-stage stderr timing (r19): the estate build is the
       // sitting's largest single build line — its breakdown should be
@@ -8508,5 +8183,5 @@ object LlmSim extends QueryModule {
       }
     }),
     "postings_estate" -> (() =>
-      { postingsBatchAfterStream(s, dir); () }))
+      { postingsEpoch(s, dir, PostEpochs.last.e); () }))
 }

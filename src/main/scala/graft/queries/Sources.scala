@@ -20,7 +20,8 @@ object Sources extends QueryModule {
   private val dirs = scala.collection.concurrent.TrieMap[String, String]()
 
   private def tempFor(tag: String, dir: String): String =
-    dirs.getOrElseUpdate(s"$tag:$dir", Engine.scratchDir(s"graft_$tag"))
+    dirs.getOrElseUpdate(s"$tag:$dir",
+      graft.streaming.Replay.removedAtExit(s"graft_$tag"))
 
   /** The shared three-version TxLog history artifact (build-once per
     * JVM, the standard artifact lifecycle): v0 appends even suppliers,

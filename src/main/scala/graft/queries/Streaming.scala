@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Engine, QueryDef, QueryModule}
 import graft.functions.Fns.dsum
+import graft.operators.TxnMarker
 import graft.streaming.Replay
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,12 +21,7 @@ object Streaming extends QueryModule {
   private val dirs = scala.collection.concurrent.TrieMap[String, String]()
 
   private def tempFor(tag: String, dir: String): String =
-    dirs.getOrElseUpdate(s"$tag:$dir", Engine.scratchDir(s"graft_$tag"))
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
-  }
+    dirs.getOrElseUpdate(s"$tag:$dir", Replay.removedAtExit(s"graft_$tag"))
 
   def defs: Vector[(String, QueryDef)] = Vector(
 
@@ -338,8 +334,8 @@ object Streaming extends QueryModule {
         }
         // idempotent per call: the sink and checkpoint restart fresh
         val sink = s"$root/sink"
-        rmTree(new java.io.File(sink))
-        rmTree(new java.io.File(s"$root/ckpt"))
+        TxnMarker.rmTree(new java.io.File(sink))
+        TxnMarker.rmTree(new java.io.File(s"$root/ckpt"))
         val schema = s.read.parquet(inDir).schema
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 2).parquet(inDir)
@@ -383,8 +379,8 @@ object Streaming extends QueryModule {
             .write.mode("overwrite").parquet(inDir)
         }
         val table = s"$root/table"
-        rmTree(new java.io.File(table))
-        rmTree(new java.io.File(s"$root/ckpt"))
+        TxnMarker.rmTree(new java.io.File(table))
+        TxnMarker.rmTree(new java.io.File(s"$root/ckpt"))
         val schema = s.read.parquet(inDir).schema
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 2).parquet(inDir)
@@ -428,7 +424,7 @@ object Streaming extends QueryModule {
         val srcTable = s"$root/src"
         val dstTable = s"$root/dst"
         Seq("src", "dst", "ckpt", "ckpt2")
-          .foreach(d => rmTree(new java.io.File(s"$root/$d")))
+          .foreach(d => TxnMarker.rmTree(new java.io.File(s"$root/$d")))
         val ev = Replay.events(s, dir)
           .select($"event_id", $"event_type", $"value")
         for (i <- 0 until 3) // three append commits, deterministic split
@@ -465,7 +461,7 @@ object Streaming extends QueryModule {
         val srcTable = s"$root/src"
         val sink = s"$root/changelog"
         Seq("src", "changelog", "ckpt")
-          .foreach(d => rmTree(new java.io.File(s"$root/$d")))
+          .foreach(d => TxnMarker.rmTree(new java.io.File(s"$root/$d")))
         val ev = Replay.events(s, dir)
           .select($"event_id", $"event_type", $"value")
         // v0: append everything (range-clustered so the delete is
@@ -505,7 +501,7 @@ object Streaming extends QueryModule {
         val srcTable = s"$root/src"
         val sink = s"$root/changelog"
         Seq("src", "changelog", "ckpt")
-          .foreach(d => rmTree(new java.io.File(s"$root/$d")))
+          .foreach(d => TxnMarker.rmTree(new java.io.File(s"$root/$d")))
         val sup = Engine.table(s, dir, "supplier")
           .select($"s_suppkey", $"s_nationkey".cast("int").as("nation"),
             $"s_acctbal")
@@ -677,7 +673,8 @@ object Streaming extends QueryModule {
         val inDir = s"$root/in"
         val sink = s"$root/sink"
         val ckpt = s"$root/ckpt"
-        Seq(inDir, sink, ckpt).foreach(p => rmTree(new java.io.File(p)))
+        Seq(inDir, sink, ckpt)
+          .foreach(p => TxnMarker.rmTree(new java.io.File(p)))
         val ev = Engine.events(s, dir)
           .select($"event_id", $"user_id", $"event_type", $"value")
         // wave 1 now; wave 2 arrives only after the first run terminates.

@@ -220,21 +220,30 @@ object SubjectOps extends QueryModule {
 
     // DAILY ACTIVE USERS + 7-day rolling mean — the engagement rollup
     // every trail pipeline publishes: distinct users per day (one
-    // dedup + tiny agg), then a rows-frame window over the daily
-    // series. The rolling mean divides an exact long sum by the frame
-    // count — one IEEE op, bit-identical cross-engine.
+    // dedup + tiny agg), then a 7-row frame over the daily series.
+    // The series is one row per day, so the frame is computed over
+    // the collected series rather than as a window with no
+    // partition key (which Spark plans as one single-partition
+    // exchange, and warns about). The rolling mean divides an exact
+    // long sum by the frame count — one IEEE op, bit-identical
+    // cross-engine.
     "q_evt_dau" -> QueryDef(
       fn = (s, dir) => {
         import s.implicits._
-        import org.apache.spark.sql.expressions.Window
+        import org.apache.spark.sql.Row
         val daily = Engine.events(s, dir)
           .select(date_trunc("day", $"ts").as("d"), $"user_id")
           .distinct()
           .groupBy($"d").agg(count(lit(1)).as("dau"))
-        val w = Window.orderBy($"d").rowsBetween(-6, 0)
-        daily.withColumn("avg7",
-          sum($"dau").over(w).cast("double")
-            / count($"dau").over(w).cast("double"))
+        val days = daily.orderBy($"d").collect()
+        val dau = days.map(_.getLong(1))
+        val rows = days.indices.map { i =>
+          val frame = dau.slice(math.max(0, i - 6), i + 1)
+          Row(days(i).get(0), dau(i),
+            frame.sum.toDouble / frame.length.toDouble)
+        }
+        s.createDataFrame(java.util.Arrays.asList(rows: _*),
+          daily.schema.add("avg7", "double"))
       },
       oracle = Some("""
         WITH daily AS (

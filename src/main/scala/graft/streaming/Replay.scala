@@ -35,10 +35,10 @@ object Replay {
   // Replay inputs and parquet sink dirs outlive their drain (`inputCache`
   // and the returned frame read them), so they go when the JVM exits;
   // tmpfs outlives the process, and without this every drain left its
-  // dirs in RAM.
+  // dirs in RAM. The query modules' per-JVM scratch dirs share the list.
   private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[File]()
   sys.addShutdownHook(exitDirs.forEach(d => TxnMarker.rmTree(d)))
-  private def removedAtExit(tag: String): String = {
+  private[graft] def removedAtExit(tag: String): String = {
     val d = graft.Engine.scratchDir(tag)
     exitDirs.add(new File(d))
     d

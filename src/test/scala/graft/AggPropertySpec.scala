@@ -647,27 +647,13 @@ class AggPropertySpec extends AnyFunSuite {
   }
 
   test("renumber re-key: dense rank mapping, payload identity, survivor-exact over random namespaces") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
     import spark.implicits._
     import graft.queries.LlmSim
+    val rnd = new scala.util.Random(1318)
     // every WARN the re-key logs, through an appender on the root logger:
     // the mapping must not plan a single-partition window (WindowExec
     // warns "No Partition Defined" on every such plan)
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender(
-        "graft-renumber-warns", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        warns.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
-    ctx.updateLoggers()
-    val rnd = new scala.util.Random(1318)
-    try (0 until 4).foreach { trial =>
+    val warns = rootWarns((0 until 4).foreach { trial =>
       // random cid namespace shaped like the post-fold estate: sparse,
       // offset-banded ids up to 2^31-1 (the exact values the renumber
       // exists to collapse), random cell sizes, random tombstones
@@ -720,12 +706,8 @@ class AggPropertySpec extends AnyFunSuite {
         .toMap
       assert(codesGot.keySet === liveRows.map(_._2).toSet,
         s"trial $trial: codes key set != survivors")
-    } finally {
-      ctx.getConfiguration.getRootLogger.removeAppender("graft-renumber-warns")
-      ctx.updateLoggers()
-    }
-    val windowWarns =
-      warns.toArray.count(_.toString.contains("No Partition Defined"))
+    })
+    val windowWarns = warns.count(_.contains("No Partition Defined"))
     assert(windowWarns === 0, "re-key planned a single-partition window")
   }
 }

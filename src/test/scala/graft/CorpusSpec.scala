@@ -7,6 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   lazy val spark: SparkSession = Engine.session("graft-test", cores = "4")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The WARN-and-above messages logged anywhere while `body` runs,
+    * through an appender on the root logger (no logger level moves). */
+  def rootWarns(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val name = s"graft-spec-warns-${System.nanoTime()}"
+    val appender = new AbstractAppender(
+        name, null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(name)
+      ctx.updateLoggers()
+    }
+    warns.toArray.map(_.toString).toSeq
+  }
 }
 
 /** t1 smoke: every declared query executes and returns rows at sf0.001. */
@@ -22,6 +48,17 @@ class CorpusSpec extends AnyFunSuite {
       val n = d.fn(spark, sf).count()
       assert(n > 0, s"query $name returned 0 rows")
     }
+  }
+
+  test("event rollups plan no single-partition window") {
+    // WindowExec warns "No Partition Defined" on every unpartitioned
+    // window it plans; the daily series' rolling frame must not be one
+    // (collected, so no column pruning drops the frame)
+    val warns = rootWarns(SparkEntry.all.map(_._1)
+      .filter(_.startsWith("q_evt_")).foreach(q =>
+        assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)))
+    assert(!warns.exists(_.contains("No Partition Defined")),
+      warns.filter(_.contains("Window")).mkString("\n"))
   }
 
   test("approx_count_distinct within 5% of exact") {

@@ -1474,7 +1474,7 @@ class OperatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val (post, df) = LlmSim.postingsEpoch(spark, sf, 2)
-    val tomb = LlmSim.persistedPostingsTombstones(spark, sf)
+    val tomb = LlmSim.postingsTombstones(spark, sf, 2)
       .select($"doc_id").as[Long].collect().toSet
     assert(tomb.nonEmpty, "no curation drops over the estate")
     val estateIds = post.select($"doc_id").distinct()
@@ -1484,7 +1484,7 @@ class OperatorSpec extends AnyFunSuite {
     // re-crawl, so batch sources are tombstoned and arrivals survive
     assert(tomb.exists(_ < LlmSim.ArrivalIdBase),
       "no base doc superseded — keep-newest never fired")
-    val (postL, dfL) = LlmSim.persistedPostingsCompacted(spark, sf)
+    val (postL, dfL) = LlmSim.postingsCompacted(spark, sf, 2)
     // row-exact fold: compacted postings = estate minus deleted docs' rows
     val deadRows = post.filter($"doc_id".isInCollection(tomb)).count()
     assert(postL.count() === post.count() - deadRows,
@@ -1513,10 +1513,10 @@ class OperatorSpec extends AnyFunSuite {
     import graft.queries.LlmSim
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val (post, df) = LlmSim.streamedPostingsIngest(spark, sf)
-    val batchTomb = LlmSim.persistedPostingsTombstones(spark, sf)
+    val (post, df) = LlmSim.postingsEpoch(spark, sf, 3)
+    val batchTomb = LlmSim.postingsTombstones(spark, sf, 2)
       .select($"doc_id").as[Long].collect().toSet
-    val tomb = LlmSim.persistedPostingsTombstonesStream(spark, sf)
+    val tomb = LlmSim.postingsTombstones(spark, sf, 3)
       .select($"doc_id").as[Long].collect().toSet
     // the catch-up judges a SUPERSET estate with the same rule: every
     // batch-cadence verdict stands, and the streamed wave's re-crawl
@@ -1525,7 +1525,7 @@ class OperatorSpec extends AnyFunSuite {
       "catch-up curation reversed a batch-cadence verdict")
     assert((tomb -- batchTomb).nonEmpty,
       "the streamed wave's sources were never superseded")
-    val (postL, dfL) = LlmSim.persistedPostingsCompactedStream(spark, sf)
+    val (postL, dfL) = LlmSim.postingsCompacted(spark, sf, 3)
     val deadRows = post.filter($"doc_id".isInCollection(tomb)).count()
     assert(postL.count() === post.count() - deadRows,
       "catch-up compaction dropped or kept the wrong posting rows")
@@ -1535,6 +1535,46 @@ class OperatorSpec extends AnyFunSuite {
     assert(dfL.as[(String, Long)].collect().toMap === scratch,
       "catch-up df diverges from a from-scratch derive over survivors")
     assert(df.count() >= dfL.count(), "compacted vocab grew")
+  }
+
+  test("postings lineage table: undefined epochs and uncurated high-waters fail loudly; artifact names are the warehouse contract") {
+    import graft.queries.LlmSim
+    val h = math.abs(sf.hashCode)
+    val t0 = spark.catalog.listTables().count()
+    // an epoch outside the table, and a curation at a high-water the
+    // table does not curate, throw naming the epoch — before any
+    // lifecycle work, so the catalog is untouched
+    val unknown = intercept[IllegalArgumentException] {
+      LlmSim.postingsEpoch(spark, sf, 6)
+    }
+    assert(unknown.getMessage.contains("postings epoch 6"),
+      s"undefined epoch not named: ${unknown.getMessage}")
+    Seq(1, 4).foreach { e =>
+      val tomb = intercept[IllegalArgumentException] {
+        LlmSim.postingsTombstones(spark, sf, e)
+      }
+      assert(tomb.getMessage.contains(s"postings epoch $e"),
+        s"uncurated high-water not named: ${tomb.getMessage}")
+      val compact = intercept[IllegalArgumentException] {
+        LlmSim.postingsCompacted(spark, sf, e)
+      }
+      assert(compact.getMessage.contains(s"postings epoch $e"),
+        s"uncurated high-water not named: ${compact.getMessage}")
+    }
+    assert(intercept[IllegalArgumentException] {
+      LlmSim.postingsTombstones(spark, sf, 7)
+    }.getMessage.contains("postings epoch 7"))
+    assert(spark.catalog.listTables().count() === t0,
+      "a refused epoch materialized a table")
+    // the names the table generates: a silent rename would orphan
+    // every existing warehouse's postings artifacts
+    Seq(2, 3, 5).foreach(LlmSim.postingsCompacted(spark, sf, _): Unit)
+    val names = (0 to 5).map(e => s"graft_post_df_pe${e}_$h") ++
+      Seq("pe2", "se3", "pe5").flatMap(t => Seq(
+        s"graft_post_tomb_${t}_$h", s"graft_post_live_${t}_$h",
+        s"graft_post_df_live_${t}_$h")) :+ s"graft_post_ep_$h"
+    names.foreach(t =>
+      assert(spark.catalog.tableExists(t), s"postings artifact $t missing"))
   }
 
   /** The streamed-ingest crash tests drive a FRESH wave from scratch,
@@ -1579,7 +1619,7 @@ class OperatorSpec extends AnyFunSuite {
     // exactly-once claim must survive
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[Exception] {
-      LlmSim.streamedPostingsIngest(spark, sf, chaos = id =>
+      LlmSim.postingsEpoch(spark, sf, 3, chaos = id =>
         if (id == 1 && boom.compareAndSet(false, true))
           throw new RuntimeException("graft-chaos: cut after batch 1"))
     }
@@ -1589,7 +1629,7 @@ class OperatorSpec extends AnyFunSuite {
     // resume from the durable checkpoint: batch 1 re-delivers with
     // the same id, hits its committed marker, no-ops; the remaining
     // batches land; df merges; the pointer swings
-    val (post3, df3) = LlmSim.streamedPostingsIngest(spark, sf)
+    val (post3, df3) = LlmSim.postingsEpoch(spark, sf, 3)
     val streamedRows = post3
       .filter($"doc_id" >= 3 * LlmSim.ArrivalIdBase).count()
     assert(streamedRows > 0, "no streamed rows landed")
@@ -1613,13 +1653,13 @@ class OperatorSpec extends AnyFunSuite {
     assert(df3.as[(String, Long)].collect().toMap === scratch,
       "merged df epoch 3 diverges from a from-scratch derive")
     // idempotent re-entry AND raw marker-level re-delivery both no-op
-    val (postC, _) = LlmSim.streamedPostingsIngest(spark, sf)
+    val (postC, _) = LlmSim.postingsEpoch(spark, sf, 3)
     assert(postC.count() === post3.count(), "re-entry re-landed the wave")
     LlmSim.landPostingsMicroBatch(spark, sf,
       Engine.table(spark, sf, "documents").limit(3)
         .select($"doc_id", $"text"), batchId = 0L,
       epoch = LlmSim.PostingsStreamEpoch)
-    assert(LlmSim.streamedPostingsIngest(spark, sf)._1.count()
+    assert(LlmSim.postingsEpoch(spark, sf, 3)._1.count()
       === post3.count(), "a re-delivered batch id re-appended")
   }
 
@@ -1632,7 +1672,7 @@ class OperatorSpec extends AnyFunSuite {
     val sf2 = mkAlias("graft_sf_stream_alias2")
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[Exception] {
-      LlmSim.streamedPostingsIngest(spark, sf2, chaos = id =>
+      LlmSim.postingsEpoch(spark, sf2, 3, chaos = id =>
         if (id == 3 && boom.compareAndSet(false, true))
           throw new RuntimeException("graft-chaos: cut after last batch"))
     }
@@ -1643,7 +1683,7 @@ class OperatorSpec extends AnyFunSuite {
     // still finish the publication
     assert(LlmSim.postStreamEpochOf(spark, sf2) === 0,
       "pointer published despite the post-drain crash")
-    val (post3, df3) = LlmSim.streamedPostingsIngest(spark, sf2)
+    val (post3, df3) = LlmSim.postingsEpoch(spark, sf2, 3)
     assert(LlmSim.postStreamEpochOf(spark, sf2) === 3,
       "zero-redelivery resume failed to publish")
     assert(post3.filter($"doc_id" >= 3 * LlmSim.ArrivalIdBase)
@@ -1664,7 +1704,7 @@ class OperatorSpec extends AnyFunSuite {
     val sf3 = mkAlias("graft_sf_stream_alias3")
     // ORDER 1 (batch-then-stream): wave 1 lands, stream pointer 0→3,
     // batch pointer untouched at 2
-    val (post3, _) = LlmSim.streamedPostingsIngest(spark, sf3)
+    val (post3, _) = LlmSim.postingsEpoch(spark, sf3, 3)
     val n3 = post3.count()
     assert(LlmSim.postEpochOf(spark, sf3) === 2)
     assert(LlmSim.postStreamEpochOf(spark, sf3) === 3)
@@ -1686,7 +1726,7 @@ class OperatorSpec extends AnyFunSuite {
     // the wave-1 chaos test, now across a checkpoint RESUME
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     val cut =
-      try { LlmSim.streamedPostingsWave2(spark, sf3, chaos = id =>
+      try { LlmSim.postingsEpoch(spark, sf3, 4, chaos = id =>
           if (id == 5 && boom.compareAndSet(false, true))
             throw new RuntimeException("graft-chaos: cut mid wave 2"))
         false }
@@ -1695,7 +1735,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(cut, "chaos fired but the stream did not propagate the cut")
     assert(LlmSim.postStreamEpochOf(spark, sf3) === 3,
       "wave-2 pointer published despite the mid-wave crash")
-    val (post4, df4) = LlmSim.streamedPostingsWave2(spark, sf3)
+    val (post4, df4) = LlmSim.postingsEpoch(spark, sf3, 4)
     assert(LlmSim.postStreamEpochOf(spark, sf3) === 4,
       "stream high-water did not advance to 4")
     assert(LlmSim.postEpochOf(spark, sf3) === 2,
@@ -1718,7 +1758,7 @@ class OperatorSpec extends AnyFunSuite {
       "df epoch 4 diverges from a from-scratch derive")
     // ORDER 2 (stream-then-batch): epoch 5 lands via the BATCH verb
     // on the shared number line, batch pointer 2→5, stream stays 4
-    val (post5, df5) = LlmSim.postingsBatchAfterStream(spark, sf3)
+    val (post5, df5) = LlmSim.postingsEpoch(spark, sf3, 5)
     assert(LlmSim.postEpochOf(spark, sf3) === 5,
       "batch pointer did not advance past the streamed epochs")
     assert(LlmSim.postStreamEpochOf(spark, sf3) === 4,
@@ -1729,7 +1769,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(post5.count() === post4.count() + b5rows,
       "epoch 5 disturbed earlier partitions")
     // exactly-once on the batch verb too: re-entry no-ops
-    assert(LlmSim.postingsBatchAfterStream(spark, sf3)._1.count()
+    assert(LlmSim.postingsEpoch(spark, sf3, 5)._1.count()
       === post5.count(), "re-entry re-landed epoch 5")
     val scratch5 = post5.groupBy($"w").agg(count(lit(1)).as("df"))
       .as[(String, Long)].collect().toMap
@@ -1738,7 +1778,7 @@ class OperatorSpec extends AnyFunSuite {
     // readers at every high-water stay pruned to their epoch: the
     // ep<=3 reader never sees the later tail, the ep<=2 reader never
     // sees any streamed row
-    val (p3b, _) = LlmSim.streamedPostingsIngest(spark, sf3)
+    val (p3b, _) = LlmSim.postingsEpoch(spark, sf3, 3)
     assert(p3b.filter($"doc_id" >= 4L * LlmSim.ArrivalIdBase)
       .count() === 0L, "an ep<=3 reader leaked the later tail")
     val (p2b, _) = LlmSim.postingsEpoch(spark, sf3, 2)
