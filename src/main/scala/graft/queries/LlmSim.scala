@@ -129,12 +129,7 @@ object LlmSim extends QueryModule {
     val (post, cent) = (g.cte("post"), g.cte("cent"))
     val cells = if (g.liveTombs) g.cte("live") else post
     val baseCb = if (g.cbEpoch > 1) "" else s"""
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},"""
+        $baseRpqSql,"""
     val liveSql = if (!g.liveTombs) "" else s"""
         $cells AS MATERIALIZED (SELECT cid, vec_id, v FROM $post
           WHERE vec_id NOT IN (SELECT vec_id FROM mdrops)),"""
@@ -147,9 +142,7 @@ object LlmSim extends QueryModule {
           def live(df: DataFrame): DataFrame = tomb.fold(df)(t =>
             df.join(broadcast(t), Seq("vec_id"), "left_anti"))
           pqProbeCore(
-            embDoubles(s, dir)
-              .filter($"vec_id" >= 19 && $"vec_id" < 24)
-              .select($"vec_id".as("q_id"), $"v".as("qv")),
+            queryWindow(s, dir, 19, 24),
             foldCentroids(s, dir, n),
             live(foldCodes(s, dir, n)),
             live(foldCells(s, dir, n)),
@@ -163,7 +156,74 @@ object LlmSim extends QueryModule {
         $maintDropsSql,
         ${foldLineageSql(n)},$liveSql
         ${uniformRpqCodesSql(post, cent, "pcb", g.cte("u"))},
-        ${rpqProbeTailSql(cent, cells, g.cte("ucodes"), 19, 24)}"""))
+        ${pqProbeTailSql(cent, cells, g.cte("ucodes"), 19, 24,
+          residual = true)}"""))
+  }
+
+  /** The exact-cosine probe of committed cells ∪ the realtime segment
+    * AS OF `seal` — q_stream_ivf_ingest, then q_stream_ivf_ingest<seal>
+    * — gated against an oracle that unions the base cells with every
+    * routed wave through the seal. */
+  private def ivfIngestDef(seal: Int): (String, QueryDef) =
+    (if (seal == 1) "q_stream_ivf_ingest" else s"q_stream_ivf_ingest$seal") ->
+      QueryDef(
+        fn = (s, dir) => {
+          val cells = persistedIvfCells(s, dir)
+            .unionByName(segmentAsOf(s, dir, seal))
+          ivfProbeOf(queryWindow(s, dir, 19, 24),
+            persistedIvfCent(s, dir), cells, nprobe = IvfPNprobe)
+        },
+        oracle = Some(s"""
+        WITH $ivfCellsSql,
+        ${sealedWavesSql(seal, codes = false)},
+        ${ivfProbeTailSql("cent", "allcells", 19, 24)}"""))
+
+  /** The two-stage residual-ADC probe of the committed codes ∪ the
+    * codes segment AS OF `seal`, reranked against the committed cells
+    * ∪ the cells segment — q_llm_rpq_stream_probe, then
+    * q_llm_rpq_stream_probe<seal> — gated against an oracle that
+    * re-derives every wave's frozen-codebook encoding through the seal. */
+  private def rpqStreamProbeDef(seal: Int): (String, QueryDef) =
+    (if (seal == 1) "q_llm_rpq_stream_probe"
+     else s"q_llm_rpq_stream_probe$seal") -> QueryDef(
+      fn = (s, dir) => {
+        val idx = persistedRpqIdx(s, dir)
+          .unionByName(segmentAsOf(s, dir, seal, codes = true))
+        val cells = persistedIvfCells(s, dir)
+          .unionByName(segmentAsOf(s, dir, seal))
+        pqProbeCore(queryWindow(s, dir, 19, 24), persistedIvfCent(s, dir),
+          idx, cells, rpqCbArr(s, dir), PqTopR, residual = true)
+      },
+      oracle = Some(s"""
+        WITH $ivfCellsSql,
+        $baseRpqSql,
+        ${sealedWavesSql(seal, codes = true)},
+        ${pqProbeTailSql("cent", "allcells", "allidx", 19, 24,
+          residual = true)}"""))
+
+  /** The two-stage residual-ADC probe of the estate renumbered to
+    * namespace generation `gen` at the serving codebooks —
+    * q_llm_rpq_renumber_probe for the first [[RenumberGens]] row, then
+    * q_llm_rpq_renumber<k>_probe for the k-th. The oracle re-derives
+    * the lineage through the fold the renumber compacts, then the
+    * renumber itself. */
+  private def renumberProbeDef(gen: Int): (String, QueryDef) = {
+    val k = RenumberGens.indexOf(gen) + 1
+    (if (k == 1) "q_llm_rpq_renumber_probe"
+     else s"q_llm_rpq_renumber${k}_probe") -> QueryDef(
+      fn = (s, dir) => {
+        val (cells, cent, codes) = renumberedEstateGen(s, dir, gen)
+        pqProbeCore(queryWindow(s, dir, 19, 24), cent, codes, cells,
+          servingRpqPosture(s, dir)._3, PqTopR, residual = true)
+      },
+      oracle = Some(s"""
+        WITH $ivfCellsSql,
+        $maintChainSql,
+        $maintDropsSql,
+        ${foldLineageSql(renumberSource(gen).n)},
+        ${renumberLineageSql(gen)},
+        ${pqProbeTailSql(s"rn${gen}cent", s"rn${gen}cells",
+          s"rn${gen}codes", 19, 24, residual = true)}"""))
   }
 
   def defs: Vector[(String, QueryDef)] = Vector(
@@ -530,11 +590,7 @@ object LlmSim extends QueryModule {
           SELECT b.q_id, e.vec_id, ${V.cosineSql("b.qv", "e.v")} AS cos
           FROM probes b JOIN e ON b.probe_label = e.label
             AND b.q_id <> e.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        $top3Sql""")),
 
     // PERSISTED k-means IVF index — the build-once / probe-many ANN
     // lifecycle (the IVF counterpart of q_llm_index_persisted): a
@@ -628,27 +684,7 @@ object LlmSim extends QueryModule {
       // literal-cid index pruning (see its scaladoc)
       fn = (s, dir) => ivfProbeOf(ivfArrivals(s, dir),
         persistedIvfCent(s, dir), persistedIvfCells(s, dir), nprobe = IvfPNprobe),
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        nb AS (
-          SELECT vec_id + $ArrivalIdBase AS q_id,
-            list_transform(v, x -> x * 0.9 + 0.01) AS qv
-          FROM e WHERE vec_id % 7 = 3),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT nb.q_id, nb.qv, c.cid,
-              row_number() OVER (PARTITION BY nb.q_id ORDER BY
-                ${d2Sql("nb.qv", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        scored AS (
-          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN cells cl ON p.cid = cl.cid)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+      oracle = Some(arrivalProbeOracleSql)),
 
     // STREAMING incremental ANN — the online form of
     // q_llm_ann_incremental: the new-arrival vectors land as a STREAM,
@@ -699,27 +735,7 @@ object LlmSim extends QueryModule {
               $"t.vec_id".as("vec_id"), $"t.cos".as("cos"))
         }
       },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        nb AS (
-          SELECT vec_id + $ArrivalIdBase AS q_id,
-            list_transform(v, x -> x * 0.9 + 0.01) AS qv
-          FROM e WHERE vec_id % 7 = 3),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT nb.q_id, nb.qv, c.cid,
-              row_number() OVER (PARTITION BY nb.q_id ORDER BY
-                ${d2Sql("nb.qv", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        scored AS (
-          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN cells cl ON p.cid = cl.cid)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+      oracle = Some(arrivalProbeOracleSql)),
 
     // IVF INDEX UPSERT — the maintenance half of the index lifecycle:
     // the arrival batch is ASSIGNED with the same broadcast centroids
@@ -733,24 +749,14 @@ object LlmSim extends QueryModule {
     // arrival assignments.
     "q_llm_ann_index_upsert" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         val cells = persistedIvfCellsUpserted(s, dir)
         ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 10 && $"vec_id" < 15)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 10, 15),
           persistedIvfCent(s, dir), cells, nprobe = IvfPNprobe)
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        $ivfArrivalsSql,
-        nbcells AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT nb.vec_id, nb.v, c.cid,
-              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
-                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn = 1),
+        $arrivalCellsSql,
         allcells AS (
           SELECT * FROM cells UNION ALL SELECT * FROM nbcells),
         ${ivfProbeTailSql("cent", "allcells", 10, 15)}""")),
@@ -801,14 +807,7 @@ object LlmSim extends QueryModule {
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        $ivfArrivalsSql,
-        nbcells AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT nb.vec_id, nb.v, c.cid,
-              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
-                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn = 1),
+        $arrivalCellsSql,
         allcells AS MATERIALIZED (
           SELECT vec_id, v, cid FROM cells
           UNION ALL SELECT vec_id, v, cid FROM nbcells),
@@ -876,14 +875,7 @@ object LlmSim extends QueryModule {
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        $ivfArrivalsSql,
-        nbcells AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT nb.vec_id, nb.v, c.cid,
-              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
-                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn = 1),
+        $arrivalCellsSql,
         allcells AS MATERIALIZED (
           SELECT vec_id, v, cid FROM cells
           UNION ALL SELECT vec_id, v, cid FROM nbcells),
@@ -958,35 +950,15 @@ object LlmSim extends QueryModule {
     // are asserted in OperatorSpec/TxnMarkerSpec.
     "q_llm_ivf_maintenance_commit" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         val (mCells, mCent) = maintainIvfCommit(s, dir)
         ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 10 && $"vec_id" < 15)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 10, 15),
           mCent, mCells, nprobe = IvfPNprobe)
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
         $maintChainSql,
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 10 AND vec_id < 15),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN mcent c)
-          WHERE rn <= $IvfPNprobe),
-        scored AS (
-          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN relab cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        ${ivfProbeTailSql("mcent", "relab", 10, 15)}""")),
 
     // MAINTAINED-PQ PROBE — the cascade proved END TO END in the gate:
     // an ADC probe that consumes EVERY artifact the maintenance commit
@@ -1000,13 +972,10 @@ object LlmSim extends QueryModule {
     // exactly as the cascade join does.
     "q_llm_pq_maintained_probe" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         maintainIvfCommit(s, dir)
         val Seq(cellsT, centT, pqT, _, _) = maintainedTables(s, dir)
         pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 15 && $"vec_id" < 20)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 15, 20),
           s.table(centT), s.table(pqT), s.table(cellsT),
           pqCbArr(s, dir), PqTopR)
       },
@@ -1014,63 +983,9 @@ object LlmSim extends QueryModule {
         WITH $ivfCellsSql,
         $pqSql,
         $maintChainSql,
-        nbsubs AS (
-          SELECT vec_id, m,
-            v[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM nb CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        nbcodes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM nbsubs u0 JOIN pcb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id),
-        allidx AS (
-          SELECT vec_id, codes FROM pidx
-          UNION ALL SELECT vec_id, codes FROM nbcodes),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 15 AND vec_id < 20),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN mcent c)
-          WHERE rn <= $IvfPNprobe),
-        cand AS (
-          SELECT p.q_id, p.qv, cl.vec_id, cl.cid, i.codes
-          FROM probes p
-            JOIN relab cl ON cl.cid = p.cid AND p.q_id <> cl.vec_id
-            JOIN allidx i ON i.vec_id = cl.vec_id),
-        aterms AS (
-          SELECT c.q_id, c.vec_id, t.m,
-            ${d2Sql(
-              s"c.qv[t.m * $PqSubDim + 1 : t.m * $PqSubDim + $PqSubDim]",
-              "pb.cv")} AS t
-          FROM cand c
-            CROSS JOIN (SELECT unnest(range($PqM)) AS m) t
-            JOIN pcb pb ON pb.m = t.m AND pb.code = c.codes[t.m + 1]),
-        adc AS (
-          SELECT q_id, vec_id, list_reduce(list_prepend(0.0,
-            list(t ORDER BY m)), (x, y) -> x + y) AS adc
-          FROM aterms GROUP BY q_id, vec_id),
-        topr AS (
-          SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY adc, vec_id) AS rn
-            FROM adc)
-          WHERE rn <= $PqTopR),
-        scored AS (
-          SELECT t.q_id, t.vec_id, ${V.cosineSql("q.qv", "cl.v")} AS cos
-          FROM topr t
-            JOIN q ON q.q_id = t.q_id
-            JOIN relab cl ON cl.vec_id = t.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        $arrivalPqIdxSql,
+        ${pqProbeTailSql("mcent", "relab", "allidx", 15, 20,
+          residual = false)}""")),
 
     // MAINTAINED RESIDUAL-PQ PROBE — the cascade's hardest artifact
     // proved in the gate: residual codes are CENTROID-DEPENDENT
@@ -1087,43 +1002,25 @@ object LlmSim extends QueryModule {
     // breaks ADC ordering and the hash.
     "q_llm_rpq_maintained_probe" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         maintainIvfCommit(s, dir)
         val Seq(cellsT, centT, _, _, rpqT) = maintainedTables(s, dir)
         pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 15 && $"vec_id" < 20)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 15, 20),
           s.table(centT), s.table(rpqT), s.table(cellsT),
           rpqCbArr(s, dir), PqTopR, residual = true)
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},
+        $baseRpqSql,
         $maintChainSql,
         mresid AS (
           SELECT r.cid, r.vec_id,
             list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> r.v[i] - mc.cv[i]) AS rv
+              i -> r.v[i] - mc.cv[i]) AS v
           FROM relab r JOIN mcent mc ON mc.cid = r.cid),
-        msubs AS (
-          SELECT vec_id, m,
-            rv[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM mresid CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        mcodes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM msubs u0 JOIN pcb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id),
-        ${rpqProbeTailSql("mcent", "relab", "mcodes", 15, 20)}""")),
+        ${pqEncodeSql("mresid", "m")},
+        ${pqProbeTailSql("mcent", "relab", "mcodes", 15, 20,
+          residual = true)}""")),
 
     // INDEX DELETES — the lifecycle verb the chain lacked: curation
     // drops (the semdedup θ=0.30 verdicts — dedup feeding its own
@@ -1147,15 +1044,9 @@ object LlmSim extends QueryModule {
     // their PLANS differ: this one carries no anti-join at probe
     // time (plan-asserted in OperatorSpec).
     "q_llm_ivf_tomb_compact" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 20 && $"vec_id" < 25)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          persistedIvfCent(s, dir),
-          persistedIvfCellsCompacted(s, dir), nprobe = IvfPNprobe)
-      },
+      fn = (s, dir) => ivfProbeOf(queryWindow(s, dir, 20, 25),
+        persistedIvfCent(s, dir), persistedIvfCellsCompacted(s, dir),
+        nprobe = IvfPNprobe),
       oracle = Some(tombProbeOracleSql)),
 
     // MAINTAINED-EPOCH DELETES — the verb COMPOSITION the r13 pair
@@ -1182,12 +1073,9 @@ object LlmSim extends QueryModule {
     // maintain-commit → delete → compact as one gated chain.
     "q_llm_maint_tomb_compact" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         val (_, mCent) = maintainIvfCommit(s, dir)
         ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 30 && $"vec_id" < 35)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 30, 35),
           mCent, persistedMaintCellsCompacted(s, dir),
           nprobe = IvfPNprobe)
       },
@@ -1218,61 +1106,8 @@ object LlmSim extends QueryModule {
         rrfFuse(lexicalTopK(s, dir, 20),
           hybridVectorArm(s, dir, persistedIvfCells(s, dir), 20))
       },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tok AS (
-          SELECT w, doc_id, count(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM documents)
-          GROUP BY w, doc_id),
-        dfreq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM tok JOIN dfreq USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id),
-        trank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS tr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY su DESC, doc_id) AS rn
-            FROM tsc)
-          WHERE rn <= 20),
-        qv AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id < 5),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM qv q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        vsc AS (
-          SELECT p.q_id, cl.vec_id AS doc_id,
-            ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN cells cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id),
-        vrank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS vr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY cos DESC, doc_id) AS rn
-            FROM vsc)
-          WHERE rn <= 20),
-        fused AS (
-          SELECT COALESCE(t.q_id, v.q_id) AS q_id,
-            COALESCE(t.doc_id, v.doc_id) AS doc_id,
-            COALESCE(CAST(1 AS DOUBLE) / (t.tr + 60), 0.0) +
-              COALESCE(CAST(1 AS DOUBLE) / (v.vr + 60), 0.0) AS rrf
-          FROM trank t FULL JOIN vrank v
-            ON t.q_id = v.q_id AND t.doc_id = v.doc_id)
-        SELECT q_id, rank, doc_id, rrf FROM (
-          SELECT q_id, doc_id, rrf, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS INT) AS rank
-          FROM fused)
-        WHERE rank <= 5""")),
+      oracle = Some(hybridOracleSql(postingsEstateSqlUpTo(0),
+        lexLandedSql(20), "cent", "cells"))),
 
     // HYBRID SEARCH, LIVE ESTATE — q_llm_hybrid_search composed onto
     // the LIFECYCLE artifacts instead of the base snapshots (the r14
@@ -1298,69 +1133,14 @@ object LlmSim extends QueryModule {
           .select($"q_id", $"vec_id".as("doc_id"), $"rank".as("vr"))
         rrfFuse(trank, vrank)
       },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        $maintChainSql,
+      oracle = Some(hybridOracleSql(
+        s"""$maintChainSql,
         $maintDropsSql,
         mlive AS (
           SELECT * FROM relab
           WHERE vec_id NOT IN (SELECT vec_id FROM mdrops)),
-        ${postingsEstateSqlUpTo(PostingsBatches)},
-        live AS (
-          SELECT max(doc_id) AS doc_id, text FROM alld GROUP BY text),
-        ltok AS (
-          SELECT w, doc_id, count(*) AS tf FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM live)
-          GROUP BY w, doc_id),
-        ldf AS (SELECT w, count(*) AS df FROM ltok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM ltok JOIN ldf USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id),
-        trank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS tr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY su DESC, doc_id) AS rn
-            FROM tsc)
-          WHERE rn <= 20),
-        qv AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id < 5),
-        mprobes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM qv q CROSS JOIN mcent c)
-          WHERE rn <= $IvfPNprobe),
-        vsc AS (
-          SELECT p.q_id, cl.vec_id AS doc_id,
-            ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM mprobes p JOIN mlive cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id),
-        vrank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS vr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY cos DESC, doc_id) AS rn
-            FROM vsc)
-          WHERE rn <= 20),
-        fused AS (
-          SELECT COALESCE(t.q_id, v.q_id) AS q_id,
-            COALESCE(t.doc_id, v.doc_id) AS doc_id,
-            COALESCE(CAST(1 AS DOUBLE) / (t.tr + 60), 0.0) +
-              COALESCE(CAST(1 AS DOUBLE) / (v.vr + 60), 0.0) AS rrf
-          FROM trank t FULL JOIN vrank v
-            ON t.q_id = v.q_id AND t.doc_id = v.doc_id)
-        SELECT q_id, rank, doc_id, rrf FROM (
-          SELECT q_id, doc_id, rrf, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS INT) AS rank
-          FROM fused)
-        WHERE rank <= 5""")),
+        ${postingsEstateSqlUpTo(PostingsBatches)}""",
+        lexKeepNewestSql(20), "mcent", "mlive"))),
 
     // HYBRID SEARCH, STREAMED FRONTS — the fused probe over the SPEED
     // layer: the lexical arm reads the streamed-epoch postings pair
@@ -1387,62 +1167,12 @@ object LlmSim extends QueryModule {
           .select($"q_id", $"doc_id", $"rank".as("tr"))
         rrfFuse(trank, hybridVectorArm(s, dir,
           persistedIvfCells(s, dir)
-            .unionByName(streamedIvfSegment(s, dir)), 20))
+            .unionByName(segmentAsOf(s, dir, 1)), 20))
       },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        ${postingsEstateSqlUpTo(PostingsStreamEpoch)},
-        dfq AS (SELECT w, count(*) AS df FROM tok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM tok JOIN dfq USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id),
-        trank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS tr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY su DESC, doc_id) AS rn
-            FROM tsc)
-          WHERE rn <= 20),
-        ${waveCellsSql()},
-        allcells AS (
-          SELECT * FROM cells UNION ALL SELECT * FROM nscells),
-        qv AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id < 5),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM qv q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        vsc AS (
-          SELECT p.q_id, cl.vec_id AS doc_id,
-            ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN allcells cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id),
-        vrank AS (
-          SELECT q_id, doc_id, CAST(rn AS INT) AS vr FROM (
-            SELECT q_id, doc_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY cos DESC, doc_id) AS rn
-            FROM vsc)
-          WHERE rn <= 20),
-        fused AS (
-          SELECT COALESCE(t.q_id, v.q_id) AS q_id,
-            COALESCE(t.doc_id, v.doc_id) AS doc_id,
-            COALESCE(CAST(1 AS DOUBLE) / (t.tr + 60), 0.0) +
-              COALESCE(CAST(1 AS DOUBLE) / (v.vr + 60), 0.0) AS rrf
-          FROM trank t FULL JOIN vrank v
-            ON t.q_id = v.q_id AND t.doc_id = v.doc_id)
-        SELECT q_id, rank, doc_id, rrf FROM (
-          SELECT q_id, doc_id, rrf, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS INT) AS rank
-          FROM fused)
-        WHERE rank <= 5""")),
+      oracle = Some(hybridOracleSql(
+        s"""${postingsEstateSqlUpTo(PostingsStreamEpoch)},
+        ${sealedWavesSql(1, codes = false)}""",
+        lexLandedSql(20), "cent", "allcells"))),
 
     // POSTINGS UPSERT — the lexical index gets the SAME lifecycle
     // verbs the vector index has (build → probe → upsert): new
@@ -1566,9 +1296,7 @@ object LlmSim extends QueryModule {
     "q_llm_mmr_diversify" -> QueryDef(
       fn = (s, dir) => {
         import s.implicits._
-        val q = embDoubles(s, dir)
-          .filter($"vec_id" >= 25 && $"vec_id" < 30)
-          .select($"vec_id".as("q_id"), $"v".as("qv"))
+        val q = queryWindow(s, dir, 25, 30)
         val routed = probeCells(q,
           centArrOf(persistedIvfCent(s, dir)), IvfPNprobe)
         val cids =
@@ -1609,15 +1337,8 @@ object LlmSim extends QueryModule {
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 25 AND vec_id < 30),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
+        ${qWindowSql(25, 30)},
+        ${ivfRouteSql("cent")},
         pool AS (
           SELECT q_id, vec_id, v, cos FROM (
             SELECT p.q_id, cl.vec_id, cl.v,
@@ -1717,47 +1438,8 @@ object LlmSim extends QueryModule {
       fn = (s, dir) => ivfPqProbe(s, dir, 0L, 5L),
       oracle = Some(s"""
         WITH $ivfCellsSql, $pqSql,
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        cand AS (
-          SELECT p.q_id, p.qv, cl.vec_id, cl.cid, i.codes
-          FROM probes p
-            JOIN cells cl ON cl.cid = p.cid AND p.q_id <> cl.vec_id
-            JOIN pidx i ON i.vec_id = cl.vec_id),
-        aterms AS (
-          SELECT c.q_id, c.vec_id, t.m,
-            ${d2Sql(
-              s"c.qv[t.m * $PqSubDim + 1 : t.m * $PqSubDim + $PqSubDim]",
-              "pb.cv")} AS t
-          FROM cand c
-            CROSS JOIN (SELECT unnest(range($PqM)) AS m) t
-            JOIN pcb pb ON pb.m = t.m AND pb.code = c.codes[t.m + 1]),
-        adc AS (
-          SELECT q_id, vec_id, list_reduce(list_prepend(0.0,
-            list(t ORDER BY m)), (x, y) -> x + y) AS adc
-          FROM aterms GROUP BY q_id, vec_id),
-        topr AS (
-          SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY adc, vec_id) AS rn
-            FROM adc)
-          WHERE rn <= $PqTopR),
-        scored AS (
-          SELECT t.q_id, t.vec_id, ${V.cosineSql("q.qv", "cl.v")} AS cos
-          FROM topr t
-            JOIN q ON q.q_id = t.q_id
-            JOIN cells cl ON cl.vec_id = t.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        ${pqProbeTailSql("cent", "cells", "pidx", 0, 5,
+          residual = false)}""")),
 
     // RESIDUAL-PQ PROBE — the textbook IVF-PQ refinement (residuals
     // v − centroid instead of raw vectors; see the residual-PQ helper
@@ -1772,13 +1454,9 @@ object LlmSim extends QueryModule {
       fn = (s, dir) => ivfRpqProbe(s, dir, 0L, 5L),
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},
-        ${rpqProbeTailSql("cent", "cells", "pidx", 0, 5)}""")),
+        $baseRpqSql,
+        ${pqProbeTailSql("cent", "cells", "pidx", 0, 5,
+          residual = true)}""")),
 
     // PQ INDEX UPSERT — the maintenance half of the IVF-PQ lifecycle,
     // mirroring q_llm_ann_index_upsert on the CODED index: arrivals
@@ -1792,85 +1470,21 @@ object LlmSim extends QueryModule {
     // encoding of the delta in SQL.
     "q_llm_pq_upsert" -> QueryDef(
       fn = (s, dir) => {
-        import s.implicits._
         val idxUp = persistedPqIdxUpserted(s, dir)
         val cellsUp = persistedIvfCellsUpserted(s, dir)
         pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 10 && $"vec_id" < 15)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 10, 15),
           persistedIvfCent(s, dir), idxUp, cellsUp,
           pqCbArr(s, dir), PqTopR)
       },
       oracle = Some(s"""
         WITH $ivfCellsSql, $pqSql,
-        $ivfArrivalsSql,
-        nbcells AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT nb.vec_id, nb.v, c.cid,
-              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
-                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn = 1),
-        nbsubs AS (
-          SELECT vec_id, m,
-            v[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM nb CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        nbcodes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM nbsubs u0 JOIN pcb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id),
+        $arrivalCellsSql,
+        $arrivalPqIdxSql,
         allcells AS (
           SELECT * FROM cells UNION ALL SELECT * FROM nbcells),
-        allidx AS (
-          SELECT vec_id, codes FROM pidx
-          UNION ALL SELECT vec_id, codes FROM nbcodes),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 10 AND vec_id < 15),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        cand AS (
-          SELECT p.q_id, p.qv, cl.vec_id, cl.cid, i.codes
-          FROM probes p
-            JOIN allcells cl ON cl.cid = p.cid AND p.q_id <> cl.vec_id
-            JOIN allidx i ON i.vec_id = cl.vec_id),
-        aterms AS (
-          SELECT c.q_id, c.vec_id, t.m,
-            ${d2Sql(
-              s"c.qv[t.m * $PqSubDim + 1 : t.m * $PqSubDim + $PqSubDim]",
-              "pb.cv")} AS t
-          FROM cand c
-            CROSS JOIN (SELECT unnest(range($PqM)) AS m) t
-            JOIN pcb pb ON pb.m = t.m AND pb.code = c.codes[t.m + 1]),
-        adc AS (
-          SELECT q_id, vec_id, list_reduce(list_prepend(0.0,
-            list(t ORDER BY m)), (x, y) -> x + y) AS adc
-          FROM aterms GROUP BY q_id, vec_id),
-        topr AS (
-          SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id, row_number() OVER (
-              PARTITION BY q_id ORDER BY adc, vec_id) AS rn
-            FROM adc)
-          WHERE rn <= $PqTopR),
-        scored AS (
-          SELECT t.q_id, t.vec_id, ${V.cosineSql("q.qv", "cl.v")} AS cos
-          FROM topr t
-            JOIN q ON q.q_id = t.q_id
-            JOIN allcells cl ON cl.vec_id = t.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        ${pqProbeTailSql("cent", "allcells", "allidx", 10, 15,
+          residual = false)}""")),
 
     // HARD-NEGATIVE MINING — contrastive training-pair construction:
     // for each anchor, the most cosine-similar vectors carrying a
@@ -1985,11 +1599,7 @@ object LlmSim extends QueryModule {
             JOIN cells cl ON cl.cid = p.cid AND p.q_id <> cl.vec_id
             JOIN embeddings l ON l.vec_id = cl.vec_id
               AND l.label = p.target)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        $top3Sql""")),
 
     // STREAMING PQ ENCODE — the online form of the encode pass: the
     // arrival stream is coded row-by-row against the FROZEN broadcast
@@ -2017,18 +1627,7 @@ object LlmSim extends QueryModule {
           FROM embeddings),
         $pqSql,
         $ivfArrivalsSql,
-        nbsubs AS (
-          SELECT vec_id, m,
-            v[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM nb CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        nbcodes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM nbsubs u0 JOIN pcb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id)
+        ${pqEncodeSql("nb", "nb")}
         SELECT vec_id, array_to_string(codes, ',') AS codes_s
         FROM nbcodes""")),
 
@@ -2316,23 +1915,7 @@ object LlmSim extends QueryModule {
     // oracle that unions base and routed-wave assignments. Mid-wave
     // crash+resume is driven in OperatorSpec's vector twin via
     // the chaos seam.
-    "q_stream_ivf_ingest" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val cells = persistedIvfCells(s, dir)
-          .unionByName(streamedIvfSegment(s, dir))
-        ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          persistedIvfCent(s, dir), cells, nprobe = IvfPNprobe)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        ${waveCellsSql()},
-        allcells AS (
-          SELECT * FROM cells UNION ALL SELECT * FROM nscells),
-        ${ivfProbeTailSql("cent", "allcells", 19, 24)}""")),
+    ivfIngestDef(1),
 
     // SECOND STREAMED VECTOR WAVE — the segment's seal ADVANCING
     // (1 → 2), the vector twin of the postings side's wave 2: wave
@@ -2346,26 +1929,7 @@ object LlmSim extends QueryModule {
     // stays deterministic whichever gate ran first. This probe reads
     // committed ∪ BOTH waves; query 19's wave-1 twin and query 20's
     // wave-2 twin must each surface at rank 1.
-    "q_stream_ivf_ingest2" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val cells = persistedIvfCells(s, dir)
-          .unionByName(streamedIvfSegmentAll(s, dir))
-        ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          persistedIvfCent(s, dir), cells, nprobe = IvfPNprobe)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        ${waveCellsSql()},
-        ${waveCellsSql(out = "ns2cells", wave = 2)},
-        allcells AS (
-          SELECT * FROM cells
-          UNION ALL SELECT * FROM nscells
-          UNION ALL SELECT * FROM ns2cells),
-        ${ivfProbeTailSql("cent", "allcells", 19, 24)}""")),
+    ivfIngestDef(2),
 
     // POST-FOLD TAIL — the lifecycle CONTINUING after a fold: the
     // fold absorbed the segment at its cut point (seal 1); wave 2
@@ -2382,15 +1946,13 @@ object LlmSim extends QueryModule {
         import s.implicits._
         val fCent = foldCentroids(s, dir, 1)
         val tail = ivfCellsOf(
-          streamedIvfSegmentAll(s, dir)
+          segmentAsOf(s, dir, 2)
             .filter($"vec_id" >= IvfSegSeal1Bound)
             .select($"vec_id", $"v"),
           fCent).select($"cid", $"vec_id", $"v")
         val tomb = persistedMaintTombstones(s, dir).select($"vec_id")
         ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 19, 24),
           fCent,
           foldCells(s, dir, 1).select($"cid", $"vec_id", $"v")
             .unionByName(tail)
@@ -2486,9 +2048,7 @@ object LlmSim extends QueryModule {
         import s.implicits._
         val tomb = persistedMaintTombstones(s, dir).select($"vec_id")
         ivfProbeOf(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 19, 24),
           foldCentroids(s, dir, 1),
           foldCells(s, dir, 1)
             .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
@@ -2504,7 +2064,7 @@ object LlmSim extends QueryModule {
         ${ivfProbeTailSql("g1cent", "glive", 19, 24)}""")),
 
     // STREAMED TAIL ON THE COMPRESSED PATH — the ADC probe that can
-    // see mid-stream arrivals: the codes segment (streamedRpqSegment
+    // see mid-stream arrivals: the codes segment (segmentAsOf with `codes`
     // — the q_stream_rpq_encode chain LANDED exactly-once instead of
     // only emitted) unions with the committed residual-PQ index, the
     // cells segment unions with the committed cells for the exact
@@ -2516,36 +2076,7 @@ object LlmSim extends QueryModule {
     // good enough to shortlist it, not just the exact rerank); the
     // oracle re-derives the frozen-codebook wave encoding in SQL and
     // runs the same two stages over base ∪ wave.
-    "q_llm_rpq_stream_probe" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val idx = persistedRpqIdx(s, dir)
-          .unionByName(streamedRpqSegment(s, dir))
-        val cells = persistedIvfCells(s, dir)
-          .unionByName(streamedIvfSegment(s, dir))
-        pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          persistedIvfCent(s, dir), idx, cells, rpqCbArr(s, dir),
-          PqTopR, residual = true)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},
-        ${waveCellsSql()},
-        ${waveRpqCodesSql("nscells", "ns")},
-        allidx AS (
-          SELECT vec_id, codes FROM pidx
-          UNION ALL SELECT vec_id, codes FROM nscodes),
-        allcells AS (
-          SELECT * FROM cells UNION ALL SELECT * FROM nscells),
-        ${rpqProbeTailSql("cent", "allcells", "allidx", 19, 24)}""")),
+    rpqStreamProbeDef(1),
 
     // COMPRESSED PATH AT SEAL 2 — the two-stage ADC probe over the
     // committed codes ∪ BOTH sealed code waves, reranked against the
@@ -2554,41 +2085,7 @@ object LlmSim extends QueryModule {
     // Query 19's wave-1 twin and query 20's wave-2 twin must each
     // survive the ADC shortlist; the oracle re-derives BOTH waves'
     // frozen-codebook encodings from one factored CTE shape.
-    "q_llm_rpq_stream_probe2" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val idx = persistedRpqIdx(s, dir)
-          .unionByName(streamedRpqSegmentAll(s, dir))
-        val cells = persistedIvfCells(s, dir)
-          .unionByName(streamedIvfSegmentAll(s, dir))
-        pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          persistedIvfCent(s, dir), idx, cells, rpqCbArr(s, dir),
-          PqTopR, residual = true)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},
-        ${waveCellsSql()},
-        ${waveCellsSql(out = "ns2cells", wave = 2)},
-        ${waveRpqCodesSql("nscells", "ns")},
-        ${waveRpqCodesSql("ns2cells", "nt")},
-        allidx AS (
-          SELECT vec_id, codes FROM pidx
-          UNION ALL SELECT vec_id, codes FROM nscodes
-          UNION ALL SELECT vec_id, codes FROM ntcodes),
-        allcells AS (
-          SELECT * FROM cells
-          UNION ALL SELECT * FROM nscells
-          UNION ALL SELECT * FROM ns2cells),
-        ${rpqProbeTailSql("cent", "allcells", "allidx", 19, 24)}""")),
+    rpqStreamProbeDef(2),
 
     // THE FOLD CASCADE ON THE COMPRESSED PATH, one probe per fold
     // generation ([[foldProbeDef]]): the ADC serving path must see
@@ -2619,9 +2116,7 @@ object LlmSim extends QueryModule {
         val (cent, codes, cbs) = servingRpqPosture(s, dir)
         val tomb = persistedMaintTombstones(s, dir).select($"vec_id")
         pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
+          queryWindow(s, dir, 19, 24),
           cent, codes,
           foldCells(s, dir, retrainSource.n)
             .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
@@ -2633,8 +2128,8 @@ object LlmSim extends QueryModule {
         $maintDropsSql,
         ${foldLineageSql(retrainSource.n)},
         $rpqRetrainSql,
-        ${rpqProbeTailSql(retrainSource.cte("cent"),
-          retrainSource.cte("live"), "rcodes", 19, 24)}""")),
+        ${pqProbeTailSql(retrainSource.cte("cent"),
+          retrainSource.cte("live"), "rcodes", 19, 24, residual = true)}""")),
 
     // MAJOR COMPACTION: cid-namespace RENUMBER (r18) — fold gen 2
     // exhausted the 32-bit cid space (its children mint at 2^30; the
@@ -2652,24 +2147,7 @@ object LlmSim extends QueryModule {
     // folds → retrain → RENUMBER under one hash. Results must equal
     // the retrain probe's (same queries, same geometry, re-keyed) —
     // which is itself the re-key-moves-nothing claim, hash-gated.
-    "q_llm_rpq_renumber_probe" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (rnCells, rnCent, rnCodes) = renumberedEstateGen(s, dir, 2)
-        pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          rnCent, rnCodes, rnCells,
-          servingRpqPosture(s, dir)._3, PqTopR, residual = true)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        $maintChainSql,
-        $maintDropsSql,
-        ${foldLineageSql(2)},
-        ${renumberLineageSql(2)},
-        ${rpqProbeTailSql("rn2cent", "rn2cells", "rn2codes", 19, 24)}""")),
+    renumberProbeDef(2),
 
     foldProbeDef(3),
 
@@ -2686,25 +2164,7 @@ object LlmSim extends QueryModule {
     // probe's exact results re-keyed — the re-key-moves-nothing
     // claim, second iteration, hash-gated; the oracle re-derives the
     // full chain: … → renumber #1 → fold 3 → RENUMBER #2.
-    "q_llm_rpq_renumber2_probe" -> QueryDef(
-      fn = (s, dir) => {
-        import s.implicits._
-        val (rn2Cells, rn2Cent, rn2Codes) =
-          renumberedEstateGen(s, dir, 3)
-        pqProbeCore(
-          embDoubles(s, dir)
-            .filter($"vec_id" >= 19 && $"vec_id" < 24)
-            .select($"vec_id".as("q_id"), $"v".as("qv")),
-          rn2Cent, rn2Codes, rn2Cells,
-          servingRpqPosture(s, dir)._3, PqTopR, residual = true)
-      },
-      oracle = Some(s"""
-        WITH $ivfCellsSql,
-        $maintChainSql,
-        $maintDropsSql,
-        ${foldLineageSql(3)},
-        ${renumberLineageSql(3)},
-        ${rpqProbeTailSql("rn3cent", "rn3cells", "rn3codes", 19, 24)}""")),
+    renumberProbeDef(3),
 
     foldProbeDef(4),
 
@@ -2728,12 +2188,7 @@ object LlmSim extends QueryModule {
       },
       oracle = Some(s"""
         WITH $ivfCellsSql,
-        resid AS (
-          SELECT cl.cid, cl.vec_id,
-            list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - ct.cv[i]) AS v
-          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
-        ${pqSqlFrom("resid")},
+        $baseRpqSql,
         $ivfArrivalsSql,
         nbr AS (
           SELECT vec_id, cid,
@@ -2745,18 +2200,7 @@ object LlmSim extends QueryModule {
                 ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
             FROM nb CROSS JOIN cent c)
           WHERE rn = 1),
-        nbsubs AS (
-          SELECT vec_id, m,
-            v[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM nbr CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        nbcodes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM nbsubs u0 JOIN pcb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id)
+        ${pqEncodeSql("nbr", "nb")}
         SELECT r.vec_id, r.cid, array_to_string(n.codes, ',') AS codes_s
         FROM nbr r JOIN nbcodes n ON n.vec_id = r.vec_id""")),
 
@@ -2797,11 +2241,7 @@ object LlmSim extends QueryModule {
         scored AS (
           SELECT t.q_id, e2.vec_id, ${V.cosineSql("t.qv", "e2.v")} AS cos
           FROM topr t JOIN e e2 ON e2.vec_id = t.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3""")),
+        $top3Sql""")),
 
     // L2 NORMALIZATION of the embedding column — the prep step before
     // cosine ANN (normalized vectors turn cosine into dot product).
@@ -3235,11 +2675,7 @@ object LlmSim extends QueryModule {
           FROM cand c
           JOIN e q ON q.vec_id = c.q_id
           JOIN e ON e.vec_id = c.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3"""
+        $top3Sql"""
   }
 
   /** The banded multi-table LSH signature ARTIFACT: each corpus
@@ -3408,6 +2844,16 @@ object LlmSim extends QueryModule {
     import s.implicits._
     Engine.table(s, dir, "embeddings")
       .select($"vec_id", V.toDouble($"embedding").as("v"))
+  }
+
+  /** The probe query window: corpus vectors with ids in [lo, hi) as
+    * (q_id, qv) — the engine side of the oracles' `q` CTE
+    * ([[qWindowSql]]). */
+  private def queryWindow(s: SparkSession, dir: String,
+                          lo: Long, hi: Long): DataFrame = {
+    import s.implicits._
+    embDoubles(s, dir).filter($"vec_id" >= lo && $"vec_id" < hi)
+      .select($"vec_id".as("q_id"), $"v".as("qv"))
   }
 
   private[graft] def annIvfTopK(s: SparkSession, dir: String,
@@ -3601,6 +3047,17 @@ object LlmSim extends QueryModule {
           SELECT vec_id, list(code ORDER BY m) AS codes
           FROM pcodes GROUP BY vec_id)"""
   }
+
+  /** The base residual-PQ chain in SQL: each corpus cell row's
+    * residual against its base centroid (`resid`), then [[pqSqlFrom]]
+    * over the residuals — [[persistedRpqIdx]]'s codebooks `pcb` and
+    * codes `pidx`. */
+  private def baseRpqSql: String = s"""resid AS (
+          SELECT cl.cid, cl.vec_id,
+            list_transform(range(1, ${PqM * PqSubDim + 1}),
+              i -> cl.v[i] - ct.cv[i]) AS v
+          FROM cells cl JOIN cent ct ON ct.cid = cl.cid),
+        ${pqSqlFrom("resid")}"""
 
   /** IVF centroid BUILD over an arbitrary (vec_id, v) corpus frame:
     * `nlist` seeds (vec_id 0..nlist-1) refined by ONE Lloyd iteration
@@ -3882,7 +3339,7 @@ object LlmSim extends QueryModule {
     val ptomb = postingsTombstones(s, dir, PostingsBatches)
     val (postStream, _) = postingsEpoch(s, dir, PostingsStreamEpoch)
     val (postFinal, _) = postingsEpoch(s, dir, PostEpochs.last.e)
-    val segAll = streamedIvfSegmentAll(s, dir)
+    val segAll = segmentAsOf(s, dir, SegSeals)
     // every fold generation, oldest first: forcing the serving one
     // runs the retrain and every renumber and swings the codebook and
     // namespace pointers (the run-order-independence argument)
@@ -4593,15 +4050,10 @@ object LlmSim extends QueryModule {
 
   private[graft] def ivfPqProbe(s: SparkSession, dir: String,
                                 lo: Long, hi: Long,
-                                topR: Int = PqTopR): DataFrame = {
-    import s.implicits._
-    pqProbeCore(
-      embDoubles(s, dir)
-        .filter($"vec_id" >= lo && $"vec_id" < hi)
-        .select($"vec_id".as("q_id"), $"v".as("qv")),
+                                topR: Int = PqTopR): DataFrame =
+    pqProbeCore(queryWindow(s, dir, lo, hi),
       persistedIvfCent(s, dir), persistedPqIdx(s, dir),
       persistedIvfCells(s, dir), pqCbArr(s, dir), topR)
-  }
 
   /** The PQ index after a delta: arrivals are encoded with the FROZEN
     * codebooks (the standard IVF-PQ maintenance contract — codebooks
@@ -4743,16 +4195,11 @@ object LlmSim extends QueryModule {
     * exact rerank) is the one shared contract. */
   private[graft] def ivfRpqProbe(s: SparkSession, dir: String,
                                  lo: Long, hi: Long,
-                                 topR: Int = PqTopR): DataFrame = {
-    import s.implicits._
-    pqProbeCore(
-      embDoubles(s, dir)
-        .filter($"vec_id" >= lo && $"vec_id" < hi)
-        .select($"vec_id".as("q_id"), $"v".as("qv")),
+                                 topR: Int = PqTopR): DataFrame =
+    pqProbeCore(queryWindow(s, dir, lo, hi),
       persistedIvfCent(s, dir), persistedRpqIdx(s, dir),
       persistedIvfCells(s, dir), rpqCbArr(s, dir), topR,
       residual = true)
-  }
 
   /** Centroids of the persisted IVF: the [[ivfCentOf]] build at the
     * corpus-derived [[ivfNlistFor]] cell count. Written once per
@@ -4814,6 +4261,18 @@ object LlmSim extends QueryModule {
             list_transform(v, x -> x * 0.9 + 0.01) AS v
           FROM e WHERE vec_id % 7 = 3)"""
 
+  /** [[ivfArrivalsSql]] routed to its nearest base centroid — the
+    * arrival rows the batch upsert appends ([[persistedIvfCellsUpserted]]).
+    * Defines `nb` and `nbcells` (vec_id, v, cid). */
+  private def arrivalCellsSql: String = s"""$ivfArrivalsSql,
+        nbcells AS (
+          SELECT vec_id, v, cid FROM (
+            SELECT nb.vec_id, nb.v, c.cid,
+              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
+                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
+            FROM nb CROSS JOIN cent c)
+          WHERE rn = 1)"""
+
   /** Fold generation `wave`'s wave ([[foldWave]]) + nearest-centroid
     * routing in SQL, routed against centroid CTE `cent` into `out`
     * (vec_id, v, cid). ONE derivation for every streamed-front oracle
@@ -4835,6 +4294,26 @@ object LlmSim extends QueryModule {
                 ${d2Sql(s"$in.v", "c.cv")}, c.cid) AS rn
             FROM $in CROSS JOIN $cent c)
           WHERE rn = 1)"""
+  }
+
+  /** The realtime segment AS OF `seal` in SQL beside the committed
+    * index — the oracle side of [[segmentAsOf]]: each streamed wave
+    * 1..`seal` routed against the base centroids ([[waveCellsSql]]:
+    * nscells, ns2cells, …), unioned after `cells` into `allcells`; with
+    * `codes`, each wave's frozen-codebook residual codes too
+    * ([[waveRpqCodesSql]]), unioned after `pidx` into `allidx`. */
+  private def sealedWavesSql(seal: Int, codes: Boolean): String = {
+    val pfx = (1 to seal).map(w => if (w == 1) "ns" else s"ns$w")
+    def union(base: String, cols: String, part: String): String =
+      (s"SELECT $cols FROM $base" +: pfx.map(p =>
+        s"SELECT $cols FROM $p$part")).mkString("\n          UNION ALL ")
+    val cells = pfx.zipWithIndex.map { case (p, i) =>
+      waveCellsSql(out = s"${p}cells", wave = i + 1) }
+    val idx = if (!codes) Nil else
+      pfx.map(p => waveRpqCodesSql(s"${p}cells", p)) :+ s"""allidx AS (
+          ${union("pidx", "vec_id, codes", "codes")})"""
+    (cells ++ idx :+ s"""allcells AS (
+          ${union("cells", "*", "cells")})""").mkString(",\n        ")
   }
 
   /** Oracle CTE names of the posture generation `g` folds into,
@@ -4905,20 +4384,9 @@ object LlmSim extends QueryModule {
     s"""${pfx}res AS (
           SELECT cl.cid, cl.vec_id,
             list_transform(range(1, ${PqM * PqSubDim + 1}),
-              i -> cl.v[i] - fc.cv[i]) AS rv
+              i -> cl.v[i] - fc.cv[i]) AS v
           FROM $cells cl JOIN $cent fc ON fc.cid = cl.cid),
-        ${pfx}subs AS (
-          SELECT vec_id, m,
-            rv[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM ${pfx}res CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
-        ${pfx}codes AS (
-          SELECT vec_id, list(code ORDER BY m) AS codes FROM (
-            SELECT u0.vec_id, u0.m, c0.code,
-              row_number() OVER (PARTITION BY u0.vec_id, u0.m
-                ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM ${pfx}subs u0 JOIN $cb c0 ON u0.m = c0.m)
-          WHERE rn = 1
-          GROUP BY vec_id)"""
+        ${pqEncodeSql(s"${pfx}res", pfx, cb)}"""
 
   /** The RETRAIN chain in SQL — survivor residuals of
     * [[retrainSource]] against its centroids, RANK-seeded epoch-2
@@ -4927,7 +4395,7 @@ object LlmSim extends QueryModule {
     * shared refine chain, and the full-estate re-encode. Requires the
     * source's g<n>post/g<n>cent and mdrops in scope; defines g<n>live,
     * rsurv, subs, pseed, pcb (the epoch-2 codebook — the name
-    * [[rpqProbeTailSql]] scores against), rcodes. */
+    * [[pqProbeTailSql]] scores against), rcodes. */
   private def rpqRetrainSql: String = {
     val g = retrainSource
     s"""${g.cte("live")} AS MATERIALIZED (
@@ -5023,18 +4491,34 @@ object LlmSim extends QueryModule {
             list_transform(range(1, ${PqM * PqSubDim + 1}),
               i -> nc.v[i] - ct.cv[i]) AS v
           FROM $cellsCte nc JOIN cent ct ON ct.cid = nc.cid),
-        ${pfx}subs AS (
+        ${pqEncodeSql(s"${pfx}resid", pfx)}"""
+
+  /** The frozen-codebook ENCODE in SQL: every (vec_id, v) row of `src`
+    * coded sub-vector-wise against codebook CTE `cb` by the (d2, code)
+    * argmin — the oracle side of [[pqEncodeCol]]. Defines
+    * `<pfx>subs` and `<pfx>codes` (vec_id, codes). */
+  private def pqEncodeSql(src: String, pfx: String,
+                          cb: String = "pcb"): String =
+    s"""${pfx}subs AS (
           SELECT vec_id, m,
             v[m * $PqSubDim + 1 : m * $PqSubDim + $PqSubDim] AS sv
-          FROM ${pfx}resid CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
+          FROM $src CROSS JOIN (SELECT unnest(range($PqM)) AS m)),
         ${pfx}codes AS (
           SELECT vec_id, list(code ORDER BY m) AS codes FROM (
             SELECT u0.vec_id, u0.m, c0.code,
               row_number() OVER (PARTITION BY u0.vec_id, u0.m
                 ORDER BY ${d2Sql("u0.sv", "c0.cv")}, c0.code) AS rn
-            FROM ${pfx}subs u0 JOIN pcb c0 ON u0.m = c0.m)
+            FROM ${pfx}subs u0 JOIN $cb c0 ON u0.m = c0.m)
           WHERE rn = 1
           GROUP BY vec_id)"""
+
+  /** The batch arrivals ([[ivfArrivalsSql]]'s `nb`) encoded against
+    * the frozen plain-PQ codebooks and unioned with the corpus codes
+    * `pidx` — [[persistedPqIdxUpserted]] in SQL. Defines `allidx`. */
+  private def arrivalPqIdxSql: String = s"""${pqEncodeSql("nb", "nb")},
+        allidx AS (
+          SELECT vec_id, codes FROM pidx
+          UNION ALL SELECT vec_id, codes FROM nbcodes)"""
 
   /** The quantized-mean centroid REFRESH in SQL — floor(x·1e7)
     * integral sums per (cid, dim), dims reassembled in order: the ONE
@@ -5054,53 +4538,76 @@ object LlmSim extends QueryModule {
             GROUP BY cid, dim)
           GROUP BY cid)"""
 
-  /** The EXACT-cosine probe TAIL in SQL — query window → route
-    * against centroid CTE `cent` → cosine over `cells` in the routed
-    * cids → rank 3. ONE derivation for the exact-probe oracles that
-    * parameterize their index side (the batch upsert, the streamed
-    * ingest, the servable fold). */
-  private def ivfProbeTailSql(cent: String, cells: String,
-                              lo: Long, hi: Long): String = s"""probes AS (
+  /** The probe query window in SQL — corpus vectors with ids in
+    * [lo, hi) as (q_id, qv) over [[ivfCellsSql]]'s `e`; the oracle
+    * side of [[queryWindow]]. Defines `q`. */
+  private def qWindowSql(lo: Long, hi: Long): String =
+    s"""q AS (SELECT vec_id AS q_id, v AS qv FROM e
+          WHERE vec_id >= $lo AND vec_id < $hi)"""
+
+  /** Routing in SQL: every (q_id, qv) row of CTE `q` to its
+    * [[IvfPNprobe]] nearest centroids of `cent` by the family's
+    * (d2, cid) argmin — the oracle side of [[probeCells]]. Defines
+    * `probes`. */
+  private def ivfRouteSql(cent: String, q: String = "q"): String =
+    s"""probes AS (
           SELECT q_id, qv, cid FROM (
-            SELECT e.vec_id AS q_id, e.v AS qv, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                ${d2Sql("e.v", "c.cv")}, c.cid) AS rn
-            FROM e CROSS JOIN $cent c
-            WHERE e.vec_id >= $lo AND e.vec_id < $hi)
-          WHERE rn <= $IvfPNprobe),
+            SELECT q.q_id, q.qv, c.cid,
+              row_number() OVER (PARTITION BY q.q_id ORDER BY
+                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
+            FROM $q q CROSS JOIN $cent c)
+          WHERE rn <= $IvfPNprobe)"""
+
+  /** [[ivfRouteSql]], then exact cosine over the routed cells' rows
+    * of `cells`, self excluded. Defines `probes` and `scored`
+    * (q_id, vec_id, cos). */
+  private def ivfScoredSql(cent: String, cells: String,
+                           q: String = "q"): String =
+    s"""${ivfRouteSql(cent, q)},
         scored AS (
-          SELECT p.q_id, a.vec_id, ${V.cosineSql("p.qv", "a.v")} AS cos
-          FROM probes p JOIN $cells a
-            ON p.cid = a.cid AND p.q_id <> a.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
+          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
+          FROM probes p JOIN $cells cl
+            ON cl.cid = p.cid AND p.q_id <> cl.vec_id)"""
+
+  /** The final top-3 of `scored` (q_id, vec_id, cos) by (cos desc,
+    * vec_id): every cosine-reranked probe oracle's output. */
+  private val top3Sql: String = """SELECT q_id, rank, vec_id, cos FROM (
           SELECT q_id, vec_id, cos, CAST(row_number() OVER (
             PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
           FROM scored)
         WHERE rank <= 3"""
 
-  /** The residual-ADC probe TAIL in SQL — query window → route
-    * against centroid CTE `cent` → per-cell query residual →
-    * candidate ADC over `idx` codes → top-R cut → exact-cosine
-    * rerank against `cells` → rank 3. ONE derivation for all three
-    * residual-PQ probe oracles (base index, maintained epoch,
-    * streamed tail) — the tiebreak and arithmetic contract lives in
-    * exactly one place. */
-  private def rpqProbeTailSql(cent: String, cells: String, idx: String,
-                              lo: Long, hi: Long): String = s"""q AS (
-          SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= $lo AND vec_id < $hi),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN $cent c)
-          WHERE rn <= $IvfPNprobe),
-        qres AS (
+  /** The EXACT-cosine probe TAIL in SQL — query window [lo, hi) →
+    * route against centroid CTE `cent` → cosine over `cells` in the
+    * routed cids → rank 3: the oracle side of [[ivfProbeOf]], ONE
+    * derivation for every exact-probe oracle. */
+  private def ivfProbeTailSql(cent: String, cells: String,
+                              lo: Long, hi: Long): String =
+    s"""${qWindowSql(lo, hi)},
+        ${ivfScoredSql(cent, cells)}
+        $top3Sql"""
+
+  /** The ADC probe TAIL in SQL — query window [lo, hi) → route
+    * against centroid CTE `cent` → the vector the ADC scores codes
+    * against (the query itself, or with `residual` the per-cell query
+    * residual) → candidate ADC over `idx` codes with codebooks `pcb` →
+    * top-R cut → exact-cosine rerank against `cells` → rank 3. The
+    * oracle side of [[pqProbeCore]], with the same plain/residual
+    * choice: ONE place for the tiebreak and arithmetic contract of
+    * every PQ probe oracle. */
+  private def pqProbeTailSql(cent: String, cells: String, idx: String,
+                             lo: Long, hi: Long,
+                             residual: Boolean): String = {
+    val qres =
+      if (!residual) "qres AS (SELECT q_id, cid, qv AS qr FROM probes)"
+      else s"""qres AS (
           SELECT p.q_id, p.cid,
             list_transform(range(1, ${PqM * PqSubDim + 1}),
               i -> p.qv[i] - c.cv[i]) AS qr
-          FROM probes p JOIN $cent c ON c.cid = p.cid),
+          FROM probes p JOIN $cent c ON c.cid = p.cid)"""
+    s"""${qWindowSql(lo, hi)},
+        ${ivfRouteSql(cent)},
+        $qres,
         cand AS (
           SELECT p.q_id, p.qr, cl.vec_id
           FROM qres p
@@ -5131,11 +4638,8 @@ object LlmSim extends QueryModule {
           FROM topr t
             JOIN q ON q.q_id = t.q_id
             JOIN $cells cl ON cl.vec_id = t.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3"""
+        $top3Sql"""
+  }
 
   /** [[MaintSplitRounds]] unrolled rounds of [[splitCells]] in SQL
     * over a prior `allcells` CTE — the mirror of
@@ -5201,14 +4705,7 @@ object LlmSim extends QueryModule {
     * probes the committed maintained artifacts. Reused CTEs carry
     * AS MATERIALIZED (DuckDB 1.0 inlines multiply-referenced CTEs —
     * the chain re-computes multiplicatively without it). */
-  private def maintChainSql: String = s"""$ivfArrivalsSql,
-        nbcells AS (
-          SELECT vec_id, v, cid FROM (
-            SELECT nb.vec_id, nb.v, c.cid,
-              row_number() OVER (PARTITION BY nb.vec_id ORDER BY
-                ${d2Sql("nb.v", "c.cv")}, c.cid) AS rn
-            FROM nb CROSS JOIN cent c)
-          WHERE rn = 1),
+  private def maintChainSql: String = s"""$arrivalCellsSql,
         allcells AS MATERIALIZED (
           SELECT vec_id, v, cid FROM cells
           UNION ALL SELECT vec_id, v, cid FROM nbcells),
@@ -5321,37 +4818,41 @@ object LlmSim extends QueryModule {
     * matches [[runPostingsWave]]: durable checkpoint under the
     * table dir, wiped with the segment by the fresh-catalog rebuild;
     * `chaos` is the same fault-injection seam, and the mid-wave
-    * crash+resume path is driven in the spec. */
-  private[graft] def streamedIvfSegment(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): DataFrame = {
+    * crash+resume path is driven in the spec.
+    *
+    * ONE read for every segment consumer: AS OF `seal` (1..[[SegSeals]])
+    * it lands each wave through `seal` that has not sealed yet and
+    * reads the waves up to it — exact cells, or with `codes` the
+    * compressed-codes segment beside them. An undefined seal fails
+    * before anything is built. */
+  private[graft] def segmentAsOf(s: SparkSession, dir: String, seal: Int,
+                                codes: Boolean = false,
+                                chaos: Long => Unit = _ => ()): DataFrame = {
     import s.implicits._
-    // AS-OF SEAL 1: the read every seal-1 gate (and the fold, whose
-    // cut point this is) pins — deterministic whether or not a later
-    // wave has advanced the seal, the postings `ep <=` discipline on
-    // the segment's id bands
-    ivfSegmentRun(s, dir, gen = 1, chaos)
-      .filter($"vec_id" < IvfSegSeal1Bound)
+    require(seal >= 1 && seal <= SegSeals,
+      s"unknown segment seal $seal (seals 1..$SegSeals)")
+    val seg =
+      if (!codes) streamedVectorSegment(s, dir, ivfSegTableName(dir),
+        "ivf-stream-seg", () => {
+          val cent = persistedIvfCent(s, dir)
+          ivfCellsOf(_, cent)
+        }, chaos, seal)
+      else {
+        persistedRpqIdx(s, dir): Unit // frozen codebooks + committed codes
+        streamedVectorSegment(s, dir, ivfSegRpqTableName(dir),
+          "ivf-stream-segrpq", () => rpqEncoder(s, dir), chaos, seal)
+      }
+    // AS OF the seal: the read every seal-`seal` gate (and the fold
+    // whose cut point it is) pins — deterministic whether or not a
+    // later wave has advanced the pointer, the postings `ep <=`
+    // discipline on the segment's id bands
+    if (seal == SegSeals) seg
+    else seg.filter($"vec_id" < (seal + 2) * ArrivalIdBase)
   }
 
-  /** The FULL live segment — both sealed waves (runs wave 2 if the
-    * seal has not advanced yet). The read the seal-2 gates take. */
-  private[graft] def streamedIvfSegmentAll(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): DataFrame =
-    ivfSegmentRun(s, dir, gen = 2, chaos)
-
-  private def ivfSegmentRun(s: SparkSession, dir: String, gen: Int,
-                            chaos: Long => Unit): DataFrame =
-    streamedVectorSegment(s, dir, ivfSegTableName(dir),
-      "ivf-stream-seg", () => {
-        val cent = persistedIvfCent(s, dir)
-        ivfCellsOf(_, cent)
-      }, chaos, gen)
-
-  /** The SEGMENT-LANDING skeleton shared by the exact-cells segment
-    * ([[streamedIvfSegment]]) and the compressed-codes segment
-    * ([[streamedRpqSegment]]) — one protocol, two encodings (the
+  /** The SEGMENT-LANDING skeleton under [[segmentAsOf]], shared by
+    * the exact-cells segment and the compressed-codes segment — one
+    * protocol, two encodings (the
     * one-derivation discipline on the landing machinery itself):
     * fresh-catalog wipe + empty bucketed pre-create, the shared wave
     * materialization, per-micro-batch `encode` → marker-guarded
@@ -5370,10 +4871,9 @@ object LlmSim extends QueryModule {
   private def streamedVectorSegment(
       s: SparkSession, dir: String, segT: String, txnPrefix: String,
       mkEncode: () => DataFrame => DataFrame,
-      chaos: Long => Unit, gen: Int = 1): DataFrame =
+      chaos: Long => Unit, gen: Int): DataFrame =
     ivfSegLock.synchronized {
       import s.implicits._
-      require(gen >= 1 && gen <= 2, s"unknown segment seal generation $gen")
       val encode = mkEncode()
       val segDir = graft.operators.TxnMarker.managedTableDir(s, segT)
       val sealedF = new java.io.File(segDir, "_graft_seg_sealed")
@@ -5481,28 +4981,6 @@ object LlmSim extends QueryModule {
     * changes land on both encodings or neither. */
   private def ivfSegRpqTableName(dir: String): String =
     s"graft_ivf_segrpq_${math.abs(dir.hashCode)}"
-
-  private[graft] def streamedRpqSegment(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): DataFrame = {
-    import s.implicits._
-    // as-of seal 1, like the cells segment's read
-    rpqSegmentRun(s, dir, gen = 1, chaos)
-      .filter($"vec_id" < IvfSegSeal1Bound)
-  }
-
-  /** Both sealed code waves — the seal-2 compressed read. */
-  private def streamedRpqSegmentAll(
-      s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => ()): DataFrame =
-    rpqSegmentRun(s, dir, gen = 2, chaos)
-
-  private def rpqSegmentRun(s: SparkSession, dir: String, gen: Int,
-                            chaos: Long => Unit): DataFrame = {
-    persistedRpqIdx(s, dir): Unit // frozen codebooks + committed codes
-    streamedVectorSegment(s, dir, ivfSegRpqTableName(dir),
-      "ivf-stream-segrpq", () => rpqEncoder(s, dir), chaos, gen)
-  }
 
   // ---- Committed index maintenance (split/merge writeback) ----------
 
@@ -6006,6 +5484,10 @@ object LlmSim extends QueryModule {
     FoldGen(4, "segf4", seal = 0, residue = 2, band = 5L * ArrivalIdBase,
       maxRounds = MaintSplitRounds, roundBase = 0, nsGen = 3))
 
+  /** The realtime segment's seals, 1..SegSeals: the newest seal a
+    * fold generation absorbs ([[segmentAsOf]]'s defined range). */
+  private val SegSeals: Int = FoldGens.map(_.seal).max
+
   /** The namespace generations a renumber opens, oldest first. */
   private val RenumberGens: Seq[Int] =
     FoldGens.map(_.nsGen).filter(_ > 1).distinct
@@ -6209,11 +5691,9 @@ object LlmSim extends QueryModule {
   private def foldAbsorbed(s: SparkSession, dir: String,
                            g: FoldGen): DataFrame = {
     import s.implicits._
-    val rows = g.seal match {
-      case 0 => foldWave(s, dir, g.n)
-      case 1 => streamedIvfSegment(s, dir)
-      case _ => streamedIvfSegmentAll(s, dir).filter($"vec_id" >= g.band)
-    }
+    val rows =
+      if (g.seal == 0) foldWave(s, dir, g.n)
+      else segmentAsOf(s, dir, g.seal).filter($"vec_id" >= g.band)
     rows.select($"vec_id", $"v")
   }
 
@@ -6783,9 +6263,7 @@ object LlmSim extends QueryModule {
                                     k: Int = 3): DataFrame = {
     import s.implicits._
     val (mCells, mCent) = maintainIvfCommit(s, dir)
-    val q = embDoubles(s, dir)
-      .filter($"vec_id" >= lo && $"vec_id" < hi)
-      .select($"vec_id".as("q_id"), $"v".as("qv"))
+    val q = queryWindow(s, dir, lo, hi)
     val routed = probeCells(q, centArrOf(mCent), nprobe)
     val cids = routed.select($"cid").distinct().as[Int].collect().sorted
     val cand = mCells.filter(inSetCol($"cid", cids))
@@ -6809,24 +6287,7 @@ object LlmSim extends QueryModule {
         mlive AS (
           SELECT * FROM relab
           WHERE vec_id NOT IN (SELECT vec_id FROM mdrops)),
-        mq AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 30 AND vec_id < 35),
-        mprobes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM mq q CROSS JOIN mcent c)
-          WHERE rn <= $IvfPNprobe),
-        mscored AS (
-          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM mprobes p JOIN mlive cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM mscored)
-        WHERE rank <= 3"""
+        ${ivfProbeTailSql("mcent", "mlive", 30, 35)}"""
 
   /** The persisted lexical POSTINGS artifact: (w, doc_id, tf, df),
     * bucketed on `w` — tf from one explode+count pass, df
@@ -7369,18 +6830,21 @@ object LlmSim extends QueryModule {
   }
 
   /** The oracle-side document estate through epoch `e`: the base
-    * corpus plus [[arrivalDocsSql]] over epochs 1..`e`, tokenized —
+    * corpus (epoch 0) plus [[arrivalDocsSql]] over epochs 1..`e`,
+    * tokenized —
     * ONE shape for every epoch high-water an oracle re-derives.
     * Defines alld and tok. */
-  private def postingsEstateSqlUpTo(e: Int): String =
+  private def postingsEstateSqlUpTo(e: Int): String = {
+    val arrivals =
+      if (e == 0) "" else s"\n          UNION ALL ${arrivalDocsSql(1 to e)}"
     s"""alld AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL ${arrivalDocsSql(1 to e)}),
+          SELECT doc_id, text FROM documents$arrivals),
         tok AS (
           SELECT w, doc_id, count(*) AS tf FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS w
             FROM alld)
           GROUP BY w, doc_id)"""
+  }
 
   /** The arrival documents of postings `epochs` in SQL, one SELECT per
     * epoch joined by UNION ALL — [[postingsDeltaDocs]]'s residue
@@ -7486,36 +6950,43 @@ object LlmSim extends QueryModule {
     (postL, dfL)
   }
 
-  /** The tf-idf probe TAIL over an estate's `tok` CTE — the
-    * uncurated-read mirror of [[postingsKeepNewestProbeSql]], shared
-    * by every oracle that probes a postings epoch as-landed (epoch 2,
-    * the streamed epochs, the batch-after-stream epoch): df from the
-    * estate, the shared 8-term query fixture, integer-arithmetic
-    * scores (transcendental-free cross-engine policy), top-5. */
-  private val postingsTfIdfProbeSql: String = s"""dfq AS (
-          SELECT w, count(*) AS df FROM tok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
+  /** The LEXICAL ARM in SQL — the shared 8-term query fixture scored
+    * against postings CTE `tok` with df CTE `df`: integer-arithmetic
+    * tf·1e6/df sums (transcendental-free cross-engine policy), self
+    * excluded, ranked by (su desc, doc_id) and cut at `k`. The oracle
+    * side of [[lexRank]]: ONE scoring derivation for every postings
+    * probe (top-5) and every hybrid lexical arm (top-20). Defines `qw`,
+    * `tsc` and `lrank` (q_id, doc_id, su, rank). */
+  private def lexArmSql(tok: String, df: String, k: Int): String =
+    s"""qw AS (SELECT DISTINCT doc_id AS q_id,
             unnest(string_split(text, ' ')[1:8]) AS w
           FROM documents WHERE doc_id < 5),
         tsc AS (
           SELECT q_id, doc_id,
             CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM tok JOIN dfq USING (w) JOIN qw USING (w)
+          FROM $tok JOIN $df USING (w) JOIN qw USING (w)
           WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id)
-        SELECT q_id, rank, doc_id, su FROM (
-          SELECT q_id, doc_id, su, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY su DESC, doc_id) AS INT) AS rank
-          FROM tsc)
-        WHERE rank <= 5"""
+          GROUP BY q_id, doc_id),
+        lrank AS (
+          SELECT * FROM (
+            SELECT q_id, doc_id, su, CAST(row_number() OVER (
+              PARTITION BY q_id ORDER BY su DESC, doc_id) AS INT) AS rank
+            FROM tsc)
+          WHERE rank <= $k)"""
 
-  /** The keep-newest curation + survivor-probe TAIL shared by every
-    * lexical delete oracle — appended after an estate CTE set that
-    * defines `alld` (the judged doc estate) and `tok`: 2-batch estate
-    * for the batch-cadence pair, streamed estate for the catch-up
-    * compaction. ONE derivation so the curation rule and the survivor
-    * scoring cannot drift between the estates they are judged over. */
-  private val postingsKeepNewestProbeSql: String = s"""live AS (
+  /** [[lexArmSql]] over an estate as landed ([[postingsEstateSqlUpTo]]'s
+    * `tok`, df counted from it) — the uncurated read. */
+  private def lexLandedSql(k: Int): String = s"""dfq AS (
+          SELECT w, count(*) AS df FROM tok GROUP BY w),
+        ${lexArmSql("tok", "dfq", k)}"""
+
+  /** [[lexArmSql]] over the keep-NEWEST survivors of an estate's
+    * `alld` (per distinct text, the largest doc_id), postings and df
+    * re-derived from scratch over the survivors — the curated read of
+    * every lexical delete oracle, ONE derivation so the curation rule
+    * and the survivor scoring cannot drift between the estates they
+    * are judged over. */
+  private def lexKeepNewestSql(k: Int): String = s"""live AS (
           SELECT max(doc_id) AS doc_id, text FROM alld GROUP BY text),
         ltok AS (
           SELECT w, doc_id, count(*) AS tf FROM (
@@ -7523,20 +6994,10 @@ object LlmSim extends QueryModule {
             FROM live)
           GROUP BY w, doc_id),
         ldf AS (SELECT w, count(*) AS df FROM ltok GROUP BY w),
-        qw AS (SELECT DISTINCT doc_id AS q_id,
-            unnest(string_split(text, ' ')[1:8]) AS w
-          FROM documents WHERE doc_id < 5),
-        tsc AS (
-          SELECT q_id, doc_id,
-            CAST(sum(tf * 1000000 // df) AS BIGINT) AS su
-          FROM ltok JOIN ldf USING (w) JOIN qw USING (w)
-          WHERE q_id <> doc_id
-          GROUP BY q_id, doc_id)
-        SELECT q_id, rank, doc_id, su FROM (
-          SELECT q_id, doc_id, su, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY su DESC, doc_id) AS INT) AS rank
-          FROM tsc)
-        WHERE rank <= 5"""
+        ${lexArmSql("ltok", "ldf", k)}"""
+
+  /** The postings probes' output over [[lexArmSql]]'s `lrank`. */
+  private val lexProbeSql = "SELECT q_id, rank, doc_id, su FROM lrank"
 
   /** ONE oracle for every curated read of high-water `e`: survivors =
     * keep-newest per distinct text over the epoch-`e` estate, postings
@@ -7545,7 +7006,8 @@ object LlmSim extends QueryModule {
     * sets are disjoint, counts subtract exactly). */
   private def postingsCuratedOracleSql(e: Int): String = s"""
         WITH ${postingsEstateSqlUpTo(e)},
-        $postingsKeepNewestProbeSql"""
+        ${lexKeepNewestSql(5)}
+        $lexProbeSql"""
 
   /** The as-landed probe of postings epoch `e` — the shared query-term
     * fixture broadcast onto the bucketed postings scan AS OF `e`, then
@@ -7560,7 +7022,8 @@ object LlmSim extends QueryModule {
     },
     oracle = Some(s"""
         WITH ${postingsEstateSqlUpTo(e)},
-        $postingsTfIdfProbeSql"""))
+        ${lexLandedSql(5)}
+        $lexProbeSql"""))
 
   /** The compacted probe of curated high-water `e` — the same probe
     * over [[postingsCompacted]]'s live pair, gated by
@@ -7629,13 +7092,6 @@ object LlmSim extends QueryModule {
       .distinct()
   }
 
-  /** The RRF fusion tail shared by BOTH hybrid queries (snapshot and
-    * live): full-outer merge of a lexical top-20 (q_id, doc_id, tr)
-    * and a vector top-20 (q_id, doc_id, vr), rrf = Σ 1/(60 + rank)
-    * over the sides a doc appears in, top-5 by rrf. ONE derivation so
-    * the fusion constant, tie-break, and output shape cannot drift
-    * between the two gated queries (the postingsDeltaDocs one-fixture
-    * discipline applied to the fusion arithmetic). */
   /** The hybrid queries' VECTOR ARM — route against the frozen base
     * centroids, collect the metadata-sized cid set, bucket-pruned
     * join onto `cells`, top-`k` rank: ONE derivation shared by the
@@ -7648,9 +7104,7 @@ object LlmSim extends QueryModule {
   private def hybridVectorArm(s: SparkSession, dir: String,
                               cells: DataFrame, k: Int): DataFrame = {
     import s.implicits._
-    val q = embDoubles(s, dir).filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"v".as("qv"))
-    val routed = probeCells(q,
+    val routed = probeCells(queryWindow(s, dir, 0, 5),
       centArrOf(persistedIvfCent(s, dir)), IvfPNprobe)
     val cids = routed.select($"cid").distinct().as[Int].collect().sorted
     val vsc = routed.join(cells.filter(inSetCol($"cid", cids)), Seq("cid"))
@@ -7660,6 +7114,13 @@ object LlmSim extends QueryModule {
       .select($"q_id", $"vec_id".as("doc_id"), $"rank".as("vr"))
   }
 
+  /** The RRF fusion tail shared by every hybrid query: full-outer
+    * merge of a lexical top-20 (q_id, doc_id, tr) and a vector top-20
+    * (q_id, doc_id, vr), rrf = Σ 1/(60 + rank) over the sides a doc
+    * appears in, top-5 by rrf. ONE derivation so the fusion constant,
+    * tie-break, and output shape cannot drift between the gated
+    * queries (the postingsDeltaDocs one-fixture discipline applied to
+    * the fusion arithmetic); mirrored once by [[hybridOracleSql]]. */
   private def rrfFuse(trank: DataFrame, vrank: DataFrame): DataFrame = {
     import trank.sparkSession.implicits._
     val fused = trank.join(vrank, Seq("q_id", "doc_id"), "full")
@@ -7670,6 +7131,38 @@ object LlmSim extends QueryModule {
     rankedTopK(fused, "q_id", Seq(("rrf", true), ("doc_id", false)), 5)
       .select($"q_id", $"rank", $"doc_id", $"rrf")
   }
+
+  /** Every hybrid-search oracle: after [[ivfCellsSql]] and the
+    * serving tier's CTE chain `chain`, the lexical arm `lex` (a
+    * [[lexLandedSql]] or [[lexKeepNewestSql]] cut at 20), the vector
+    * arm routed over centroid CTE `cent` into `cells` for queries
+    * [0, 5) and cut at 20, and the [[rrfFuse]] fusion, top 5. */
+  private def hybridOracleSql(chain: String, lex: String,
+                              cent: String, cells: String): String = s"""
+        WITH $ivfCellsSql,
+        $chain,
+        $lex,
+        trank AS (SELECT q_id, doc_id, rank AS tr FROM lrank),
+        ${qWindowSql(0, 5)},
+        ${ivfScoredSql(cent, cells)},
+        vrank AS (
+          SELECT q_id, doc_id, CAST(rn AS INT) AS vr FROM (
+            SELECT q_id, vec_id AS doc_id, row_number() OVER (
+              PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
+            FROM scored)
+          WHERE rn <= 20),
+        fused AS (
+          SELECT COALESCE(t.q_id, v.q_id) AS q_id,
+            COALESCE(t.doc_id, v.doc_id) AS doc_id,
+            COALESCE(CAST(1 AS DOUBLE) / (t.tr + 60), 0.0) +
+              COALESCE(CAST(1 AS DOUBLE) / (v.vr + 60), 0.0) AS rrf
+          FROM trank t FULL JOIN vrank v
+            ON t.q_id = v.q_id AND t.doc_id = v.doc_id)
+        SELECT q_id, rank, doc_id, rrf FROM (
+          SELECT q_id, doc_id, rrf, CAST(row_number() OVER (
+            PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS INT) AS rank
+          FROM fused)
+        WHERE rank <= 5"""
 
   /** The lexical scoring CORE shared by [[lexicalTopK]] and the
     * postings-upsert probe: broadcast query terms onto a postings
@@ -7709,9 +7202,7 @@ object LlmSim extends QueryModule {
                                   lo: Long, hi: Long,
                                   nprobe: Int = IvfPNprobe): DataFrame = {
     import s.implicits._
-    val q = embDoubles(s, dir)
-      .filter($"vec_id" >= lo && $"vec_id" < hi)
-      .select($"vec_id".as("q_id"), $"v".as("qv"))
+    val q = queryWindow(s, dir, lo, hi)
     val routed = probeCells(q, centArrOf(persistedIvfCent(s, dir)),
       nprobe)
     val cids = routed.select($"cid").distinct().as[Int].collect().sorted
@@ -7757,24 +7248,19 @@ object LlmSim extends QueryModule {
         live AS (
           SELECT * FROM cells
           WHERE vec_id NOT IN (SELECT vec_id FROM drops)),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e
-          WHERE vec_id >= 20 AND vec_id < 25),
-        probes AS (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-              row_number() OVER (PARTITION BY q.q_id ORDER BY
-                ${d2Sql("q.qv", "c.cv")}, c.cid) AS rn
-            FROM q CROSS JOIN cent c)
-          WHERE rn <= $IvfPNprobe),
-        scored AS (
-          SELECT p.q_id, cl.vec_id, ${V.cosineSql("p.qv", "cl.v")} AS cos
-          FROM probes p JOIN live cl
-            ON cl.cid = p.cid AND p.q_id <> cl.vec_id)
-        SELECT q_id, rank, vec_id, cos FROM (
-          SELECT q_id, vec_id, cos, CAST(row_number() OVER (
-            PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-          FROM scored)
-        WHERE rank <= 3"""
+        ${ivfProbeTailSql("cent", "live", 20, 25)}"""
+
+  /** The shared DuckDB mirror of the batch-arrival probes (batch and
+    * streamed, [[ivfArrivals]] routed as queries against the base
+    * index). */
+  private lazy val arrivalProbeOracleSql: String = s"""
+        WITH $ivfCellsSql,
+        nb AS (
+          SELECT vec_id + $ArrivalIdBase AS q_id,
+            list_transform(v, x -> x * 0.9 + 0.01) AS qv
+          FROM e WHERE vec_id % 7 = 3),
+        ${ivfScoredSql("cent", "cells", q = "nb")}
+        $top3Sql"""
 
   /** One probe pass against an IVF artifact pair: route each (q_id,
     * qv) row of `q` to its `nprobe` nearest cells (broadcast
@@ -7813,14 +7299,9 @@ object LlmSim extends QueryModule {
     * cells artifact, cosine rerank top-3. */
   private[graft] def ivfPersistedProbe(s: SparkSession, dir: String,
                                        lo: Long, hi: Long,
-                                       nprobe: Int = IvfPNprobe): DataFrame = {
-    import s.implicits._
-    ivfProbeOf(
-      embDoubles(s, dir)
-        .filter($"vec_id" >= lo && $"vec_id" < hi)
-        .select($"vec_id".as("q_id"), $"v".as("qv")),
+                                       nprobe: Int = IvfPNprobe): DataFrame =
+    ivfProbeOf(queryWindow(s, dir, lo, hi),
       persistedIvfCent(s, dir), persistedIvfCells(s, dir), nprobe)
-  }
 
   // ---- Binary quantization (sign-bit sketch ANN) -------------------
 
@@ -7869,9 +7350,7 @@ object LlmSim extends QueryModule {
     import s.implicits._
     val sigs = persistedBqSigs(s, dir)
     val qb = broadcast(
-      embDoubles(s, dir)
-        .filter($"vec_id" >= lo && $"vec_id" < hi)
-        .select($"vec_id".as("q_id"), $"v".as("qv"))
+      queryWindow(s, dir, lo, hi)
         .join(bqSigsOf(
           embDoubles(s, dir).filter($"vec_id" >= lo && $"vec_id" < hi))
           .select($"vec_id".as("q_id"), $"sig".as("qsig")), Seq("q_id")))
@@ -8174,8 +7653,8 @@ object LlmSim extends QueryModule {
       // exists to fix)
       FoldGens.foreach { g =>
         if (g.seal > 1) { // the segment through g's seal, both encodings
-          st("seg_waves")(streamedIvfSegmentAll(s, dir))
-          st("rpq_waves")(streamedRpqSegmentAll(s, dir))
+          st("seg_waves")(segmentAsOf(s, dir, g.seal))
+          st("rpq_waves")(segmentAsOf(s, dir, g.seal, codes = true))
         }
         st(s"fold${g.n}")(foldCodes(s, dir, g.n))
         // the O(corpus) retrain, and with it the distortion baseline

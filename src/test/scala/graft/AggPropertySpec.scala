@@ -220,7 +220,7 @@ class AggPropertySpec extends AnyFunSuite {
     // model snapshot — the ACID contract as one executable property.
     val rnd = new scala.util.Random(2026)
     (0 until 3).foreach { run =>
-      val table = Engine.scratchDir(s"txmodel_spec_$run")
+      val table = scratch(s"txmodel_spec_$run")
       var nextKey = 0L
       def freshBatch(): Seq[(Long, Double)] = {
         val n = 1 + rnd.nextInt(4)
@@ -303,7 +303,7 @@ class AggPropertySpec extends AnyFunSuite {
     }
     val rnd = new scala.util.Random(2027)
     (0 until 2).foreach { run =>
-      val table = Engine.scratchDir(s"txmodel_schema_$run")
+      val table = scratch(s"txmodel_schema_$run")
       var nextKey = 0L
       var renames = 0
       def freshRows(st: S): Seq[(Long, Int, Double, Option[Double])] = {
@@ -630,7 +630,7 @@ class AggPropertySpec extends AnyFunSuite {
     val trials = hostile.map(h => Seq(h, randStr(), randStr())) ++
       (0 until 5).map(_ => Seq.fill(4)(randStr()))
     trials.zipWithIndex.foreach { case (vals, i) =>
-      val table = Engine.scratchDir(s"txprop_$i")
+      val table = scratch(s"txprop_$i")
       val df = vals.zipWithIndex.map { case (v, j) => (j.toLong, v) }
         .toDF("k", "s").coalesce(1)
       TxLog.append(spark, df, table, statsCols = Seq("k", "s"))

@@ -8,6 +8,11 @@ object SparkTestSession {
   lazy val spark: SparkSession = Engine.session("graft-test", cores = "4")
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A scratch dir under [[Engine.scratchRoot]] that the JVM removes
+    * at exit ([[graft.streaming.Replay.removedAtExit]]), so a suite run
+    * leaves no spec tables or checkpoints on the (tmpfs) scratch root. */
+  def scratch(tag: String): String = graft.streaming.Replay.removedAtExit(tag)
+
   /** The WARN-and-above messages logged anywhere while `body` runs,
     * through an appender on the root logger (no logger level moves). */
   def rootWarns(body: => Unit): Seq[String] = {

@@ -1797,14 +1797,14 @@ class OperatorSpec extends AnyFunSuite {
     assert(waveN > 0, "empty vector wave fixture")
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[Exception] {
-      LlmSim.streamedIvfSegment(spark, sf, chaos = id =>
+      LlmSim.segmentAsOf(spark, sf, 1, chaos = id =>
         if (id == 1 && boom.compareAndSet(false, true))
           throw new RuntimeException("graft-chaos: cut after batch 1"))
     }
     assert(boom.get, "chaos never fired — the wave had fewer batches")
     // resume: re-delivered batch no-ops on its marker, rest lands,
     // the segment seals
-    val seg = LlmSim.streamedIvfSegment(spark, sf)
+    val seg = LlmSim.segmentAsOf(spark, sf, 1)
     assert(seg.count() === waveN,
       "segment row count diverges from the wave (dup or loss)")
     assert(seg.select($"vec_id").distinct().count() === waveN,
@@ -1816,7 +1816,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(LlmSim.persistedIvfCells(spark, sf).count() === nCommitted,
       "streamed segment mutated the committed cells table")
     // sealed: re-entry is a no-op
-    assert(LlmSim.streamedIvfSegment(spark, sf).count() === waveN)
+    assert(LlmSim.segmentAsOf(spark, sf, 1).count() === waveN)
     // content claim from the gate's comment, ASSERTED: query 19
     // (residue 5 — a wave source) must see its perturbed twin at
     // rank 1 of the committed ∪ segment probe
@@ -1889,7 +1889,7 @@ class OperatorSpec extends AnyFunSuite {
     val sf4 = mkAlias("graft_sf_stream_alias4")
     // wave 1 seals; pin the as-of-seal-1 read and the fold (whose cut
     // point seal 1 is) BEFORE the seal advances
-    val n1 = LlmSim.streamedIvfSegment(spark, sf4).count()
+    val n1 = LlmSim.segmentAsOf(spark, sf4, 1).count()
     val fold1 = LlmSim.foldCells(spark, sf4, 1).count()
     // wave 2 with a mid-wave crash: batch ids continue from the
     // resumed checkpoint (wave 1 consumed 0..3), the cut lands after
@@ -1897,7 +1897,7 @@ class OperatorSpec extends AnyFunSuite {
     // checkpoint RESUME, on the vector side
     val boom = new java.util.concurrent.atomic.AtomicBoolean(false)
     val cut =
-      try { LlmSim.streamedIvfSegmentAll(spark, sf4, chaos = id =>
+      try { LlmSim.segmentAsOf(spark, sf4, 2, chaos = id =>
           if (id == 5 && boom.compareAndSet(false, true))
             throw new RuntimeException("graft-chaos: cut mid wave 2"))
         false }
@@ -1907,7 +1907,7 @@ class OperatorSpec extends AnyFunSuite {
     // read as this message, not as a generic missing-exception
     assert(boom.get, "chaos never fired — wave 2 had fewer batches")
     assert(cut, "chaos fired but the stream did not propagate the cut")
-    val all = LlmSim.streamedIvfSegmentAll(spark, sf4)
+    val all = LlmSim.segmentAsOf(spark, sf4, 2)
     val w2 = all.filter($"vec_id" >= LlmSim.IvfSegSeal1Bound).count()
     assert(w2 === LlmSim.foldWave(spark, sf4, 2).count(),
       "wave 2 landed short or long (dup or loss through the crash)")
@@ -1917,7 +1917,7 @@ class OperatorSpec extends AnyFunSuite {
       "wave 2 disturbed the sealed wave-1 rows")
     // the as-of-seal-1 reads are STABLE after the seal advanced —
     // the determinism every seal-1 gate (and the fold) rests on
-    assert(LlmSim.streamedIvfSegment(spark, sf4).count() === n1,
+    assert(LlmSim.segmentAsOf(spark, sf4, 1).count() === n1,
       "the as-of-seal-1 read leaked the later wave")
     assert(LlmSim.foldCells(spark, sf4, 1).count() === fold1,
       "the fold's cut-point read moved after the seal advanced")
@@ -1972,6 +1972,19 @@ class OperatorSpec extends AnyFunSuite {
           lines(i)}")
       noShuffleAbove(i)
     }
+    // an undefined seal fails loudly, naming itself, before the as-of
+    // read builds anything — on a fresh alias, whose index tables do
+    // not exist yet, for both encodings
+    val fresh = mkAlias("graft_sf_seal_guard")
+    val tables0 = spark.catalog.listTables().count()
+    for (seal <- Seq(0, 3); codes <- Seq(false, true)) {
+      val e = intercept[IllegalArgumentException](
+        LlmSim.segmentAsOf(spark, fresh, seal, codes = codes))
+      assert(e.getMessage.contains(s"unknown segment seal $seal"),
+        e.getMessage)
+    }
+    assert(spark.catalog.listTables().count() === tables0,
+      "an undefined seal built a table before failing")
   }
 
   test("segment fold: row conservation, segment absorbed whole, parent recovery stays in the committed space") {
@@ -1979,7 +1992,7 @@ class OperatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val (mCells, _) = LlmSim.maintainIvfCommit(spark, sf)
-    val seg = LlmSim.streamedIvfSegment(spark, sf)
+    val seg = LlmSim.segmentAsOf(spark, sf, 1)
     val f = LlmSim.foldCells(spark, sf, 1)
     // conservation: committed + segment, nothing lost or doubled
     assert(f.count() === mCells.count() + seg.count(),
@@ -2073,7 +2086,7 @@ class OperatorSpec extends AnyFunSuite {
     import graft.queries.LlmSim
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val segC = LlmSim.streamedRpqSegment(spark, sf)
+    val segC = LlmSim.segmentAsOf(spark, sf, 1, codes = true)
     val wave = LlmSim.foldWave(spark, sf, 1)
     assert(segC.count() === wave.count(),
       "codes segment row count diverges from the wave")
@@ -2498,7 +2511,7 @@ class OperatorSpec extends AnyFunSuite {
     import graft.operators.TxLog
     import org.apache.spark.sql.types.{LongType, IntegerType}
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_schema_map")
+    val table = scratch("txlog_schema_map")
     val a = Seq((1L, 1, 1.5), (2L, 2, 2.5)).toDF("k", "n", "q")
       .repartition(1)
     TxLog.append(spark, a, table, statsCols = Seq("k")) // v0
@@ -2580,7 +2593,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog mapped schema: pruning, COW/MOR, changes, clone, checkpoint") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_schema_map2")
+    val table = scratch("txlog_schema_map2")
     // two files with disjoint k ranges + bloom stats, recorded under
     // the ORIGINAL name
     val lo = spark.range(0, 5).select($"id".as("k"),
@@ -2620,7 +2633,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(deleted.toSeq === Seq(1L, 102L))
 
     // SHALLOW CLONE carries the mapping (schema history + epochs)
-    val clone = Engine.scratchDir("txlog_schema_map2_clone")
+    val clone = scratch("txlog_schema_map2_clone")
     TxLog.cloneShallow(table, clone)
     assert(TxLog.read(spark, clone).columns.toSeq === Seq("id", "v"))
     assert(TxLog.read(spark, clone).count() === 8)
@@ -2642,7 +2655,7 @@ class OperatorSpec extends AnyFunSuite {
     // compare against the batch read.
     val got = scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
     val q = TxLog.streamCdc(spark, table,
-      Engine.scratchDir("txmap_cdc_ck")) { (df, v0) =>
+      scratch("txmap_cdc_ck")) { (df, v0) =>
       df.select($"_change", $"id", $"v").collect()
         .foreach(r => got.synchronized {
           got += ((r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -2666,7 +2679,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog bloom sidecars: big filters leave the log, skipping intact") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_bloom_sidecar")
+    val table = scratch("txlog_bloom_sidecar")
     // 80k distinct keys in ONE file -> ~800k filter bits -> past the
     // 2^19 sidecar threshold; a small second file stays inline
     TxLog.append(spark, spark.range(0, 80000)
@@ -2689,7 +2702,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(TxLog.bloomKeptFiles(table, "k", -9L).isEmpty)
     assert(TxLog.readPoint(spark, table, "k", 41234L).count() === 1)
     // shallow clone re-anchors the sidecar path; lookups work there
-    val clone = Engine.scratchDir("txlog_bloom_sidecar_clone")
+    val clone = scratch("txlog_bloom_sidecar_clone")
     TxLog.cloneShallow(table, clone)
     assert(TxLog.bloomKeptFiles(clone, "k", 41234L).size === 1)
     assert(TxLog.readPoint(spark, clone, "k", 41234L).count() === 1)
@@ -2705,7 +2718,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog mapped schema: merge and mirror work under renamed columns") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_schema_merge")
+    val table = scratch("txlog_schema_merge")
     TxLog.append(spark, spark.range(0, 10).select($"id".as("k"),
       ($"id" * 1.0).as("v")).repartition(2), table) // v0
     TxLog.renameColumn(spark, table, "k", "id0") // v1
@@ -2727,15 +2740,15 @@ class OperatorSpec extends AnyFunSuite {
     // v2's merge is a rewrite, so subscribe fresh AFTER it and ship
     // the snapshot-bearing commits only... instead: mirror a new
     // mapped table built append-only)
-    val src2 = Engine.scratchDir("txlog_schema_mirror_src")
+    val src2 = scratch("txlog_schema_mirror_src")
     TxLog.append(spark, spark.range(0, 5).select($"id".as("k"),
       ($"id" * 2.0).as("v")).repartition(1), src2)
     TxLog.renameColumn(spark, src2, "k", "id0")
     TxLog.append(spark, Seq((50L, 5.0)).toDF("id0", "v").repartition(1),
       src2)
-    val dst = Engine.scratchDir("txlog_schema_mirror_dst")
+    val dst = scratch("txlog_schema_mirror_dst")
     TxLog.mirror(spark, src2, dst,
-      Engine.scratchDir("txmap_mirror_ck")).awaitTermination()
+      scratch("txmap_mirror_ck")).awaitTermination()
     val d = TxLog.read(spark, dst)
     assert(d.columns.toSeq === Seq("id0", "v"))
     assert(d.count() === 6)
@@ -2745,7 +2758,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog: optimistic concurrency, time travel, file-granular COW") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_spec")
+    val table = scratch("txlog_spec")
     val a = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
     val b = Seq((4L, 40.0), (5L, 50.0)).toDF("k", "x")
     val v0 = TxLog.append(spark, a, table)
@@ -2785,7 +2798,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog MOR delete: deletion vectors mask every read path, no rewrite") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txlog_mor_spec")
+    val table = scratch("txlog_mor_spec")
     val a = (1L to 10L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(2)
     TxLog.append(spark, a, table, statsCols = Seq("k", "bloom:k"))
     val filesBefore = TxLog.files(table).toSet
@@ -2829,13 +2842,13 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog MOR: clones carry masks; COW delete respects them; vacuum keeps DVs") {
     import graft.operators.TxLog
     import spark.implicits._
-    val src = Engine.scratchDir("txlog_mor_clone_src")
+    val src = scratch("txlog_mor_clone_src")
     TxLog.append(spark,
       (1L to 8L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(2), src)
     TxLog.deleteWhereMor(spark, src, $"k" <= 2L)
     // shallow clone of a masked table: the clone reads through the
     // source's deletion vectors
-    val clone = Engine.scratchDir("txlog_mor_clone_dst")
+    val clone = scratch("txlog_mor_clone_dst")
     TxLog.cloneShallow(src, clone)
     assert(TxLog.read(spark, clone).as[(Long, Double)].collect().map(_._1)
       .toSet === (3L to 8L).toSet)
@@ -2847,7 +2860,7 @@ class OperatorSpec extends AnyFunSuite {
     // (deletion-vector parquet included)
     assert(TxLog.vacuum(src) === Nil)
     // a dv line referencing a non-live file is refused, never ignored
-    val bad = Engine.scratchDir("txlog_mor_bad")
+    val bad = scratch("txlog_mor_bad")
     TxLog.append(spark, Seq((1L, 1.0)).toDF("k", "x"), bad)
     TxLog.commit(bad, expected = 0, actions = Seq("dv" -> "ghost.parquet"))
     val e = intercept[IllegalStateException] {
@@ -2864,12 +2877,12 @@ class OperatorSpec extends AnyFunSuite {
     // the mirror (or any idempotent sink) at a CLONE of dst must no-op
     // on batches the original dst already applied — the clone inherits
     // the seen-txn set in its first commit.
-    val dst = Engine.scratchDir("txlog_clone_src_spec")
+    val dst = scratch("txlog_clone_src_spec")
     TxLog.appendIdempotent(
       spark, Seq((1L, 1.0)).toDF("k", "x"), dst, txn = "src-v0")
     TxLog.appendIdempotent(
       spark, Seq((2L, 2.0)).toDF("k", "x"), dst, txn = "src-v1")
-    val clone = Engine.scratchDir("txlog_clone_dst_spec")
+    val clone = scratch("txlog_clone_dst_spec")
     TxLog.cloneShallow(dst, clone)
     assert(TxLog.txns(clone) === Set("src-v0", "src-v1"),
       "clone did not inherit the source's seen-txn set")
@@ -2887,14 +2900,14 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog MOR: streaming source refuses dv commits; CDC stream emits them") {
     import graft.operators.TxLog
     import spark.implicits._
-    val src = Engine.scratchDir("txmor_stream_src")
+    val src = scratch("txmor_stream_src")
     TxLog.append(spark,
       (1L to 6L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(1), src)
     TxLog.deleteWhereMor(spark, src, $"k" <= 2L) // v1: dv commit
     // append-only source: a dv commit deletes rows, so it must fail
     // loudly without ignoreChanges...
     val ex = intercept[Exception] {
-      TxLog.streamChanges(spark, src, Engine.scratchDir("txmor_ck1")) {
+      TxLog.streamChanges(spark, src, scratch("txmor_ck1")) {
         (_, _) => ()
       }.awaitTermination()
     }
@@ -2903,13 +2916,13 @@ class OperatorSpec extends AnyFunSuite {
     // ...and with ignoreChanges the dv commit forwards nothing (deletes
     // are skipped, the documented caveat)
     val perV = scala.collection.mutable.Map[Int, Long]()
-    TxLog.streamChanges(spark, src, Engine.scratchDir("txmor_ck2"),
+    TxLog.streamChanges(spark, src, scratch("txmor_ck2"),
       ignoreChanges = true) { (df, v) => perV(v) = df.count(); () }
       .awaitTermination()
     assert(perV.getOrElse(0, -1L) === 6L && !perV.contains(1))
     // the CDC stream forwards the dv commit as exactly the deleted rows
     val cdcByV = scala.collection.mutable.Map[Int, Set[(Long, String)]]()
-    TxLog.streamCdc(spark, src, Engine.scratchDir("txmor_ck3")) {
+    TxLog.streamCdc(spark, src, scratch("txmor_ck3")) {
       (df, v) =>
         cdcByV(v) = df.select($"k", $"_change").collect()
           .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -2922,7 +2935,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog DV maintenance: compact only files past the masked-fraction threshold") {
     import graft.operators.TxLog
     import spark.implicits._
-    val t = Engine.scratchDir("txdv_maint_spec")
+    val t = scratch("txdv_maint_spec")
     // two appends -> two files with known contents
     TxLog.append(spark,
       (1L to 10L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(1), t)
@@ -2979,7 +2992,7 @@ class OperatorSpec extends AnyFunSuite {
     // into a masked group (merge-read: has y) and a plain group
     // (merge-read: lacks y) whose strict union threw. Both directions
     // must read, with pre-evolution rows surfacing NULL y.
-    val t = Engine.scratchDir("txevo_dv_spec")
+    val t = scratch("txevo_dv_spec")
     TxLog.append(spark,
       Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x").repartition(1), t)  // v0
     TxLog.appendEvolve(spark,
@@ -2990,7 +3003,7 @@ class OperatorSpec extends AnyFunSuite {
       .select($"k", $"y").as[(Long, Option[String])].collect().toMap
     assert(rows === Map(1L -> None, 2L -> None, 4L -> Some("b")))
     // reverse split: mask only a PRE-evolution file
-    val t2 = Engine.scratchDir("txevo_dv_spec2")
+    val t2 = scratch("txevo_dv_spec2")
     TxLog.append(spark,
       Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x").repartition(1), t2)
     TxLog.appendEvolve(spark,
@@ -3012,10 +3025,10 @@ class OperatorSpec extends AnyFunSuite {
     // outside the table dir via ../) — exercise the write paths that
     // ride it ON a clone, where a silent key mismatch would no-op the
     // delete and double-insert the merge.
-    val src = Engine.scratchDir("txclone_write_src")
+    val src = scratch("txclone_write_src")
     TxLog.append(spark,
       (1L to 6L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(2), src)
-    val clone = Engine.scratchDir("txclone_write_dst")
+    val clone = scratch("txclone_write_dst")
     TxLog.cloneShallow(src, clone)
     TxLog.deleteWhere(spark, clone, $"k" === 2L)
     assert(TxLog.read(spark, clone).select($"k").as[Long].collect().toSet
@@ -3029,7 +3042,7 @@ class OperatorSpec extends AnyFunSuite {
     // a table addressed THROUGH A SYMLINK: canonical and reported paths
     // diverge; the dual-key lookup must still resolve every row (the
     // old inner join dropped all rows here — deleteWhere no-opped)
-    val real = Engine.scratchDir("txsym_real")
+    val real = scratch("txsym_real")
     TxLog.append(spark,
       Seq((1L, 1.0), (2L, 2.0)).toDF("k", "x").repartition(1), real)
     val link = new java.io.File(new java.io.File(real).getParentFile,
@@ -3045,7 +3058,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog CDC stream: COW-after-MOR and restore commits net out") {
     import graft.operators.TxLog
     import spark.implicits._
-    val t = Engine.scratchDir("txcdc_restore_spec")
+    val t = scratch("txcdc_restore_spec")
     TxLog.append(spark,
       (1L to 8L).map(k => (k, k * 1.0)).toDF("k", "x").repartition(1), t) // v0
     TxLog.deleteWhereMor(spark, t, $"k" <= 2L)                            // v1
@@ -3053,7 +3066,7 @@ class OperatorSpec extends AnyFunSuite {
     TxLog.restore(t, 1)                        // v3: resurrect k=5 (masks return)
     TxLog.restore(t, 0)                        // v4: resurrect k=1,2 (re-add, mask drift)
     val got = scala.collection.mutable.Map[Int, Set[(String, Long)]]()
-    TxLog.streamCdc(spark, t, Engine.scratchDir("txcdc_restore_ck")) {
+    TxLog.streamCdc(spark, t, scratch("txcdc_restore_ck")) {
       (df, v) =>
         got(v) = df.select($"_change", $"k").as[(String, Long)]
           .collect().toSet
@@ -3075,7 +3088,7 @@ class OperatorSpec extends AnyFunSuite {
     // append-only stream with ignoreChanges: the restore commits must
     // not deliver rows that are dv-masked at their own version
     val perV = scala.collection.mutable.Map[Int, Set[Long]]()
-    TxLog.streamChanges(spark, t, Engine.scratchDir("txcdc_restore_ck2"),
+    TxLog.streamChanges(spark, t, scratch("txcdc_restore_ck2"),
       ignoreChanges = true) { (df, v) =>
       perV(v) = df.select($"k").as[Long].collect().toSet; ()
     }.awaitTermination()
@@ -3093,7 +3106,7 @@ class OperatorSpec extends AnyFunSuite {
     // cached snapshot here meant PATH_NOT_FOUND reads and, worse,
     // appendIdempotent silently dropping fresh batches because the old
     // incarnation's txn markers leaked through (the r6 bench failure).
-    val table = Engine.scratchDir("txlog_regen_spec")
+    val table = scratch("txlog_regen_spec")
     def rmTree(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmTree)
       f.delete(); ()
@@ -3128,9 +3141,9 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog streaming source: incremental resume, exactly-once mirror, COW guard") {
     import graft.operators.TxLog
     import spark.implicits._
-    val src = Engine.scratchDir("txsrc_spec")
-    val dst = Engine.scratchDir("txdst_spec")
-    val ckpt = Engine.scratchDir("txsrc_ckpt")
+    val src = scratch("txsrc_spec")
+    val dst = scratch("txdst_spec")
+    val ckpt = scratch("txsrc_ckpt")
     TxLog.append(spark, Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x").repartition(1), src) // v0
     TxLog.append(spark, Seq((3L, 30.0)).toDF("k", "x").repartition(1), src)             // v1
     val seen = scala.collection.mutable.ArrayBuffer[Int]()
@@ -3152,13 +3165,13 @@ class OperatorSpec extends AnyFunSuite {
     assert(TxLog.read(spark, dst).select(sum($"k")).first().getLong(0) === 10L)
     // re-subscription from SCRATCH re-delivers every commit; the txn
     // markers keyed on source version make each one a no-op
-    TxLog.mirror(spark, src, dst, Engine.scratchDir("txsrc_ckpt2"))
+    TxLog.mirror(spark, src, dst, scratch("txsrc_ckpt2"))
       .awaitTermination()
     assert(TxLog.read(spark, dst).count() === 4)
     // COW commit: the append-only source must fail loudly...
     TxLog.deleteWhere(spark, src, $"k" === 1L) // v3: remove + rewritten add
     val ex = intercept[Exception] {
-      TxLog.streamChanges(spark, src, Engine.scratchDir("txsrc_ckpt3")) {
+      TxLog.streamChanges(spark, src, scratch("txsrc_ckpt3")) {
         (_, _) => ()
       }.awaitTermination()
     }
@@ -3166,7 +3179,7 @@ class OperatorSpec extends AnyFunSuite {
       Option(ex.getCause).exists(_.toString.contains("append-only")))
     // ...and with ignoreChanges forward the rewritten file (survivor row)
     var v3Rows = -1L
-    TxLog.streamChanges(spark, src, Engine.scratchDir("txsrc_ckpt4"),
+    TxLog.streamChanges(spark, src, scratch("txsrc_ckpt4"),
       ignoreChanges = true) { (df, v) =>
       if (v == 3) v3Rows = df.count()
       ()
@@ -3177,13 +3190,13 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog CDC stream: merge surfaces delete(old)+insert(new), carried rows cancel") {
     import graft.operators.TxLog
     import spark.implicits._
-    val t = Engine.scratchDir("txcdc_spec")
+    val t = scratch("txcdc_spec")
     TxLog.append(spark,
       Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x").repartition(1),
       t)                                                           // v0
     TxLog.merge(spark, t, Seq((2L, 99.0), (4L, 40.0)).toDF("k", "x"), "k") // v1
     val got = scala.collection.mutable.Map[Int, Seq[(String, Long, Double)]]()
-    TxLog.streamCdc(spark, t, Engine.scratchDir("txcdc_ck")) { (df, v) =>
+    TxLog.streamCdc(spark, t, scratch("txcdc_ck")) { (df, v) =>
       got(v) = df.select($"_change", $"k", $"x")
         .as[(String, Long, Double)].collect().toSeq.sorted
       ()
@@ -3199,7 +3212,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog vacuum removes orphans, keeps retained history; schema enforced") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txvac_spec")
+    val table = scratch("txvac_spec")
     val a = Seq((1L, 1.0), (2L, 2.0)).toDF("k", "x")
     TxLog.append(spark, a, table)                       // v0
     TxLog.deleteWhere(spark, table, $"k" === 1L)        // v1 (rewrites v0 file)
@@ -3230,7 +3243,7 @@ class OperatorSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val table = Engine.scratchDir("txrace_spec")
+    val table = scratch("txrace_spec")
     val writers = (0 until 6).map { i =>
       Future {
         TxLog.append(spark,
@@ -3249,7 +3262,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog checkpoints fold the log; optimize compacts as one commit") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txckpt_spec")
+    val table = scratch("txckpt_spec")
     // 20 single-row appends cross the checkpoint interval (16)
     (0 until 20).foreach { i =>
       TxLog.append(spark,
@@ -3275,7 +3288,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog merge rewrites only the files containing matched keys") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txmerge_spec")
+    val table = scratch("txmerge_spec")
     val df = spark.range(1, 101).select($"id".as("k"), ($"id" * 1.0).as("x"))
       .repartitionByRange(5, $"k")
     TxLog.append(spark, df, table)
@@ -3297,7 +3310,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog data skipping prunes non-overlapping files from the read") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txskip_spec")
+    val table = scratch("txskip_spec")
     val df = spark.range(1, 101).select($"id".as("k"), ($"id" * 2).as("x"))
       .repartitionByRange(5, $"k")
     TxLog.append(spark, df, table, statsCols = Seq("k"))
@@ -3317,7 +3330,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog deleteWhere keeps rows whose predicate evaluates NULL") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txnull_spec")
+    val table = scratch("txnull_spec")
     // x is nullable: pred (x > 5) is NULL for the null rows — a DELETE
     // must keep them (NULL is "did not match"), never drop them
     val df = Seq[(Long, Option[Double])](
@@ -3334,7 +3347,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog stats survive checkpoints; txns ride checkpoints (suffix-only)") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txckptstats_spec")
+    val table = scratch("txckptstats_spec")
     // 20 stats-carrying idempotent-style commits cross the checkpoint
     // interval (16): the checkpoint must carry BOTH the per-file stats
     // and the txn set, and reads after it must still work (r5's parser
@@ -3373,7 +3386,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog multi-column type-generic stats prune on every bound") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txmulti_spec")
+    val table = scratch("txmulti_spec")
     // 4 files, range-clustered on k; s correlates ("a".."d" by quartile)
     val df = spark.range(0, 100).select(
       $"id".as("k"),
@@ -3395,7 +3408,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(TxLog.readPrunedAll(spark, table, Seq(("d", 0.0, 10.0)))
       .count() === 7) // d = k*1.5 <= 10 -> k <= 6
     // all-null column: stats skipped for that file, no crash, no prune
-    val t2 = Engine.scratchDir("txnullstats_spec")
+    val t2 = scratch("txnullstats_spec")
     TxLog.append(spark,
       Seq[(Long, Option[Long])]((1L, None), (2L, None)).toDF("k", "v"),
       t2, statsCols = Seq("v"))
@@ -3581,7 +3594,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog restore is a metadata-only rollback; history intact; stats carried") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txrestore_spec")
+    val table = scratch("txrestore_spec")
     val a = Seq((1L, 1.0), (2L, 2.0)).toDF("k", "x")
     val b = Seq((90L, 9.0)).toDF("k", "x")
     TxLog.append(spark, a, table, statsCols = Seq("k"))   // v0
@@ -3614,7 +3627,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog bloom skipping: no false negatives, prunes absent keys, rides the log") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txbloom_spec")
+    val table = scratch("txbloom_spec")
     // 4 files, interleaved layout: every file spans the full key range
     val df = spark.range(0, 200)
       .select($"id".as("k"), ($"id" * 2.0).as("x"))
@@ -3640,7 +3653,7 @@ class OperatorSpec extends AnyFunSuite {
     TxLog.append(spark, Seq((500L, 1.0)).toDF("k", "x"), table)
     TxLog.restore(table, 0)
     assert(TxLog.readPoint(spark, table, "k", 17L).count() === 1)
-    val cl = Engine.scratchDir("txbloom_clone_spec")
+    val cl = scratch("txbloom_clone_spec")
     TxLog.cloneShallow(table, cl)
     assert(TxLog.readPoint(spark, cl, "k", 17L).count() === 1)
     assert(TxLog.bloomKeptFiles(cl, "k", 99999L).size < total)
@@ -3649,8 +3662,8 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog shallow clone is zero-copy, isolated both ways, carries stats+checks") {
     import graft.operators.TxLog
     import spark.implicits._
-    val src = Engine.scratchDir("txclsrc_spec")
-    val cl = Engine.scratchDir("txclone_spec")
+    val src = scratch("txclsrc_spec")
+    val cl = scratch("txclone_spec")
     TxLog.append(spark,
       Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x").repartition(2),
       src, statsCols = Seq("k"))
@@ -3687,7 +3700,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog CHECK constraints gate every write path; NULL passes; ride checkpoints") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txcheck_spec")
+    val table = scratch("txcheck_spec")
     TxLog.append(spark,
       Seq((1L, Some("ok")), (2L, None: Option[String])).toDF("k", "s"),
       table)                                                         // v0
@@ -3739,7 +3752,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog vacuum age horizon protects in-flight writers' files") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txvac_spec")
+    val table = scratch("txvac_spec")
     TxLog.append(spark, Seq((1L, 1.0)).toDF("k", "x"), table)
     // simulate an in-flight writer: data files on disk, commit not yet
     // published — vacuum with an age horizon must NOT delete them
@@ -3760,7 +3773,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog schema evolution: additive columns, NULL backfill, COW intact") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txevolve_spec")
+    val table = scratch("txevolve_spec")
     TxLog.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "s"), table)
     // non-additive evolution rejected (retyping s)
     intercept[IllegalArgumentException] {
@@ -3789,7 +3802,7 @@ class OperatorSpec extends AnyFunSuite {
   test("TxLog change feed: updates pair up, carried rows cancel, empty diff") {
     import graft.operators.TxLog
     import spark.implicits._
-    val table = Engine.scratchDir("txcdc_spec")
+    val table = scratch("txcdc_spec")
     val df = spark.range(1, 101).select($"id".as("k"), ($"id" * 1.0).as("x"))
       .repartitionByRange(5, $"k")
     TxLog.append(spark, df, table)                                   // v0
@@ -3902,7 +3915,7 @@ class OperatorSpec extends AnyFunSuite {
     }
     // --- mapped table: the stamped write-epoch makes the raced commit
     // land AND resolve correctly by field id
-    val tM = Engine.scratchDir("txrace_mapped")
+    val tM = scratch("txrace_mapped")
     TxLog.append(spark,
       Seq((100L, 0.5)).toDF("k", "x").repartition(1), tM)     // v0
     TxLog.renameColumn(spark, tM, "k", "id")                  // v1: mapped
@@ -3925,7 +3938,7 @@ class OperatorSpec extends AnyFunSuite {
     // --- unmapped table: a first mapping racing the append cannot be
     // absorbed by re-CAS (the precomputed lines would replay under the
     // wrong epoch) — it surfaces as ConcurrentSchemaChange
-    val tU = Engine.scratchDir("txrace_unmapped")
+    val tU = scratch("txrace_unmapped")
     TxLog.append(spark,
       Seq((200L, 0.5)).toDF("k", "x").repartition(1), tU)     // v0
     val resU = appendRacing("unmapped", tU,
@@ -4182,7 +4195,7 @@ class OperatorSpec extends AnyFunSuite {
     // ---- fold-2 identity pins (VERDICT r16 #3) ----
     val f1 = LlmSim.foldCells(spark, sf5, 1)
     val f2 = LlmSim.foldCells(spark, sf5, 2)
-    val tailN = LlmSim.streamedIvfSegmentAll(spark, sf5)
+    val tailN = LlmSim.segmentAsOf(spark, sf5, 2)
       .filter($"vec_id" >= LlmSim.IvfSegSeal1Bound).count()
     assert(tailN > 0, "empty wave-2 tail — fixture degenerate")
     // row conservation: gen 2 = gen 1 ⊕ the post-fold tail

@@ -108,7 +108,7 @@ class RetractionJoinSpec extends AnyFunSuite {
     import spark.implicits._
     val updates = Gen.listOfN(80, genUpd)
       .apply(Gen.Parameters.default, Seed(42L)).getOrElse(fail("gen failure"))
-    val dir = Engine.scratchDir("rj_restart")
+    val dir = SparkTestSession.scratch("rj_restart")
     val schema = Seq.empty[Upd].toDF().schema
     def net(): Map[(Long, Long, Long), Int] =
       spark.read.parquet(s"$dir/out").as[Out].collect().toSeq

@@ -28,7 +28,7 @@ class StreamingIoSpec extends AnyFunSuite {
 
   test("Engine.session puts file: on NioLocalFileSystem and checkpoints on the FileSystem manager") {
     val conf = spark.sessionState.newHadoopConf()
-    val local = new java.io.File(Engine.scratchDir("ckpt_mgr"))
+    val local = new java.io.File(SparkTestSession.scratch("ckpt_mgr"))
     val dir = new Path(local.toURI)
     try {
       assert(dir.getFileSystem(conf).isInstanceOf[NioLocalFileSystem])
